@@ -32,16 +32,13 @@ except Exception:  # noqa: BLE001
 
 
 try:  # pragma: no cover
-    import os as _os
+    # exercise the kernel once on a tiny synthetic page: numpy ufunc
+    # dispatch caches, compiled regexes, html-parser tables and the glyph
+    # templates are all resident before the fork
+    from horizon_ocr_python_spark.kernel.document import extract_document
 
-    if _os.environ.get("HSP_DAEMON_KERNEL_WARM", "1") != "0":
-        # exercise the kernel once on a tiny synthetic page: numpy ufunc
-        # dispatch caches, compiled regexes, html-parser tables and the
-        # glyph templates are all resident before the fork
-        from horizon_ocr_python_spark.kernel.document import extract_document
-
-        extract_document("warm://d.html",
-                         b"<html><title>w</title><p>warm page</p></html>")
+    extract_document("warm://d.html",
+                     b"<html><title>w</title><p>warm page</p></html>")
 except Exception:  # noqa: BLE001
     pass
 

@@ -4,8 +4,7 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd  # module-level: the warmup pandas_udf's type hints
-#                      ('pd.Series') resolve against THIS module's globals
+import pandas as pd
 from pyspark.sql import SparkSession
 
 
@@ -24,11 +23,12 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
       per-worker model cache) is paid once per executor, like the
       reference's lock-guarded lazy model init (orchestrator.py:115-161)
     - shuffle partitions default to 2x cores, scaled with master
-    - the Python runner is warmed at session build (one no-op mapInPandas
-      over `cores` synthetic rows): the first Arrow-Python job in a fresh
-      session otherwise pays ~5 s of one-time JVM/worker bring-up (measured
-      local[32]) that is session infrastructure, not query work. Disable
-      with HSP_WARM_PYTHON=0.
+    - generic bring-up is paid at session build (_warm_python_runner): a
+      no-op mapInPandas spawns the worker daemon and loads Arrow, and a
+      synthetic parquet round trip loads the reader/writer. Disable with
+      HSP_WARM_PYTHON=0.
+    - spark.local.dir is set only when SPARK_LOCAL_DIRS is not: Spark
+      ignores the config (with a warning) when the variable is set.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -45,7 +45,7 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
     worker_pythonpath = os.pathsep.join(
         p for p in [repo_root, os.environ.get("PYTHONPATH", "")] if p)
 
-    spark = (
+    builder = (
         SparkSession.builder
         .master(master)
         .appName(app_name)
@@ -73,25 +73,24 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.local.dir", _local_dir())
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    local_dir = _local_dir()
+    if local_dir is not None:
+        builder = builder.config("spark.local.dir", local_dir)
+    spark = builder.getOrCreate()
     if os.environ.get("HSP_WARM_PYTHON", "1") != "0":
         _warm_python_runner(spark)
     return spark
 
 
 def _warm_python_runner(spark: SparkSession) -> None:
-    """Two no-op jobs so a fresh session's first real queries do not absorb
-    one-time infrastructure bring-up (measured at local[32]: ~5 s for the
-    first Arrow-Python job — worker daemon spawn, Arrow/Netty class
-    loading — and ~2-3 s of first-use JIT for the scalar-pandas-UDF /
-    window / broadcast-join / aggregation operator paths). Touches no input
-    data: both jobs run over `cores` synthetic longs, so nothing any timed
-    query computes is precomputed or cached."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+    """Generic session bring-up, so a fresh session's first real job does
+    not absorb it: a no-op mapInPandas (worker daemon spawn, Arrow/Netty
+    class loading) and a parquet write/read round trip (vectorized reader,
+    footer parsing, commit protocol). Touches no input data and mirrors no
+    query's expressions: only synthetic longs, nothing any timed query
+    computes is precomputed or cached."""
 
     def _noop(batches):
         for pdf in batches:
@@ -119,55 +118,18 @@ def _warm_python_runner(spark: SparkSession) -> None:
              .write.format("noop").mode("overwrite").save())
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-
-        @F.pandas_udf("long")
-        def _ident(s: pd.Series) -> pd.Series:
-            return s
-
-        df = (spark.range(0, cores, 1, min(cores, 8)).toDF("i")
-              .select("i", _ident(F.col("i")).alias("j")))
-        w = Window.partitionBy(F.col("i") % 4).orderBy("j")
-        # built from local rows on purpose: warms the createDataFrame
-        # driver-conversion path (the CC fast path's label table) too
-        small = spark.createDataFrame([(i,) for i in range(4)], "k long")
-        (df.withColumn("r", F.row_number().over(w))
-         .join(F.broadcast(small), df.i % 4 == small.k)
-         .groupBy("k").agg(F.count("*").alias("n"), F.min("r").alias("m"))
-         .write.format("noop").mode("overwrite").save())
-
-        # expression-interpreter warmup: the md5 / higher-order-function /
-        # conv / explode / bitwise evaluator paths are interpreted (HOFs
-        # are CodegenFallback) and their first heavy use pays multi-second
-        # JVM class-load + C2 JIT — measured 8.4 s -> 3.9 s on the first
-        # minhash-family query at local[32]. Synthetic longs only.
-        n = 100_000
-        rng = spark.range(0, n, 1, cores).toDF("i")
-        s = F.md5(F.col("i").cast("string"))
-        ws = F.array_distinct(F.filter(F.split(s, "a"), lambda x: x != ""))
-        sig = F.array_min(F.transform(
-            ws, lambda x: F.md5(F.concat_ws(":", F.lit("0"), x))))
-        base = rng.select("i", sig.alias("sig"))
-        ex = (rng.select("i", F.explode(ws).alias("w"))
-              .select("i", F.conv(F.substring(F.md5(F.col("w")), 1, 8),
-                                  16, 10).cast("long").alias("h")))
-        agg = ex.groupBy("i").agg(
-            F.count("*").alias("n"),
-            F.sum(F.shiftright(F.col("h"), 3).bitwiseAND(1)).alias("s3"))
-        (base.join(agg, "i")
-         .select("i", "sig", (F.col("s3") * 2 > F.col("n")).alias("b"),
-                 F.size(F.array_intersect(
-                     F.array(F.lit("a"), F.lit("b")),
-                     F.array(F.lit("b")))).alias("ai"),
-                 F.xxhash64(F.col("sig")).alias("x"))
-         .write.format("noop").mode("overwrite").save())
     finally:
         spark.sparkContext.setJobDescription(None)
 
 
-def _local_dir() -> str:
-    """Shuffle/spill directory. On this single box the one data disk is a
-    shared bottleneck that does not scale with task threads (a real cluster
-    adds disks with executors), so prefer tmpfs when present."""
+def _local_dir() -> str | None:
+    """Shuffle/spill directory, or None when SPARK_LOCAL_DIRS is set (Spark
+    then uses that and ignores spark.local.dir). On a single host the one
+    data disk is a shared bottleneck that does not scale with task threads
+    (a real cluster adds disks with executors), so prefer tmpfs when
+    present."""
+    if os.environ.get("SPARK_LOCAL_DIRS"):
+        return None
     shm = "/dev/shm/spark-local"
     if os.path.isdir("/dev/shm"):
         os.makedirs(shm, exist_ok=True)

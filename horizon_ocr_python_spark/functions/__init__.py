@@ -1,2 +1,2 @@
-"""Column-level expression builders: reusable validator/text/vector
-expressions built only on pyspark.sql.functions (JVM-side, codegen-able)."""
+"""Column-level expression builders: reusable validator/text expressions
+built only on pyspark.sql.functions (JVM-side, codegen-able)."""

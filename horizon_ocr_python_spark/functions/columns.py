@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..kernel.validators import CURRENCY_SYMBOL_MAP, VALID_CURRENCIES
+
 # --- V1 amount parsing (validators.py:96-130) as expressions -----------------
 
 
@@ -39,12 +41,6 @@ def parse_amount_expr(col: Column) -> Column:
     return normalized.try_cast("double")
 
 
-def amount_valid_expr(col: Column) -> Column:
-    """AmountValidator.validate: parseable and non-negative."""
-    parsed = parse_amount_expr(col)
-    return parsed.isNotNull() & (parsed >= 0)
-
-
 # --- V3 date normalization (validators.py:191-212) ----------------------------
 
 _SPARK_DATE_FORMATS = [
@@ -65,24 +61,17 @@ def normalize_date_expr(col: Column) -> Column:
 
 # --- V4 currency (validators.py:294-344) ---------------------------------------
 
-_SYMBOLS = {"$": "USD", "€": "EUR", "£": "GBP", "¥": "JPY",
-            "₹": "INR", "₽": "RUB", "₩": "KRW"}
-_ISO = ["USD", "EUR", "GBP", "JPY", "CAD", "AUD", "CHF", "CNY",
-        "INR", "MXN", "BRL", "KRW", "SGD", "HKD", "NOK", "SEK",
-        "DKK", "NZD", "ZAR", "RUB", "TRY", "PLN", "THB", "MYR",
-        "IDR", "PHP", "CZK", "ILS", "CLP", "PKR", "AED", "SAR"]
-
 
 def normalize_currency_expr(col: Column) -> Column:
     code = F.upper(F.trim(col))
     out = code
-    for sym, iso in _SYMBOLS.items():
+    for sym, iso in CURRENCY_SYMBOL_MAP.items():
         out = F.when(code == sym, iso).otherwise(out)
     return out
 
 
 def currency_valid_expr(col: Column) -> Column:
-    return normalize_currency_expr(col).isin(*_ISO)
+    return normalize_currency_expr(col).isin(*sorted(VALID_CURRENCIES))
 
 
 # --- K7 shape checks (fuse.py:484-507) ------------------------------------------
@@ -91,28 +80,3 @@ def currency_valid_expr(col: Column) -> Column:
 def looks_like_amount_expr(col: Column) -> Column:
     cleaned = F.regexp_replace(col, r"[$€£¥,\s]", "")
     return cleaned.rlike(r"\d") & cleaned.rlike(r"^[+-]?\d+\.?\d*$")
-
-
-def looks_like_date_expr(col: Column) -> Column:
-    return col.rlike(r"\d") & (
-        col.rlike(r"\d{4}[-/]\d{1,2}[-/]\d{1,2}")
-        | col.rlike(r"\d{1,2}[-/]\d{1,2}[-/]\d{2,4}")
-        | col.rlike(r"\w+\s+\d{1,2},?\s+\d{4}")
-        | col.rlike(r"\d{1,2}\s+\w+\s+\d{4}"))
-
-
-# --- vectors ----------------------------------------------------------------------
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (l2_norm_expr(a) * l2_norm_expr(b))

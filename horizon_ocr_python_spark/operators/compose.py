@@ -47,8 +47,9 @@ def bucket_pairs_single_pass(keys: DataFrame, id_col: str, max_bucket: int,
     bucket, then a per-partition pandas pass emits exhaustive pairs
     (ia < ib) for buckets <= max_bucket and sorted-neighborhood links
     (each member to its next `width` successors) for over-cap ones.
-    `width=None` DROPS over-cap buckets instead (the capped_band_keys_from
-    exclusion semantics used by minhash_lsh_pairs / ngram_jaccard_pairs).
+    `width=None` DROPS over-cap buckets instead (the exclusion that
+    minhash_lsh_pairs / ngram_jaccard_pairs and their oracles' `capped`
+    CTE use).
 
     r6 optimization (guide §2.4): this replaces a census groupBy +
     anti-join + self-join + semi-join + window + explode-join chain — six

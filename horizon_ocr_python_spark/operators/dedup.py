@@ -4,11 +4,12 @@ All hashing is md5-based (kernel.dedup rationale) so Spark and the DuckDB
 oracle produce identical values. The distributed shapes:
 
 - exact:     groupBy(content-hash) — one map-side-combined shuffle
-- minhash:   explode(words) x seeds -> min per (doc, seed); at 10^12 docs the
-             explode is narrow and the min-agg combines map-side, so shuffle
-             volume is n_docs * n_seeds tiny rows, not the corpus
-- LSH pairs: band-key self-join — the classic bucket join; buckets larger
-             than MAX_BAND_BUCKET are excluded from pair generation (the
+- minhash:   narrow per-row projection, sig_i = array_min(transform(words,
+             w -> md5(i:w))) — no explode and no aggregation; the only
+             shuffle spreads (or range-partitions) the one-row-per-doc input
+- LSH pairs: band keys -> compose.bucket_pairs_single_pass — one shuffle by
+             band_key, exhaustive pairs per bucket; buckets larger than
+             MAX_BAND_BUCKET are dropped from pair generation (the
              degenerate-band guard: a bucket that big is either hash
              degeneracy or a true dup CLUSTER, and clusters are handled by
              the O(members) anchor pattern in compose.neardup_verdict, not
@@ -83,35 +84,17 @@ ORDER BY canonical_doc_id
 # --- MinHash signatures --------------------------------------------------------
 
 
-def minhash_long_from(docs: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, seed, minhash) long-form from a (doc_id, text) DataFrame:
-    explode words, cross the tiny seed range (broadcast), min-agg. Map-side
-    combine keeps the shuffle at n_docs x n_seeds rows regardless of corpus
-    size."""
-    spark = docs.sparkSession
-    words = _rebalanced(docs).select(
-        "doc_id", F.explode(F.array_distinct(_words(F.col("text")))).alias("w"))
-    seeds = spark.range(num_hashes).toDF("seed")
-    return (words.crossJoin(F.broadcast(seeds))
-            .groupBy("doc_id", "seed")
-            .agg(F.min(F.md5(F.concat_ws(":", F.col("seed"), F.col("w"))))
-                 .alias("mh")))
+def _signatures(docs: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc_id, text) -> (doc_id, sig_0..sig_{n-1}): sig_i = min over the
+    doc's distinct words w of md5(i:w), computed per row as
+    array_min(transform(...)) — no explode, no seed crossJoin, no shuffled
+    aggregation. It equals the oracle's explode + min-agg value, and the
+    size(ws) > 0 filter matches its row set (a doc with no words explodes
+    to no rows)."""
+    with_ws = (docs.select("doc_id",
+                           F.array_distinct(_words(F.col("text"))).alias("ws"))
+               .filter(F.size(F.col("ws")) > 0))
 
-
-def minhash_signatures_from(docs: DataFrame,
-                            num_hashes: int = NUM_HASHES) -> DataFrame:
-    """Wide signature: one row per doc, sig_0..sig_{n-1}.
-
-    NARROW form (r6): sig_i = array_min(transform(words, w -> md5(i:w)))
-    computed per row — no explode, no seed crossJoin, no shuffled
-    aggregation at all (the r5 shape shuffled words x seeds twice). min over
-    the same md5(seed:w) set is the identical value; docs with no words
-    produced zero exploded rows before, so the size(ws) > 0 filter keeps
-    the output row set identical. The one repartition (_rebalanced) remains
-    solely to spread the per-row hash work off a single-split scan."""
-    ws = F.array_distinct(_words(F.col("text")))
-    with_ws = _rebalanced(docs).select("doc_id", ws.alias("ws")) \
-        .filter(F.size(F.col("ws")) > 0)
     def sig(i: int):
         # bind the seed via closure: a 2-arg lambda would make pyspark pass
         # the ARRAY INDEX as the second argument and clobber the seed
@@ -123,6 +106,14 @@ def minhash_signatures_from(docs: DataFrame,
                           *[sig(i).alias(f"sig_{i}") for i in range(num_hashes)])
 
 
+def minhash_signatures_from(docs: DataFrame,
+                            num_hashes: int = NUM_HASHES) -> DataFrame:
+    """Wide signature: one row per doc, sig_0..sig_{n-1}. The one
+    repartition (_rebalanced) only spreads the per-row hash work off a
+    single-split scan."""
+    return _signatures(_rebalanced(docs), num_hashes)
+
+
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted signature table. A trailing .orderBy over the computed sigs
     would range-SAMPLE the expensive projection and then compute it again
@@ -131,19 +122,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the signatures computed exactly once and ONE exchange total."""
     docs = table(spark, sf_dir, "documents")
     n = docs.sparkSession.sparkContext.defaultParallelism
-    ws = F.array_distinct(_words(F.col("text")))
-    with_ws = (docs.repartitionByRange(n, "doc_id")
-               .select("doc_id", ws.alias("ws"))
-               .filter(F.size(F.col("ws")) > 0)
-               .sortWithinPartitions("doc_id"))
-
-    def sig(i: int):
-        seed = F.lit(str(i))
-        return F.array_min(F.transform(
-            F.col("ws"), lambda w: F.md5(F.concat_ws(":", seed, w))))
-
-    return with_ws.select("doc_id",
-                          *[sig(i).alias(f"sig_{i}") for i in range(NUM_HASHES)])
+    return (_signatures(docs.repartitionByRange(n, "doc_id"), NUM_HASHES)
+            .sortWithinPartitions("doc_id"))
 
 
 MINHASH_SIGNATURES_SQL = f"""
@@ -183,37 +163,17 @@ def band_keys_from(sig: DataFrame, num_hashes: int = NUM_HASHES,
                       F.explode(F.array(*band_cols)).alias("band_key"))
 
 
-def capped_band_keys_from(sig: DataFrame, num_hashes: int = NUM_HASHES,
-                          bands: int = BANDS,
-                          max_bucket: int = MAX_BAND_BUCKET) -> DataFrame:
-    """Band keys with the degenerate-bucket guard: buckets holding more
-    than `max_bucket` docs are dropped BEFORE the self-join, bounding any
-    band's pair contribution at max_bucket^2/2. The census the join needs
-    is only the CAP-EXCEEDING key set (over-cap buckets are dup clusters /
-    degenerate bands — few by construction), removed with an anti-join; no
-    broadcast hint, so AQE broadcasts it when it is actually small instead
-    of shipping an under-cap set that is census-sized at profile scale."""
-    # materialize the keys once: they feed both the census and the join
-    # (without this the whole minhash pipeline runs twice)
-    keys = band_keys_from(sig, num_hashes, bands).localCheckpoint()
-    counts = keys.groupBy("band_key").agg(F.count("*").alias("n"))
-    over = counts.filter(F.col("n") > max_bucket).select("band_key")
-    return keys.join(over, "band_key", "left_anti")
-
-
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs: docs sharing any band key. Self-join on the
-    band key — the only shuffle is by band_key. Buckets above
-    MAX_BAND_BUCKET are excluded (see module docstring): they are dup
+    """LSH candidate pairs: docs sharing any band key. The only pair
+    shuffle is by band_key (compose.bucket_pairs_single_pass). Buckets
+    above MAX_BAND_BUCKET are excluded (see module docstring): they are dup
     clusters or degenerate bands, and their quadratic pair sets are exactly
     what kills this operator at 100 TB."""
     from .compose import bucket_pairs_single_pass
 
     sig = minhash_signatures_from(table(spark, sf_dir, "documents"))
     keys = band_keys_from(sig)
-    # r6: one-shuffle per-bucket pass (width=None = drop over-cap buckets,
-    # exactly the capped_band_keys_from exclusion) instead of census
-    # anti-join + band-key self-join — see compose.bucket_pairs_single_pass
+    # width=None drops over-cap buckets: the oracle's `capped` CTE
     return (bucket_pairs_single_pass(keys, "doc_id", MAX_BAND_BUCKET, None)
             .select(F.col("ia").alias("doc_a"), F.col("ib").alias("doc_b"))
             .orderBy("doc_a", "doc_b"))

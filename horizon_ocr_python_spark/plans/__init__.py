@@ -13,12 +13,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
 
 
-def formatted_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().explainString(  # noqa: SLF001
-        df.sparkSession._jvm.org.apache.spark.sql.execution  # noqa: SLF001
-        .ExplainMode.fromString("formatted"))
-
-
 def read_schema_of(df: DataFrame) -> str:
     """The columns the parquet scan actually reads (column pruning check)."""
     m = re.search(r"ReadSchema: ([^\n]+)", physical_plan(df))

@@ -4,11 +4,11 @@ the band-blocked Jaccard finds planted near-dups."""
 
 from pyspark.sql import functions as F
 
+from horizon_ocr_python_spark.operators.compose import bucket_pairs_single_pass
 from horizon_ocr_python_spark.operators.dedup import (
     MAX_BAND_BUCKET,
     SCALE_PROFILE,
     band_keys_from,
-    capped_band_keys_from,
     jaccard_pairs_from,
     minhash_signatures_from,
 )
@@ -52,12 +52,14 @@ class TestBucketCap:
                     for i in range(n - 100)])
         docs = _docs_df(spark, texts)
         sig = minhash_signatures_from(docs)
-        capped = capped_band_keys_from(sig)
-        sizes = (capped.groupBy("band_key").agg(F.count("*").alias("n"))
-                 .agg(F.max("n")).collect()[0][0])
-        assert sizes is None or sizes <= MAX_BAND_BUCKET
+        keys = band_keys_from(sig)
+        pairs = bucket_pairs_single_pass(keys, "doc_id", MAX_BAND_BUCKET,
+                                         None).collect()
+        # the boilerplate bucket is over the cap, so none of its
+        # 100*99/2 pairs is generated
+        assert not [r for r in pairs if r.ia < 100 and r.ib < 100]
         # and the giant bucket existed pre-cap
-        raw_max = (band_keys_from(sig).groupBy("band_key")
+        raw_max = (keys.groupBy("band_key")
                    .agg(F.count("*").alias("n")).agg(F.max("n")).collect()[0][0])
         assert raw_max >= 100
 

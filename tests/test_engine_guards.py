@@ -1,9 +1,11 @@
-"""Engine guardrails: oversized-payload cap and the JSON output column."""
+"""Engine guardrails: oversized-payload cap, the JSON output column and the
+session's local-dir choice."""
 
 import json
 
 from pyspark.sql import functions as F
 
+from horizon_ocr_python_spark.engine import session
 from horizon_ocr_python_spark.engine.extract import extract_stage, with_json_output
 from horizon_ocr_python_spark.engine.partitioning import with_length_cap
 from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA
@@ -40,3 +42,18 @@ class TestJsonOutput:
         assert {f["name"] for f in parsed["fields"]} == \
             {f["name"] for f in row.fields}
         assert parsed["validation"]["passed"] == row.validation.passed
+
+
+class TestLocalDir:
+    def test_spark_local_dirs_set_creates_nothing(self, monkeypatch):
+        """With SPARK_LOCAL_DIRS set Spark ignores spark.local.dir, so the
+        engine neither creates its tmpfs directory nor sets the config."""
+        made = []
+        monkeypatch.setattr(session.os, "makedirs",
+                            lambda *a, **k: made.append(a))
+        monkeypatch.setenv("SPARK_LOCAL_DIRS", "/elsewhere")
+        assert session._local_dir() is None  # noqa: SLF001
+        assert made == []
+
+        monkeypatch.delenv("SPARK_LOCAL_DIRS")
+        assert session._local_dir() is not None  # noqa: SLF001

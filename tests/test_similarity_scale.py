@@ -119,17 +119,19 @@ class TestCensusBroadcast:
         assert "RepartitionByExpression [band_key" in plan
         assert "MapInPandas" in plan
 
-    def test_minhash_capped_keys_no_broadcast_hint(self, spark):
+    def test_minhash_capped_keys_no_broadcast_hint(self, spark, tmp_path):
+        """The capped minhash candidate stage forces no broadcast and has
+        no join: over-cap buckets are dropped inside the one band_key pass."""
         from horizon_ocr_python_spark import plans
         from horizon_ocr_python_spark.operators import dedup
 
-        docs = spark.createDataFrame(
-            [(f"d{i}", f"text body {i} here") for i in range(8)],
-            "doc_id: string, text: string")
-        keys = dedup.capped_band_keys_from(
-            dedup.minhash_signatures_from(docs))
-        assert not plans.has_broadcast_hint(keys)
-        assert "LeftAnti" in plans.optimized_plan(keys)
+        (spark.createDataFrame(
+            [(i, f"text body {i} here") for i in range(8)],
+            "doc_id: long, text: string")
+         .write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet"))
+        cand = dedup.minhash_lsh_pairs(spark, str(tmp_path))
+        assert not plans.has_broadcast_hint(cand)
+        assert "Join" not in plans.optimized_plan(cand)
 
     def test_capped_semantics_unchanged(self, spark):
         """Partitioning keys into under/over-cap via anti/semi joins must
