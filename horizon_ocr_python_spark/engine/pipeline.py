@@ -10,7 +10,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from . import checkpoint as ckpt
 from .extract import extract_stage, extracted_metrics
@@ -29,15 +30,14 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
                    rows_hint: Optional[int] = None,
                    output_root: Optional[str] = None,
                    resume: bool = True,
-                   config: Optional[dict] = None,
-                   count_skipped: bool = False) -> RunResult:
+                   config: Optional[dict] = None) -> RunResult:
     """Run the pipeline. With `output_root`, commits a snapshot and appends
     per-partition metrics alongside (resumable); without, returns the lazy
     documents DataFrame (caller materializes).
 
-    `count_skipped=True` additionally counts rows dropped by the resume
-    filter (one extra metadata-cheap aggregate over the input keys) —
-    off by default so a resume run never pays an extra input scan.
+    With `output_root`, `n_skipped_committed` is the number of input rows
+    the resume filter dropped: an Observation counts the input rows on the
+    commit's own pass, minus the rows the snapshot committed. No extra scan.
     """
     spark = pages.sparkSession
 
@@ -50,16 +50,10 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     max_bytes = (((config or {}).get("extraction") or {})
                  .get("max_payload_bytes", 8 * 1024 * 1024))
     capped = with_length_cap(pages, max_bytes=max_bytes)
+    n_input = Observation()
+    if output_root:
+        capped = capped.observe(n_input, F.count(F.lit(1)).alias("n"))
     todo = ckpt.filter_uncommitted(capped, committed)
-
-    n_skipped = None
-    if count_skipped and committed is not None:
-        from pyspark.sql import functions as F
-
-        keyed = capped.withColumn("content_key", F.sha2(F.col("html"), 256))
-        n_skipped = (keyed.join(
-            committed.select("url", "content_key").distinct(),
-            on=["url", "content_key"], how="left_semi").count())
 
     n = num_partitions or partitions_for(spark, rows_hint)
     distributed = salted_repartition(todo, n)
@@ -67,10 +61,11 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
 
     if not output_root:
         return RunResult(documents=documents,
-                         metrics=extracted_metrics(documents), snapshot_id=None,
-                         n_skipped_committed=n_skipped)
+                         metrics=extracted_metrics(documents), snapshot_id=None)
 
     snap_id = ckpt.commit_snapshot(documents, output_root)
+    n_rows = next(s["n_rows"] for s in ckpt.committed_snapshots(output_root)
+                  if s["snapshot_id"] == snap_id)
     committed_docs = spark.read.parquet(
         ckpt._snap_dir(output_root, snap_id))  # noqa: SLF001 — same package
     metrics = extracted_metrics(committed_docs, snapshot_id=snap_id)
@@ -78,7 +73,7 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     return RunResult(documents=committed_docs,
                      metrics=spark.read.parquet(f"{output_root}/metrics"),
                      snapshot_id=snap_id,
-                     n_skipped_committed=n_skipped)
+                     n_skipped_committed=int(n_input.get["n"]) - n_rows)
 
 
 def pages_dataframe(spark: SparkSession, n_rows: int, seed: int = 42,

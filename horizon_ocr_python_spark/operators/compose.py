@@ -4,8 +4,9 @@ primitive operators, each still DuckDB-oracle-exact.
 - embedding_cosine_pairs: embedding-space near-dup pairs (the
   "embedding-cosine near-dup" dedup family member), routed through the
   banded random-hyperplane LSH buckets (similarity.banded_keys): candidate
-  pairs come from an EQUI self-join on band_key — never a cartesian — and
-  exact cosine runs only within candidates. The oracle mirrors the banded
+  pairs come from each band_key bucket's sorted id array
+  (bucket_pairs_single_pass) — no join, never a cartesian — and exact
+  cosine runs only within candidates. The oracle mirrors the banded
   semantics, so the hash check is recall-independent; measured recall vs
   brute force at sf0.01 is 9/14 at the demo threshold 0.45 (the corpus is
   isotropic random, LSH's worst case; at the production near-dup threshold
@@ -31,7 +32,7 @@ from .dedup import MAX_BAND_BUCKET, SIG_BANDS_CTE
 from .similarity import BANDED_CTE, _dot, _dvec, _sqnorm, banded_keys
 
 COSINE_PAIR_THRESHOLD = 0.45
-# Bucket cap + sorted-neighborhood width for the embedding-LSH band join —
+# Bucket cap + sorted-neighborhood width for the embedding-LSH band pairs —
 # the same degenerate-bucket guard the minhash path has (MAX_BAND_BUCKET):
 # without it a fixed keyspace makes bucket size ~N/keyspace and candidate
 # pairs ~N^2 (the round-2 verdict's last scale-killer). Buckets over the
@@ -42,61 +43,38 @@ SIM_NEIGHBOR_WIDTH = 4
 
 def bucket_pairs_single_pass(keys: DataFrame, id_col: str, max_bucket: int,
                              width: int | None) -> DataFrame:
-    """(band_key, id) rows -> DISTINCT candidate (ia, ib) pairs in ONE
-    shuffle + one distinct: repartition by band_key co-locates every
-    bucket, then a per-partition pandas pass emits exhaustive pairs
-    (ia < ib) for buckets <= max_bucket and sorted-neighborhood links
-    (each member to its next `width` successors) for over-cap ones.
-    `width=None` DROPS over-cap buckets instead (the exclusion that
-    minhash_lsh_pairs / ngram_jaccard_pairs and their oracles' `capped`
-    CTE use).
+    """(band_key, id) rows -> DISTINCT candidate (ia, ib) pairs, all in
+    Spark expressions: repartition by band_key, one sorted id array per
+    bucket, then each member pairs with its successors in that array —
+    all of them (exhaustive ia < ib) for buckets <= max_bucket, the next
+    `width` for over-cap ones (sorted-neighborhood links). `width=None`
+    DROPS over-cap buckets instead (the exclusion that minhash_lsh_pairs /
+    ngram_jaccard_pairs and their oracles' `capped` CTE use).
 
-    r6 optimization (guide §2.4): this replaces a census groupBy +
-    anti-join + self-join + semi-join + window + explode-join chain — six
-    shuffling stages whose fixed latencies dominated the operator at bench
-    scale — with semantics pinned identical by
-    tests/test_similarity_scale.py::test_capped_semantics_unchanged.
-    Scale shape is unchanged: the window form also co-located each bucket
-    in one task, per-bucket pair volume stays LINEAR in membership, and no
-    join (hence no cartesian) exists at all in the candidate stage."""
-    import pandas as pd
-
-    spark = keys.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    id_dtype = dict(keys.dtypes)[id_col]
-
-    def gen(batches):
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else \
-            pd.concat(parts, ignore_index=True)
-        out_a: list = []
-        out_b: list = []
-        for _, g in pdf.groupby("band_key", sort=False):
-            ids = g[id_col].tolist()
-            m = len(ids)
-            if m < 2:
-                continue
-            ids.sort()
-            if m <= max_bucket:
-                for i in range(m - 1):
-                    a = ids[i]
-                    for b in ids[i + 1:]:
-                        out_a.append(a)
-                        out_b.append(b)
-            elif width is not None:
-                for i in range(m - 1):
-                    a = ids[i]
-                    for b in ids[i + 1:i + 1 + width]:
-                        out_a.append(a)
-                        out_b.append(b)
-        if out_a:
-            yield pd.DataFrame({"ia": out_a, "ib": out_b})
-
-    return (keys.repartition(n, "band_key")
-            .mapInPandas(gen, f"ia {id_dtype}, ib {id_dtype}")
-            .distinct())
+    No join and no Python node in the candidate stage. The collect_list
+    aggregate keeps at most 128 buckets in its hash map, then falls back
+    to spillable sort-based aggregation, so task memory does not grow
+    with the partition. Per-bucket pair volume stays LINEAR in membership
+    for over-cap buckets. The explicit repartition keeps the pair stage on
+    `defaultParallelism` tasks; without it AQE coalesces the small key
+    shuffle to a single partition. Semantics pinned by
+    tests/test_similarity_scale.py::test_capped_semantics_unchanged."""
+    n = keys.sparkSession.sparkContext.defaultParallelism
+    ids = F.col("ids")
+    m = F.size(ids)
+    buckets = (keys.repartition(n, "band_key").groupBy("band_key")
+               .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+               .filter(m >= 2))
+    if width is None:
+        buckets, span = buckets.filter(m <= max_bucket), m
+    else:
+        span = F.when(m <= max_bucket, m).otherwise(F.lit(width))
+    # slice(ids, i + 2, span): the 1-based successors of the 0-based i-th
+    # member; a slice running past the end is truncated (empty for the last)
+    succ = F.transform(ids, lambda x, i: F.struct(
+        x.alias("ia"), F.slice(ids, i + 2, span).alias("bs")))
+    return (buckets.select(F.inline(succ))
+            .select("ia", F.explode("bs").alias("ib")).distinct())
 
 
 def sim_candidate_pairs(keys: DataFrame, max_bucket: int = MAX_SIM_BUCKET,
@@ -110,11 +88,12 @@ def sim_candidate_pairs(keys: DataFrame, max_bucket: int = MAX_SIM_BUCKET,
 
 def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup vector pairs with cosine >= 0.45 among banded-LSH candidate
-    pairs. Plan shape: numpy-matmul banding (one pandas-UDF pass) -> bucket
-    census -> capped equi self-join on band_key (sorted-neighborhood inside
-    giant buckets) -> distinct (ia, ib) -> two equi joins to fetch vectors
-    -> exact cosine. No non-equi join, no BroadcastNestedLoopJoin (pinned
-    by tests/test_plan_shape.py); per-bucket pair volume bounded (pinned by
+    pairs. Plan shape: numpy-matmul banding (one pandas-UDF pass) -> one
+    sorted id array per band_key bucket (bucket_pairs_single_pass;
+    sorted-neighborhood inside giant buckets) -> distinct (ia, ib) -> two
+    equi joins to fetch vectors -> exact cosine. No non-equi join, no
+    BroadcastNestedLoopJoin (pinned by tests/test_plan_shape.py);
+    per-bucket pair volume bounded (pinned by
     tests/test_similarity_scale.py)."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("v"))
@@ -290,29 +269,17 @@ def neardup_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     (91% recall) from 5.4k candidate edges vs 125k brute pairs; the DuckDB
     oracle mirrors the exact semantics (recursive-CTE closure), so the
     hash gate is recall-independent."""
-    from .dedup import band_keys_from, minhash_signatures_from
+    from .dedup import band_keys_from, jaccard_verified, minhash_signatures_from
 
     docs = table(spark, sf_dir, "documents")
-    # narrow signature derivation (r6) feeds the single-pass bucket pair
-    # generator; doc_id is a STRING key, and the python-side per-bucket
-    # sort is lexicographic exactly like the SQL `doc_id <` the previous
-    # join form used
+    # array_sort orders each bucket by doc_id, the order of the oracle's
+    # `doc_id <` and `ORDER BY doc_id`
     keys = band_keys_from(minhash_signatures_from(docs))
     cand = bucket_pairs_single_pass(keys, "doc_id", MAX_BAND_BUCKET,
                                     NEIGHBOR_WIDTH) \
-        .select(F.col("ia").alias("a"), F.col("ib").alias("b"))
-
-    ws = docs.select(
-        "doc_id",
-        F.array_distinct(F.filter(F.split(F.lower(F.col("text")), " "),
-                                  lambda x: x != "")).alias("ws"))
-    wa = ws.select(F.col("doc_id").alias("a"), F.col("ws").alias("ws_a"))
-    wb = ws.select(F.col("doc_id").alias("b"), F.col("ws").alias("ws_b"))
-    jac = (F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b"))).cast("double")
-           / F.size(F.array_union(F.col("ws_a"), F.col("ws_b"))))
-    verified = (cand.join(wa, "a").join(wb, "b")
-                .select("a", "b", F.round(jac, 6).alias("j"))
-                .filter(F.col("j") >= 0.9).select("a", "b"))
+        .select(F.col("ia").alias("doc_a"), F.col("ib").alias("doc_b"))
+    verified = jaccard_verified(cand, docs).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
 
     labels = _cc_labels(verified, docs.select("doc_id"))
     return (labels.select("doc_id",

@@ -62,7 +62,7 @@ class TestCompaction:
     def test_resume_filter_uses_compacted_keys(self, spark, pages, history):
         ckpt.compact(spark, history)
         res = run_extraction(pages.limit(50), output_root=history,
-                             num_partitions=2, count_skipped=True)
+                             num_partitions=2)
         # everything was already committed: empty snapshot, all skipped
         assert res.n_skipped_committed == 50
         assert res.documents.count() == 0
@@ -80,17 +80,20 @@ class TestCompaction:
 
 
 class TestSkippedAccounting:
-    def test_n_skipped_default_off(self, spark, pages, tmp_path):
+    def test_n_skipped_reported_without_option(self, spark, pages, tmp_path):
+        """Counted on every committing run, a first run included; a run
+        without output_root commits nothing and reports no count."""
         root = str(tmp_path / "skip")
-        run_extraction(pages.limit(30), output_root=root, num_partitions=2)
-        res = run_extraction(pages, output_root=root, num_partitions=2)
-        assert res.n_skipped_committed is None  # not computed by default
+        res = run_extraction(pages.limit(30), output_root=root,
+                             num_partitions=2)
+        assert res.n_skipped_committed == 0
+        res = run_extraction(pages.limit(30), num_partitions=2)
+        assert res.n_skipped_committed is None
 
     def test_n_skipped_counted_on_request(self, spark, pages, tmp_path):
         root = str(tmp_path / "skip2")
         run_extraction(pages.limit(30), output_root=root, num_partitions=2)
-        res = run_extraction(pages, output_root=root, num_partitions=2,
-                             count_skipped=True)
+        res = run_extraction(pages, output_root=root, num_partitions=2)
         assert res.n_skipped_committed == 30
 
     def test_same_url_new_content_reextracted(self, spark, pages, tmp_path):
@@ -101,7 +104,6 @@ class TestSkippedAccounting:
         changed = pages.limit(10).withColumn(
             "html", F.concat(F.col("html"),
                              F.lit(b"<p>fresh content appended</p>")))
-        res = run_extraction(changed, output_root=root, num_partitions=2,
-                             count_skipped=True)
+        res = run_extraction(changed, output_root=root, num_partitions=2)
         assert res.n_skipped_committed == 0
         assert res.documents.count() == 10

@@ -1,7 +1,8 @@
 """Dump .explain("formatted") for declared queries to files.
 
 Usage: python tools/qplan.py OUTDIR SUFFIX [--sf DIR] name [name ...]
-Writes OUTDIR/<name>_<SUFFIX>.txt for each query.
+Writes OUTDIR/<name>_<SUFFIX>.txt for each query. The session is
+build_session's default (local[$SPARK_GRAFT_CPUS]).
 """
 
 from __future__ import annotations
@@ -28,9 +29,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from horizon_ocr_python_spark.engine.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(master=f"local[{cpus}]",
-                         shuffle_partitions=2 * cpus, app_name="qplan")
+    spark = build_session(app_name="qplan")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     for name in names:

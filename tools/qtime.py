@@ -3,6 +3,8 @@ queries, same session config as bench.py, host-state self-labeling
 (VERDICT r5 ask: loadavg evidence next to every number).
 
 Usage: python tools/qtime.py [--sf DIR] [--repeat N] name [name ...]
+The session is build_session's default: local[$SPARK_GRAFT_CPUS] with 2x
+shuffle partitions.
 Prints one JSON line per query: {"name", "secs": [...], "min", "median",
 "loadavg_before", "loadavg_after"}.
 """
@@ -40,9 +42,7 @@ def main() -> None:
     import __spark_entry__ as entry
     from horizon_ocr_python_spark.engine.session import build_session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(master=f"local[{cpus}]",
-                         shuffle_partitions=2 * cpus, app_name="qtime")
+    spark = build_session(app_name="qtime")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     for name in names:
