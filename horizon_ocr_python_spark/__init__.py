@@ -8,8 +8,9 @@ kernel/     Pure-Python extraction semantics (no Spark imports). Byte-identity
             anchors vs the reference's pure functions (validators, fusion,
             KIE parse, reading order). Unit-tested against the reference's
             own expected values (reference tests/ ported).
-engine/     pyspark.sql assembly: the fused Arrow `mapInPandas` extraction
-            stage, salted repartitioning, checkpoint/resume, lineage+metrics.
+engine/     pyspark.sql assembly: the fused Arrow extraction stage (one
+            mapInArrow row map, `schema.map_rows`), salted repartitioning,
+            checkpoint/resume, lineage+metrics.
 operators/  Dataset-level relational operators (dedup, similarity search,
             sessionization, top-k, fusion-as-SQL) — each DuckDB-oracle checkable.
 functions/  Column-level expression builders (amount/date/currency validators,

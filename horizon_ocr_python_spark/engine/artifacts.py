@@ -12,7 +12,8 @@ stage; skip at scale or sample via df.sample().foreachPartition"
   driver coordination), evaluated before any payload crosses the Arrow
   boundary;
 - sampled rows fan out to artifact rows (kernel.artifacts.document_artifacts)
-  inside one mapInPandas — same single-shuffle shape as the extract stage;
+  inside one Arrow row map (schema.map_rows) — same shape as the extract
+  stage;
 - the sink is a parquet table partitioned by kind (billions of rows is a
   table problem, not a filesystem problem); `export_artifacts_local`
   reproduces the reference's on-disk tree for an already-sampled frame when
@@ -21,12 +22,14 @@ stage; skip at scale or sample via df.sample().foreachPartition"
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
+
+from .schema import map_rows
 
 ARTIFACT_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -39,28 +42,18 @@ ARTIFACT_SCHEMA = StructType([
 
 
 def _make_artifacts_fn(config: Optional[dict], show_text: bool):
-    def gen(batches) -> Iterator:
-        import pandas as pd
-
+    def artifact_rows(row: dict) -> list[dict]:
         from ..kernel import artifacts as kernel_artifacts
 
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, payload, lang in zip(pdf["url"], pdf["html"],
-                                          pdf["lang"]):
-                try:
-                    rows.extend(kernel_artifacts.document_artifacts(
-                        url, payload, lang=lang, config=config,
-                        show_text=show_text))
-                except Exception as exc:  # noqa: BLE001 — per-row containment
-                    rows.append({
-                        "doc_id": "", "url": url, "page": 0,
-                        "kind": "error", "mime": "text/plain",
-                        "payload": f"{type(exc).__name__}: {exc}".encode()})
-            yield pd.DataFrame(
-                rows, columns=["url", "doc_id", "page", "kind", "mime",
-                               "payload"])
-    return gen
+        try:
+            return kernel_artifacts.document_artifacts(
+                row["url"], row["html"], lang=row["lang"], config=config,
+                show_text=show_text)
+        except Exception as exc:  # noqa: BLE001 — per-row containment
+            return [{"doc_id": "", "url": row["url"], "page": 0,
+                     "kind": "error", "mime": "text/plain",
+                     "payload": f"{type(exc).__name__}: {exc}".encode()}]
+    return artifact_rows
 
 
 def artifacts_stage(pages: DataFrame, every_n: int = 100,
@@ -75,9 +68,8 @@ def artifacts_stage(pages: DataFrame, every_n: int = 100,
     stage: only (url, html, lang) ship."""
     sampled = pages.where(
         F.pmod(F.abs(F.xxhash64(F.col("url"))), F.lit(every_n)) == 0)
-    return (sampled.select("url", "html", "lang")
-            .mapInPandas(_make_artifacts_fn(config, show_text),
-                         ARTIFACT_SCHEMA))
+    return map_rows(sampled.select("url", "html", "lang"),
+                    _make_artifacts_fn(config, show_text), ARTIFACT_SCHEMA)
 
 
 def write_artifacts(artifacts: DataFrame, path: str) -> None:

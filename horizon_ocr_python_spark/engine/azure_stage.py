@@ -4,9 +4,9 @@ The reference caches every Azure Document Intelligence response
 (azure/response_cache.py) and replays the mapping offline. This stage runs
 that replay as a DataFrame job: one input row per (url, response-JSON
 string), one output row per mapped page — the kernel mapping
-(kernel/azure_map.py, doc_intelligence.py:385-658 semantics) inside a
-single mapInPandas, with per-row containment (a malformed JSON yields a
-status="error" row, never a dead task).
+(kernel/azure_map.py, doc_intelligence.py:385-658 semantics) inside one
+Arrow row map (schema.map_rows), with per-row containment (a malformed
+JSON yields a status="error" row, never a dead task).
 
 Scale shape: no shuffle at all — the stage is a pure map over the input
 partitioning; only (url, response) ship to Python; output reuses the
@@ -16,13 +16,11 @@ against the native pipeline's pages work unchanged on mapped Azure pages.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                StringType, StructField, StructType)
 
-from .schema import LINE_SCHEMA, REGION_SCHEMA, TABLE_SCHEMA
+from .schema import LINE_SCHEMA, REGION_SCHEMA, TABLE_SCHEMA, map_rows
 
 AZURE_PAGE_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -113,15 +111,6 @@ def map_recorded_responses(responses: DataFrame,
                            url_col: str = "url",
                            response_col: str = "response") -> DataFrame:
     """Map a table of recorded ``analyzeResult`` JSON strings to pages."""
-    def gen(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, resp in zip(pdf[url_col], pdf[response_col]):
-                rows.extend(_page_rows(url, resp))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              AZURE_PAGE_SCHEMA.fields])
-
-    return (responses.select(url_col, response_col)
-            .mapInPandas(gen, AZURE_PAGE_SCHEMA))
+    return map_rows(responses.select(url_col, response_col),
+                    lambda row: _page_rows(row[url_col], row[response_col]),
+                    AZURE_PAGE_SCHEMA)

@@ -23,8 +23,15 @@ import json
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def content_key(col) -> Column:
+    """THE resume key's content half, JVM-side: sha256 hex of the payload
+    (NULL = empty). The resume filter, the streaming dedup and the extract
+    stage's document rows all use this one definition."""
+    return F.sha2(F.coalesce(col, F.lit(bytearray())), 256)
 
 
 def _manifest_dir(root: str) -> str:
@@ -86,19 +93,21 @@ def committed_keys(spark: SparkSession, root: str) -> Optional[DataFrame]:
 def filter_uncommitted(pages: DataFrame, committed: Optional[DataFrame]) -> DataFrame:
     """Resume filter: left-anti join pages against already-committed keys.
 
-    Keyed on (url, sha2(html)) — the MERGE key this module's docstring
-    promises. A re-crawl of the same url with identical bytes is skipped;
-    a NEW url whose bytes happen to equal some committed page is still
-    extracted (it is a distinct output row). Content-only dedup across urls
-    is a separate operator (operators/dedup.exact_dedup), not the resume
-    filter's job.
+    Keyed on (url, content_key(html)) — the MERGE key this module's
+    docstring promises. A re-crawl of the same url with identical bytes is
+    skipped; a NEW url whose bytes happen to equal some committed page is
+    still extracted (it is a distinct output row). Content-only dedup
+    across urls is a separate operator (operators/dedup.exact_dedup), not
+    the resume filter's job.
+
+    The `content_key` column stays on the returned rows, also when nothing
+    is committed, so the extract stage ships it instead of hashing again.
     """
+    keyed = pages.withColumn("content_key", content_key(F.col("html")))
     if committed is None:
-        return pages
-    keyed = pages.withColumn("content_key", F.sha2(F.col("html"), 256))
-    return (keyed.join(committed.select("url", "content_key").distinct(),
-                       on=["url", "content_key"], how="left_anti")
-            .drop("content_key"))
+        return keyed
+    return keyed.join(committed.select("url", "content_key").distinct(),
+                      on=["url", "content_key"], how="left_anti")
 
 
 def commit_snapshot(documents: DataFrame, root: str,

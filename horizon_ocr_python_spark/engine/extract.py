@@ -1,29 +1,31 @@
 """The fused extraction stage: pages DataFrame -> documents DataFrame.
 
-One Arrow-batched `mapInPandas` runs the whole kernel pipeline
+One Arrow row map (`schema.map_rows`) runs the whole kernel pipeline
 (parse -> boilerplate strip -> reading order -> KIE -> fuse -> validate)
 per document, so page payloads never cross a stage boundary (SURVEY §4
 custom-work 2: Catalyst cannot fuse across two Python UDF stages without
 serializing the intermediate).
 
 Vectorization pattern (SURVEY §2.4 O2): the per-document Python loop lives
-*inside* the Arrow batch — Spark hands us pandas DataFrames of
-`arrow.maxRecordsPerBatch` rows; there is no Spark-row-at-a-time Python.
+*inside* the Arrow batch — Spark hands over Arrow record batches of
+`arrow.maxRecordsPerBatch` rows and the output batch is built once from
+the row dicts; there is no Spark-row-at-a-time Python and no pandas hop.
 Error containment is per row (status/error columns, types.py:317-323) —
 a poisoned document must not kill a 10^12-row task.
 """
 
 from __future__ import annotations
 
-import hashlib
 import time
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..kernel.document import extract_document
-from .schema import DOCUMENT_SCHEMA
+from .checkpoint import content_key
+from .schema import DOCUMENT_SCHEMA, map_rows
 
 
 def _bbox_dict(bbox) -> dict | None:
@@ -253,38 +255,27 @@ def _doc_to_row(url, warc_ts, lang, doc: dict, content_key: str,
     }
 
 
+_SHIPPED = ("url", "warc_ts", "html", "lang", "content_key")
+
+
 def _make_extract_fn(config: Optional[dict] = None):
-    """Build the mapInPandas body with the (broadcastable) config dict
+    """Build the per-row body with the (broadcastable) config dict
     baked into the closure — the C7 contract: executors see a plain dict,
     never driver-side dataclasses. The FULL resolved config reaches the
     kernel (fusion.*, thresholds.*, extraction.*), so HSP_* env overrides
     never silently no-op."""
 
-    def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        """mapInPandas body. Iterator-of-batches keeps memory bounded (the
-        reference's lazy page iterator, io/pdf.py:86-115, gives the same
-        property per document)."""
-        from pyspark import TaskContext
-
+    def _extract_row(row: dict):
         ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
+        t0 = time.perf_counter()
+        doc = extract_document(row["url"], row["html"] or b"",
+                               row["warc_ts"], row["lang"], config=config)
+        ms = (time.perf_counter() - t0) * 1000.0
+        yield _doc_to_row(row["url"], row["warc_ts"], row["lang"], doc,
+                          row["content_key"],
+                          ctx.partitionId() if ctx is not None else -1, ms)
 
-        for pdf in batches:
-            rows = []
-            for url, warc_ts, html, lang in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]):
-                t0 = time.perf_counter()
-                payload = bytes(html) if html is not None else b""
-                content_key = hashlib.sha256(payload).hexdigest()
-                doc = extract_document(url, payload, warc_ts, lang,
-                                       config=config)
-                ms = (time.perf_counter() - t0) * 1000.0
-                rows.append(_doc_to_row(url, warc_ts, lang, doc, content_key,
-                                        pid, ms))
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _extract_batches
+    return _extract_row
 
 
 def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
@@ -295,11 +286,19 @@ def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
 
     Column pruning: only (url, warc_ts, html, lang) are shipped to Python —
     the ground-truth `text` column (test-only) is never read here, so the
-    parquet scan prunes it (check ReadSchema in .explain).
+    parquet scan prunes it (check ReadSchema in .explain). The resume key
+    rides along: a `content_key` column already on the rows (the resume
+    filter's, computed before the shuffle) is shipped as is, otherwise
+    `checkpoint.content_key(html)` is computed JVM-side here.
     """
-    cols = ["url", "warc_ts", "html", "lang"]
-    return pages.select(*cols).mapInPandas(_make_extract_fn(config),
-                                           DOCUMENT_SCHEMA)
+    if "content_key" not in pages.columns:
+        pages = pages.withColumn("content_key", content_key(F.col("html")))
+    # Input column order, so the select only prunes and sinks below the
+    # caller's shuffle: AQE replaces a Project over an empty shuffle along
+    # with the stage below, losing run_extraction's input Observation.
+    shipped = [c for c in pages.columns if c in _SHIPPED]
+    return map_rows(pages.select(*shipped), _make_extract_fn(config),
+                    DOCUMENT_SCHEMA)
 
 
 def with_json_output(documents: DataFrame) -> DataFrame:

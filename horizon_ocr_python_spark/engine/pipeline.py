@@ -44,9 +44,9 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     committed = None
     if output_root and resume:
         committed = ckpt.committed_keys(spark, output_root)
-    # Length-cap BEFORE the resume key is computed: extract_stage hashes the
+    # Length-cap BEFORE the resume key is computed: extract_stage keys the
     # payload it receives (the capped bytes), so the resume anti-join must
-    # hash the same payload or oversized rows re-extract on every resume.
+    # key the same payload or oversized rows re-extract on every resume.
     max_bytes = (((config or {}).get("extraction") or {})
                  .get("max_payload_bytes", 8 * 1024 * 1024))
     capped = with_length_cap(pages, max_bytes=max_bytes)
@@ -64,16 +64,15 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
                          metrics=extracted_metrics(documents), snapshot_id=None)
 
     snap_id = ckpt.commit_snapshot(documents, output_root)
-    n_rows = next(s["n_rows"] for s in ckpt.committed_snapshots(output_root)
-                  if s["snapshot_id"] == snap_id)
-    committed_docs = spark.read.parquet(
-        ckpt._snap_dir(output_root, snap_id))  # noqa: SLF001 — same package
+    snap = next(s for s in ckpt.committed_snapshots(output_root)
+                if s["snapshot_id"] == snap_id)
+    committed_docs = spark.read.parquet(snap["path"])
     metrics = extracted_metrics(committed_docs, snapshot_id=snap_id)
     metrics.write.mode("append").parquet(f"{output_root}/metrics")
     return RunResult(documents=committed_docs,
                      metrics=spark.read.parquet(f"{output_root}/metrics"),
                      snapshot_id=snap_id,
-                     n_skipped_committed=int(n_input.get["n"]) - n_rows)
+                     n_skipped_committed=n_input.get["n"] - snap["n_rows"])
 
 
 def pages_dataframe(spark: SparkSession, n_rows: int, seed: int = 42,
@@ -82,25 +81,15 @@ def pages_dataframe(spark: SparkSession, n_rows: int, seed: int = 42,
     """Synthetic pages as a DataFrame — generated IN PARALLEL on executors.
 
     The generator is seeded per row index, so we parallelize the index range
-    and build rows inside mapInPandas instead of materializing bytes on the
-    driver (at bench scale the HTML payloads would not fit driver memory —
-    and a driver-side loop is exactly the anti-pattern the engine avoids).
+    and build rows inside the Arrow row map instead of materializing bytes
+    on the driver (at bench scale the HTML payloads would not fit driver
+    memory — and a driver-side loop is exactly the anti-pattern the engine
+    avoids). `make_page`'s naive `warc_ts` is stored as UTC.
     """
-    import pandas as pd
-
     from ..sources.pages import make_page
-    from .schema import PAGES_SCHEMA
+    from .schema import PAGES_SCHEMA, map_rows
 
     slices = slices or spark.sparkContext.defaultParallelism
     idx = spark.range(0, n_rows, 1, slices).toDF("i")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["i"]:
-                p = make_page(int(i), seed=seed, n_hosts=n_hosts, scale=scale)
-                rows.append((p["url"], p["warc_ts"], p["html"], p["text"], p["lang"]))
-            if rows:
-                yield pd.DataFrame(rows, columns=PAGES_SCHEMA.fieldNames())
-
-    return idx.mapInPandas(gen, PAGES_SCHEMA)
+    return map_rows(idx, lambda row: (make_page(
+        row["i"], seed=seed, n_hosts=n_hosts, scale=scale),), PAGES_SCHEMA)

@@ -5,7 +5,7 @@ spark.python.daemon.module`) and forks a worker per task from it. Modules
 imported by the daemon BEFORE the fork are inherited by every worker via
 copy-on-write, so the heavy imports (numpy, pandas, pyarrow, the extraction
 kernel) are paid once per machine instead of once per worker — measured on
-the bench box: the first mapInPandas job over 32 fresh workers drops ~5 s
+the bench box: the first Python-stage job over 32 fresh workers drops ~5 s
 of wall (32 concurrent cold imports) to ~the cost of one.
 
 Import failures are swallowed: a worker that later needs a dep it cannot

@@ -4,10 +4,17 @@ Mapping per SURVEY §1.3: Document object graph -> one row with nested
 Struct/Array columns; enums -> strings; Field.value -> string + data_type tag
 (JSON contract "values should be strings", reference JSON_SCHEMA.md:395);
 per-row status/error columns instead of exceptions (types.py:317-323).
+`map_rows` is the one Python row map that fills them: every Python stage
+of the engine is a per-row function handed to it.
 """
 
 from __future__ import annotations
 
+from typing import Callable, Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -254,11 +261,22 @@ DOCUMENT_SCHEMA = StructType([
     StructField("extract_ms", DoubleType(), True),
 ])
 
-METRICS_SCHEMA = StructType([
-    StructField("partition_id", IntegerType(), False),
-    StructField("n_docs", LongType(), False),
-    StructField("n_ok", LongType(), False),
-    StructField("n_err", LongType(), False),
-    StructField("wall_ms", DoubleType(), False),
-    StructField("snapshot_id", LongType(), True),
-])
+
+def map_rows(df: DataFrame, fn: Callable[[dict], Iterable[dict]],
+             schema: StructType) -> DataFrame:
+    """THE engine's Python row map, over Spark's Arrow batch map: `fn(row)`
+    yields zero or more output dicts per input row dict, and each output
+    batch is built once by `RecordBatch.from_pylist` on the schema's Arrow
+    shape (missing keys -> null, extra keys ignored, naive datetimes read
+    as UTC whatever the session time zone). One batch in, one batch out
+    keeps a task's memory bounded (SURVEY §2.4 O2; the reference's lazy
+    page iterator, io/pdf.py:86-115)."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def body(batches):
+        for batch in batches:
+            rows = [out for row in batch.to_pylist() for out in fn(row)]
+            if rows:
+                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.mapInArrow(body, schema)

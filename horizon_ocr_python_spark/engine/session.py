@@ -4,19 +4,19 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import SparkSession
+
+from .schema import map_rows
 
 
 def build_session(master: str | None = None, app_name: str = "horizon-spark",
-                  shuffle_partitions: int | None = None,
-                  arrow_batch: int = 256) -> SparkSession:
+                  shuffle_partitions: int | None = None) -> SparkSession:
     """Engine defaults, chosen for the heavy-UDF workload:
 
     - AQE on (runtime shuffle coalescing + skew-join splitting for the
       relational tail; it does NOT fix UDF-compute skew — that's the salted
       repartition's job, engine.partitioning)
-    - arrow.maxRecordsPerBatch kept moderate: page payloads are KB-to-MB
+    - arrow.maxRecordsPerBatch fixed at 256: page payloads are KB-to-MB
       sized, so an Arrow batch of 256 rows stays well under worker memory
       (SURVEY §7.5 hard-part 3)
     - python worker reuse: the kernel's module import cost (and any future
@@ -24,7 +24,7 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
       reference's lock-guarded lazy model init (orchestrator.py:115-161)
     - shuffle partitions default to 2x cores, scaled with master
     - generic bring-up is paid at session build (_warm_python_runner): a
-      no-op mapInPandas spawns the worker daemon and loads Arrow, and a
+      no-op `map_rows` spawns the worker daemon and loads Arrow, and a
       synthetic parquet round trip loads the reader/writer. Disable with
       HSP_WARM_PYTHON=0.
     - spark.local.dir is set only when SPARK_LOCAL_DIRS is not: Spark
@@ -62,14 +62,13 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
         # prefer shuffled hash join over sort-merge when the per-partition
         # build side fits (guide §3.1/§9): no sort of either side; AQE can
         # also rewrite SMJ->SHJ at runtime below the local-map threshold.
-        # The threshold bounds the in-memory hash build per task, so it is
-        # the scale-safety knob (HSP_SHJ_LOCALMAP_THRESHOLD; SMJ remains
-        # the spill-safe fallback above it).
+        # The threshold bounds the in-memory hash build per task (SMJ
+        # remains the spill-safe fallback above it).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("HSP_SHJ_LOCALMAP_THRESHOLD", "64m"))
+                "64m")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -86,21 +85,17 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
 
 def _warm_python_runner(spark: SparkSession) -> None:
     """Generic session bring-up, so a fresh session's first real job does
-    not absorb it: a no-op mapInPandas (worker daemon spawn, Arrow/Netty
-    class loading) and a parquet write/read round trip (vectorized reader,
-    footer parsing, commit protocol). Touches no input data and mirrors no
-    query's expressions: only synthetic longs, nothing any timed query
-    computes is precomputed or cached."""
-
-    def _noop(batches):
-        for pdf in batches:
-            yield pd.DataFrame({"i": pdf["i"][:0]})
-
+    not absorb it: a no-op `map_rows`, the runner every engine stage uses
+    (worker daemon spawn, Arrow/Netty class loading), and a parquet
+    write/read round trip (vectorized reader, footer parsing, commit
+    protocol). Touches no input data and mirrors no query's expressions:
+    only synthetic longs, nothing any timed query computes is precomputed
+    or cached."""
     cores = spark.sparkContext.defaultParallelism
     try:
         spark.sparkContext.setJobDescription("session: python-runner warmup")
-        (spark.range(0, cores, 1, cores).toDF("i")
-         .mapInPandas(_noop, "i long").count())
+        ids = spark.range(0, cores, 1, cores).toDF("i")
+        map_rows(ids, lambda row: (), ids.schema).count()
 
         # parquet reader/writer first-use JIT (vectorized reader, footer
         # parsing, commit protocol): a 10k-row synthetic round trip in a

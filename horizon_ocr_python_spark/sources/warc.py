@@ -5,11 +5,12 @@ Minimal, dependency-free WARC/1.0 implementation:
   HTTP/1.1 response envelope (how Common Crawl stores fetched pages)
 - parser: record framing via Content-Length, header extraction, HTTP
   envelope stripping -> (url, warc_ts, payload bytes)
-- Spark reader: binaryFile scan of *.warc -> mapInPandas record explode ->
-  the engine's pages schema. Each WARC file is one input split (WARC is not
-  arbitrarily splittable without an index — same operational reality as on
-  a real cluster, where parallelism comes from the file count; Common Crawl
-  ships ~1 GB files by the tens of thousands).
+- Spark reader: binaryFile scan of *.warc -> record explode
+  (engine.schema.map_rows) -> the engine's pages schema. Each WARC file is
+  one input split (WARC is not arbitrarily splittable without an index —
+  same operational reality as on a real cluster, where parallelism comes
+  from the file count; Common Crawl ships ~1 GB files by the tens of
+  thousands).
 
 This makes `spark.read WARC -> extract_stage` a real ingestion path, not
 just parquet.
@@ -101,25 +102,18 @@ def read_warc_pages(spark, warc_glob: str):
     """WARC files -> pages DataFrame (url, warc_ts, html, text, lang).
 
     binaryFile scan (one task per file — WARC's natural split unit) then a
-    mapInPandas record explode. `text`/`lang` are NULL: ground truth and
+    record explode per file. `text`/`lang` are NULL: ground truth and
     language are not part of the container; downstream stages fill lang.
+    `WARC-Date` is UTC (its trailing `Z`) and is stored as UTC whatever the
+    session time zone.
     """
-    import pandas as pd
+    from ..engine.schema import PAGES_SCHEMA, map_rows
 
-    from ..engine.schema import PAGES_SCHEMA
+    files = spark.read.format("binaryFile").load(warc_glob).select("content")
 
-    files = (spark.read.format("binaryFile")
-             .load(warc_glob)
-             .select("path", "content"))
+    def explode_records(row: dict):
+        for rec in parse_warc(row["content"]):
+            yield {"url": rec["url"], "warc_ts": rec["warc_ts"],
+                   "html": rec["payload"]}
 
-    def explode_records(batches):
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for rec in parse_warc(bytes(content)):
-                    rows.append((rec["url"], rec["warc_ts"], rec["payload"],
-                                 None, None))
-            if rows:
-                yield pd.DataFrame(rows, columns=PAGES_SCHEMA.fieldNames())
-
-    return files.mapInPandas(explode_records, PAGES_SCHEMA)
+    return map_rows(files, explode_records, PAGES_SCHEMA)

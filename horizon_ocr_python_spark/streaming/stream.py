@@ -2,7 +2,7 @@
 
 Design: file-source readStream with the explicit PAGES_SCHEMA (streaming
 sources never infer schemas at scale), the SAME extract_stage as batch
-(mapInPandas is streaming-compatible — stateless row map), and two sinks:
+(its Arrow row map is streaming-compatible — stateless), and two sinks:
 
 - extraction sink: foreachBatch -> snapshot commit (engine.checkpoint), so
   streaming output is resumable/idempotent by the same protocol as batch
@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..engine.checkpoint import content_key
 from ..engine.extract import extract_stage
 from ..engine.schema import PAGES_SCHEMA
 
@@ -48,14 +49,13 @@ def windowed_lang_counts(pages_stream: DataFrame) -> DataFrame:
 def streaming_exact_dedup(pages_stream: DataFrame,
                           watermark: str = "10 minutes") -> DataFrame:
     """Streaming member of the dedup family: drop re-crawled identical
-    content within the watermark horizon. Key = (url, sha2(html)) — the
-    same MERGE key as the batch resume filter (engine.checkpoint), so a
+    content within the watermark horizon. Key = (url,
+    checkpoint.content_key(html)) — the batch resume filter's key, so a
     page that re-arrives with identical bytes inside the horizon is
     dropped BEFORE the expensive extraction stage, and the state store
     stays bounded (dropDuplicatesWithinWatermark evicts keys older than
     the watermark, unlike unbounded dropDuplicates)."""
-    keyed = pages_stream.withColumn(
-        "content_key", F.sha2(F.col("html"), 256))
+    keyed = pages_stream.withColumn("content_key", content_key(F.col("html")))
     return (keyed.withWatermark("warc_ts", watermark)
             .dropDuplicatesWithinWatermark(["url", "content_key"]))
 

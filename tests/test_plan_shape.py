@@ -59,7 +59,8 @@ class TestCodegen:
 
 class TestShuffles:
     def test_extract_pipeline_single_shuffle(self, spark, tmp_path):
-        """read -> salted repartition -> mapInPandas: exactly one Exchange."""
+        """read -> salted repartition -> Arrow row map: exactly one
+        Exchange, and the row map is MapInArrow (no pandas hop)."""
         from horizon_ocr_python_spark.engine.extract import extract_stage
         from horizon_ocr_python_spark.engine.partitioning import salted_repartition
         from horizon_ocr_python_spark.engine.pipeline import pages_dataframe
@@ -67,7 +68,9 @@ class TestShuffles:
         path = str(tmp_path / "pages")
         pages_dataframe(spark, 20, seed=42).write.parquet(path)
         docs = extract_stage(salted_repartition(spark.read.parquet(path), 8))
-        assert plans.n_exchanges(docs) == 1, plans.physical_plan(docs)
+        plan = plans.physical_plan(docs)
+        assert plans.n_exchanges(docs) == 1, plan
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
     def test_worst_k_single_shuffle(self, spark):
         from horizon_ocr_python_spark.operators import sessionize
@@ -218,7 +221,7 @@ class TestArtifactsStagePlan:
 
         df = artifacts_stage(pages_dataframe(spark, 50, seed=42), every_n=10)
         plan = plans.physical_plan(df)
-        py = re.search(r"MapInPandas|ArrowEvalPython", plan)
+        py = re.search(r"MapInArrow", plan)
         flt = re.search(r"Filter .*xxhash64", plan)
         assert py and flt, plan[:1500]
         # explain prints parents first: the Python eval must be ABOVE

@@ -62,3 +62,21 @@ class TestWarcSparkIngestion:
         # warc_ts survived the container roundtrip
         ts_null = [d.url for d in docs if d.warc_ts is None]
         assert ts_null == []
+
+    def test_warc_date_is_utc_in_any_session_time_zone(self, spark, tmp_path):
+        """`WARC-Date: ...Z` is UTC: the stored instant must not shift with
+        the session time zone (a naive datetime read as session-local time
+        lands 5 h off under America/New_York)."""
+        (tmp_path / "a.warc").write_bytes(
+            build_warc([("https://a.example/1", TS, b"<html>x</html>")]))
+        key = "spark.sql.session.timeZone"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "America/New_York")
+        try:
+            got = (read_warc_pages(spark, str(tmp_path / "*.warc"))
+                   .select(F.unix_timestamp("warc_ts").alias("e"))
+                   .collect())
+        finally:
+            spark.conf.set(key, before)
+        # 2026-03-05T12:00:00Z
+        assert [r.e for r in got] == [1772712000]
