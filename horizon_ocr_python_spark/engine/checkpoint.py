@@ -48,11 +48,11 @@ def committed_snapshots(root: str) -> list[dict]:
     if not os.path.isdir(mdir):
         return []
     out = []
-    for name in sorted(os.listdir(mdir)):
+    for name in os.listdir(mdir):
         if name.startswith("manifest-") and name.endswith(".json"):
             with open(os.path.join(mdir, name)) as fh:
                 out.append(json.load(fh))
-    return out
+    return sorted(out, key=lambda s: s["snapshot_id"])
 
 
 def next_snapshot_id(root: str) -> int:

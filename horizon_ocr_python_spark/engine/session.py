@@ -21,7 +21,12 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
       (SURVEY §7.5 hard-part 3)
     - python worker reuse: the kernel's module import cost (and any future
       per-worker model cache) is paid once per executor, like the
-      reference's lock-guarded lazy model init (orchestrator.py:115-161)
+      reference's lock-guarded lazy model init (orchestrator.py:115-161).
+      Workers fork from engine.pydaemon, which preimports the kernel and
+      first drops redundant archives from sys.path (the Python-free
+      spark-core jar; pyspark.zip and py4j when pip has the same release),
+      so PySpark's per-task importlib.invalidate_caches() re-reads no zip
+      directory (148-281 ms per task before, ~0.1 ms after)
     - shuffle partitions default to 2x cores, scaled with master
     - generic bring-up is paid at session build (_warm_python_runner): a
       no-op `map_rows` spawns the worker daemon and loads Arrow, and a

@@ -3,6 +3,8 @@ full snapshot history; time travel to pre-compaction states stays exact;
 the resume filter and n_skipped accounting keep working across compaction.
 """
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,6 +68,20 @@ class TestCompaction:
         # everything was already committed: empty snapshot, all skipped
         assert res.n_skipped_committed == 50
         assert res.documents.count() == 0
+
+    def test_snapshot_order_is_numeric_past_nine(self, tmp_path):
+        """manifest-10/11 sort after manifest-9, not after manifest-1: the
+        active set after a base at 3 keeps 10 and 11, in id order."""
+        mdir = tmp_path / "manifests"
+        mdir.mkdir()
+        for i in range(1, 12):
+            (mdir / f"manifest-{i}.json").write_text(json.dumps(
+                {"snapshot_id": i, "base": i == 3}))
+        ids = [s["snapshot_id"] for s in ckpt.committed_snapshots(str(tmp_path))]
+        assert ids == list(range(1, 12))
+        active = [s["snapshot_id"] for s in ckpt.active_snapshots(str(tmp_path))]
+        assert active == list(range(3, 12))
+        assert ckpt.next_snapshot_id(str(tmp_path)) == 12
 
     def test_compact_empty_root_is_noop(self, spark, tmp_path):
         assert ckpt.compact(spark, str(tmp_path / "nothing")) is None

@@ -1,14 +1,20 @@
-"""Engine guardrails: oversized-payload cap, the JSON output column and the
-session's local-dir choice."""
+"""Engine guardrails: oversized-payload cap, the JSON output column, the
+session's local-dir choice and the worker daemon's import path."""
 
 import json
+import os
+import zipfile
 
+import pyspark
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from horizon_ocr_python_spark.engine import session
 from horizon_ocr_python_spark.engine.extract import extract_stage, with_json_output
 from horizon_ocr_python_spark.engine.partitioning import with_length_cap
-from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA
+from horizon_ocr_python_spark.engine.pydaemon import redundant_archives
+from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA, map_rows
 
 
 class TestLengthCap:
@@ -57,3 +63,85 @@ class TestLocalDir:
 
         monkeypatch.delenv("SPARK_LOCAL_DIRS")
         assert session._local_dir() is not None  # noqa: SLF001
+
+
+def _zip(path, files: dict) -> str:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, data in files.items():
+            zf.writestr(name, data)
+    return str(path)
+
+
+class TestRedundantArchives:
+    """The daemon's path rule on temp archives; `site` stands in for a
+    site-packages directory."""
+
+    @pytest.fixture()
+    def site(self, tmp_path):
+        pkg = tmp_path / "site" / "hsp_probe_pkg"
+        pkg.mkdir(parents=True)
+        (pkg / "__init__.py").write_text("")
+        (pkg / "version.py").write_text('__version__ = "1.0"\n')
+        return str(tmp_path / "site")
+
+    def test_archive_without_python_dropped(self, tmp_path, site):
+        jar = _zip(tmp_path / "core.jar", {"META-INF/MANIFEST.MF": "x",
+                                           "org/a/B.class": b"\xca\xfe"})
+        assert redundant_archives([jar, site]) == [jar]
+
+    def test_identical_version_elsewhere_dropped(self, tmp_path, site):
+        z = _zip(tmp_path / "pkg.zip", {
+            "hsp_probe_pkg/__init__.py": "",
+            "hsp_probe_pkg/version.py": '__version__ = "1.0"\n'})
+        assert redundant_archives([z, site]) == [z]
+
+    def test_different_version_kept(self, tmp_path, site):
+        z = _zip(tmp_path / "pkg.zip", {
+            "hsp_probe_pkg/__init__.py": "",
+            "hsp_probe_pkg/version.py": '__version__ = "2.0"\n'})
+        assert redundant_archives([z, site]) == []
+
+    def test_package_found_nowhere_else_kept(self, tmp_path, site):
+        """Like the --py-files engine zip (tools/make_pyfiles.py)."""
+        z = _zip(tmp_path / "engine.zip", {
+            "hsp_only_here/__init__.py": "",
+            "hsp_only_here/version.py": '__version__ = "1.0"\n'})
+        assert redundant_archives([z, site, str(tmp_path / "missing")]) == []
+
+
+class TestWorkerImportPath:
+    def test_no_zipimporter_for_spark_archives(self, spark):
+        """Workers fork from a daemon that dropped pyspark.zip, py4j and the
+        spark-core jar from sys.path: no zipimporter stays cached for them,
+        so the per-task importlib.invalidate_caches() re-reads no archive."""
+        spark_zip = os.path.join(os.environ.get("SPARK_HOME", ""),
+                                 "python", "lib", "pyspark.zip")
+        if not os.path.isfile(spark_zip):
+            pytest.skip("no $SPARK_HOME/python/lib/pyspark.zip")
+        with zipfile.ZipFile(spark_zip) as zf, open(os.path.join(
+                os.path.dirname(pyspark.__file__), "version.py"), "rb") as fh:
+            if zf.read("pyspark/version.py") != fh.read():
+                pytest.skip("pyspark.zip is a different release")
+
+        def worker_imports(row):  # nested: pickled by value, not by module
+            import sys
+            import zipimport
+
+            import pyspark as worker_pyspark
+
+            zips = sorted(k for k, v in sys.path_importer_cache.items()
+                          if isinstance(v, zipimport.zipimporter))
+            yield {"i": row["i"], "zips": zips,
+                   "pyspark": worker_pyspark.__file__}
+
+        schema = T.StructType([
+            T.StructField("i", T.LongType()),
+            T.StructField("zips", T.ArrayType(T.StringType())),
+            T.StructField("pyspark", T.StringType())])
+        ids = spark.range(0, 4, 1, 4).toDF("i")
+        rows = map_rows(ids, worker_imports, schema).collect()
+        assert len(rows) == 4
+        for r in rows:
+            assert not [z for z in r.zips
+                        if "pyspark.zip" in z or "py4j" in z or ".jar" in z]
+            assert "pyspark.zip" not in r.pyspark
