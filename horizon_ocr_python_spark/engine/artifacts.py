@@ -14,10 +14,10 @@ stage; skip at scale or sample via df.sample().foreachPartition"
 - sampled rows fan out to artifact rows (kernel.artifacts.document_artifacts)
   inside one Arrow row map (schema.map_rows) — same shape as the extract
   stage;
-- the sink is a parquet table partitioned by kind (billions of rows is a
-  table problem, not a filesystem problem); `export_artifacts_local`
-  reproduces the reference's on-disk tree for an already-sampled frame when
-  a human wants to click through summary.html.
+- the output is a DataFrame of artifact rows, written with any table sink
+  (billions of rows is a table problem, not a filesystem problem);
+  `export_artifacts_local` reproduces the reference's on-disk tree for an
+  already-sampled frame when a human wants to click through summary.html.
 """
 
 from __future__ import annotations
@@ -70,13 +70,6 @@ def artifacts_stage(pages: DataFrame, every_n: int = 100,
         F.pmod(F.abs(F.xxhash64(F.col("url"))), F.lit(every_n)) == 0)
     return map_rows(sampled.select("url", "html", "lang"),
                     _make_artifacts_fn(config, show_text), ARTIFACT_SCHEMA)
-
-
-def write_artifacts(artifacts: DataFrame, path: str) -> None:
-    """Columnar artifacts sink: parquet partitioned by kind, so a debug
-    session reading only summaries (or only table overlays) scans one
-    partition directory."""
-    artifacts.write.mode("overwrite").partitionBy("kind").parquet(path)
 
 
 def export_artifacts_local(artifacts: DataFrame, out_dir: str,

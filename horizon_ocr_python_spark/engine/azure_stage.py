@@ -37,36 +37,14 @@ AZURE_PAGE_SCHEMA = StructType([
 ])
 
 
-def _line_row(tl: dict) -> dict:
-    from .extract import bbox_row, style_row
-
-    return {
-        "text": tl.get("text"),
-        "bbox": bbox_row(tl.get("bbox")),
-        "font_size": None,
-        "confidence": float(tl.get("confidence", 0.9)),
-        "source": tl.get("source"),
-        "content_type": tl.get("content_type"),
-        "words": [{
-            "text": w.get("text"),
-            "bbox": bbox_row(w.get("bbox")),
-            "confidence": float(w.get("confidence", 0.0)),
-            "source": w.get("source"),
-            "content_type": w.get("content_type"),
-        } for w in tl.get("words", [])],
-        # R7 styles (applied by the kernel when the response carries
-        # styles[] + content) project through the SHARED extract.style_row
-        # — the `handwritten` flag has no STYLE_SCHEMA slot (types.py:
-        # 118-126 has none either; Azure's flag lives only in styles[])
-        "style": style_row(tl.get("style")),
-    }
-
-
 def _page_rows(url: str, response_json: str) -> list[dict]:
+    """Kernel page dicts pass through to AZURE_PAGE_SCHEMA; `map_rows`
+    converts them and drops keys without a column, such as the R7 style's
+    `handwritten` flag (types.py:118-126 has no slot for it). Only the page
+    number, unit and raw text are written here."""
     import json
 
     from ..kernel import azure_map
-    from .extract import bbox_row, table_row
 
     try:
         result = json.loads(response_json)
@@ -74,37 +52,24 @@ def _page_rows(url: str, response_json: str) -> list[dict]:
             raise ValueError("analyzeResult must be a JSON object")
         pages = azure_map.map_azure_response(result)
     except Exception as exc:  # noqa: BLE001 — per-row containment
-        return [{"url": url, "number": None, "width": None, "height": None,
-                 "unit": None, "text_lines": [], "layout_regions": [],
+        return [{"url": url, "text_lines": [], "layout_regions": [],
                  "tables": [], "raw_text": "",
                  "status": "error", "error": f"{type(exc).__name__}: {exc}"}]
-    rows = []
-    for p in pages:
-        lines = p.get("text_lines") or []
-        rows.append({
-            "url": url,
-            # clamp to int32: a corrupt recorded pageNumber must yield a
-            # bounded value, not an Arrow cast failure outside the
-            # containment try (AZURE_PAGE_SCHEMA.number is IntegerType)
-            "number": max(0, min(int(p.get("number", 1)), 2**31 - 1)),
-            "width": float(p.get("width") or 0.0),
-            "height": float(p.get("height") or 0.0),
-            "unit": (str(p["unit"]) if p.get("unit") is not None
-                     else None),
-            "text_lines": [_line_row(tl) for tl in lines],
-            "layout_regions": [{
-                "type": r.get("type"), "index": None,
-                "bbox": bbox_row(r.get("bbox")),
-                "confidence": float(r.get("confidence", 0.95)),
-            } for r in p.get("layout_regions") or []],
-            "tables": [table_row(t) for t in p.get("tables") or []],
-            # Azure returns lines already in reading order; the reference
-            # consumes them as-is (no y-band re-sort on the cloud path)
-            "raw_text": "\n".join(tl.get("text") or "" for tl in lines),
-            "status": "ok",
-            "error": "",
-        })
-    return rows
+    return [{
+        **p,
+        "url": url,
+        # clamp to int32: a corrupt recorded pageNumber must yield a
+        # bounded value, not an Arrow cast failure outside the
+        # containment try (AZURE_PAGE_SCHEMA.number is IntegerType)
+        "number": max(0, min(p["number"], 2**31 - 1)),
+        # the recorded unit is any JSON value; the column is a string
+        "unit": str(p["unit"]),
+        # Azure returns lines already in reading order; the reference
+        # consumes them as-is (no y-band re-sort on the cloud path)
+        "raw_text": "\n".join(tl["text"] for tl in p["text_lines"]),
+        "status": "ok",
+        "error": "",
+    } for p in pages]
 
 
 def map_recorded_responses(responses: DataFrame,

@@ -28,228 +28,47 @@ from .checkpoint import content_key
 from .schema import DOCUMENT_SCHEMA, map_rows
 
 
-def _bbox_dict(bbox) -> dict | None:
-    if bbox is None:
-        return None
-    return {"x1": float(bbox[0]), "y1": float(bbox[1]),
-            "x2": float(bbox[2]), "y2": float(bbox[3])}
-
-
-def _validator_row(r: dict) -> dict:
-    """ValidatorResult (types.py:210-216): name/passed/message + the parse
-    outputs (parsed_value, normalized, format_used, ...) as the stringified
-    details map the reference carries."""
-    return {
-        "name": r["name"],
-        "passed": bool(r["passed"]),
-        "message": r.get("message"),
-        "details": {k: str(v) for k, v in r.items()
-                    if k not in ("name", "passed", "message") and v is not None},
-    }
-
-
-def _field_row(f: dict) -> dict:
-    return {
-        "name": f["name"],
-        "value": str(f["value"]) if f["value"] is not None else None,
-        "normalized_value": (str(f["normalized_value"])
-                             if f.get("normalized_value") is not None else None),
-        "data_type": f["data_type"],
-        "confidence": float(f["confidence"]),
-        "status": f["status"],
-        "chosen_source": f.get("chosen_source"),
-        "page": int(f["page"]) if f.get("page") is not None else None,
-        "bbox": _bbox_dict(f.get("bbox")),
-        "candidates": [{
-            "source": c.get("source"),
-            "value": str(c["value"]) if c.get("value") is not None else None,
-            "confidence": float(c.get("confidence", 0.0)),
-            "page": int(c["page"]) if c.get("page") is not None else None,
-            "bbox": _bbox_dict(c.get("bbox")),
-        } for c in f.get("candidates", [])],
-        "n_candidates": len(f.get("candidates", [])),
-        "validators": [_validator_row(r) for r in f.get("validators", [])],
-    }
-
-
-def _page_row(p: dict) -> dict:
-    md = p.get("metadata") or {}
-    return {
-        "number": int(p["number"]),
-        "width": int(md.get("width", 0)),
-        "height": int(md.get("height", 0)),
-        "dpi": int(md["dpi"]) if md.get("dpi") is not None else None,
-        "content_type": md.get("content_type"),
-        "readability": md.get("readability"),
-        "readability_issues": list(md.get("readability_issues", [])),
-        "layout_regions": [{
-            "type": r.get("type"),
-            "index": int(r["index"]) if r.get("index") is not None else None,
-            "bbox": _bbox_dict(r.get("bbox")),
-            "confidence": float(r.get("confidence", 1.0)),
-        } for r in p.get("layout_regions", [])],
-        "text_lines": [{
-            "text": tl.get("text"),
-            "bbox": _bbox_dict(tl.get("bbox")),
-            "font_size": (float(tl["font_size"])
-                          if tl.get("font_size") is not None else None),
-            "confidence": (float(tl["confidence"])
-                           if tl.get("confidence") is not None else None),
-            "source": tl.get("source"),
-            "content_type": tl.get("content_type"),
-            "words": [{
-                "text": w.get("text"),
-                "bbox": _bbox_dict(w.get("bbox")),
-                "confidence": float(w.get("confidence", 1.0)),
-                # words inherit their line's source/content_type
-                # (types.py:129-135)
-                "source": w.get("source", tl.get("source")),
-                "content_type": w.get("content_type", tl.get("content_type")),
-            } for w in tl.get("words", [])],
-            "style": style_row(tl.get("style")),
-        } for tl in p.get("text_lines", [])],
-        "tables": [_table_row(t) for t in p.get("tables", [])],
-        "raw_text": p.get("raw_text", ""),
-    }
-
-
-def style_row(style: dict | None) -> dict | None:
-    """TextStyle dict -> STYLE_SCHEMA row — THE single projection, shared by
-    the native page rows and the Azure replay stage (engine/azure_stage.py)
-    so the two paths cannot silently diverge. Extra kernel keys (e.g. the
-    Azure `handwritten` flag, which types.py:118-126 has no slot for) are
-    dropped here."""
-    if not style:
-        return None
-    return {
-        "font_name": style.get("font_name"),
-        "font_size": (float(style["font_size"])
-                      if style.get("font_size") is not None else None),
-        "bold": bool(style.get("bold", False)),
-        "italic": bool(style.get("italic", False)),
-        "color": style.get("color"),
-        "source": style.get("source"),
-        "confidence": float(style.get("confidence", 0.5)),
-    }
-
-
-
-def _table_row(t: dict) -> dict:
-    """Table dict -> TABLE_SCHEMA row (rich cells + expanded grid)."""
-    return {
-        "rows": t.get("rows", []),
-        "cells": [{
-            "row": int(c.get("row", 0)), "col": int(c.get("col", 0)),
-            "row_span": int(c.get("row_span", 1)),
-            "col_span": int(c.get("col_span", 1)),
-            "text": c.get("text"),
-            "is_header": bool(c.get("is_header", False)),
-            "bbox": _bbox_dict(c.get("bbox")),
-        } for c in t.get("cells", [])],
-        "n_rows": int(t.get("n_rows", len(t.get("rows", [])))),
-        "n_cols": int(t.get("n_cols",
-                            max((len(r) for r in t.get("rows", [])),
-                                default=0))),
-    }
-
-# public aliases for sibling stages (engine/azure_stage.py reuses the same
-# row shapes; no cross-module private use)
-bbox_row = _bbox_dict
-table_row = _table_row
-
-
-def _reconstruction_row(rec: dict | None) -> dict | None:
-    if not rec:
-        return None
-    return {
-        "version": rec.get("version"),
-        "pages": [{"page": int(p["page"]), "width": int(p["width"]),
-                   "height": int(p["height"])} for p in rec.get("pages", [])],
-        "elements": [{
-            "type": e.get("type"), "page": int(e.get("page", 1)),
-            "text": e.get("text"),
-            "x": float(e.get("x", 0.0)), "y": float(e.get("y", 0.0)),
-            "width": float(e.get("width", 0.0)),
-            "height": float(e.get("height", 0.0)),
-            "font_size": (float(e["font_size"])
-                          if e.get("font_size") is not None else None),
-            "bold": bool(e.get("bold", False)),
-        } for e in rec.get("elements", [])],
-        "tables": [{
-            "page": int(t.get("page", 1)),
-            "rows": int(t.get("rows", 0)),
-            "cols": int(t.get("cols", 0)),
-            "cells": [{"row": int(c["row"]), "col": int(c["col"]),
-                       "text": c.get("text")} for c in t.get("cells", [])],
-        } for t in rec.get("tables", [])],
-        "fields_summary": {str(k): (str(v) if v is not None else None)
-                           for k, v in (rec.get("fields_summary") or {}).items()},
-    }
-
-
-def _normalized_row(n: dict | None) -> dict | None:
-    if not n:
-        return None
-
-    def item(it):
-        ev = it.get("_evidence") or {}
-        return {
-            "values": {str(k): (str(v) if v is not None else None)
-                       for k, v in (it.get("values") or {}).items()},
-            "_evidence": {
-                "table_id": ev.get("table_id"),
-                "cell_refs": [{"row": int(c["row"]), "col": int(c["col"])}
-                              for c in ev.get("cell_refs", [])],
-                "page": int(ev.get("page", 1)),
-            },
-        }
-
-    return {
-        "document_type": n.get("document_type"),
-        "header": {str(k): (str(v) if v is not None else None)
-                   for k, v in (n.get("header") or {}).items()},
-        "line_items": [item(it) for it in n.get("line_items", [])],
-        "totals": {str(k): (str(v) if v is not None else None)
-                   for k, v in (n.get("totals") or {}).items()},
-        "line_items_secondary": [item(it) for it
-                                 in n.get("line_items_secondary", [])],
-    }
+def _str_or_none(v) -> str | None:
+    return None if v is None else str(v)
 
 
 def _doc_to_row(url, warc_ts, lang, doc: dict, content_key: str,
                 partition_id: int, extract_ms: float) -> dict:
-    fields = [_field_row(f) for f in doc.get("fields", [])]
-    v = doc.get("validation") or {}
-    pages = doc.get("pages") or []
-    blocks_total = sum(len(p["layout_regions"]) for p in pages)
-    content_total = sum(len(p["text_lines"]) for p in pages)
+    """Kernel Document -> DOCUMENT_SCHEMA row, written only where the two
+    differ: top-level renames and counts, each page's metadata flattened
+    into its page row, words inheriting their line's source/content_type
+    (types.py:129-135), string field/candidate values (JSON_SCHEMA.md:395)
+    and the stringified validator `details` map (types.py:210-216).
+    `map_rows` converts everything else on the schema."""
+    pages = doc["pages"]
     return {
+        **doc,
         "url": url,
         "doc_id": doc["id"],
         "content_key": content_key,
-        "status": doc["status"],
-        "error": doc.get("error", ""),
-        "file_type": doc["metadata"].get("file_type", "unknown"),
+        "file_type": doc["metadata"]["file_type"],
         "warc_ts": warc_ts,
         "lang": lang,
-        "title": doc.get("title", ""),
-        "raw_text": doc.get("raw_text", ""),
-        "n_chars": len(doc.get("raw_text", "")),
-        "n_blocks": blocks_total,
-        "n_content_blocks": content_total,
-        "page_count": int(doc.get("page_count", len(pages))),
-        "pages": [_page_row(p) for p in pages],
-        "fields": fields,
-        "tables": [_table_row(t) for t in doc.get("tables", [])],
-        "validation": {
-            "passed": bool(v.get("passed", True)),
-            "total_checks": int(v.get("total_checks", 0)),
-            "passed_checks": int(v.get("passed_checks", 0)),
-            "failed_checks": int(v.get("failed_checks", 0)),
-            "issues": list(v.get("issues", [])),
-        },
-        "reconstruction": _reconstruction_row(doc.get("reconstruction")),
-        "normalized": _normalized_row(doc.get("normalized")),
+        "n_chars": len(doc["raw_text"]),
+        "n_blocks": sum(len(p["layout_regions"]) for p in pages),
+        "n_content_blocks": sum(len(p["text_lines"]) for p in pages),
+        "pages": [{**p, **p["metadata"], "text_lines": [{
+            **tl,
+            "words": [{"source": tl.get("source"),
+                       "content_type": tl.get("content_type"), **w}
+                      for w in tl["words"]],
+        } for tl in p["text_lines"]]} for p in pages],
+        "fields": [{
+            **f,
+            "value": _str_or_none(f["value"]),
+            "candidates": [{**c, "value": _str_or_none(c.get("value"))}
+                           for c in f["candidates"]],
+            "n_candidates": len(f["candidates"]),
+            "validators": [{**r, "details": {
+                k: str(v) for k, v in r.items()
+                if k not in ("name", "passed", "message") and v is not None
+            }} for r in f["validators"]],
+        } for f in doc["fields"]],
         "partition_id": partition_id,
         "extract_ms": extract_ms,
     }

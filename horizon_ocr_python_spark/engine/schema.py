@@ -267,10 +267,14 @@ def map_rows(df: DataFrame, fn: Callable[[dict], Iterable[dict]],
     """THE engine's Python row map, over Spark's Arrow batch map: `fn(row)`
     yields zero or more output dicts per input row dict, and each output
     batch is built once by `RecordBatch.from_pylist` on the schema's Arrow
-    shape (missing keys -> null, extra keys ignored, naive datetimes read
-    as UTC whatever the session time zone). One batch in, one batch out
-    keeps a task's memory bounded (SURVEY §2.4 O2; the reference's lazy
-    page iterator, io/pdf.py:86-115)."""
+    shape. That conversion is the row contract the stages rely on, at every
+    nesting level: a missing key is null, an extra key is ignored, a tuple
+    fills a struct by position (bbox tuples -> BBOX_SCHEMA), Python and
+    numpy numbers are fitted to the declared width (a float in an int
+    column truncates like int(); a value out of range fails the batch),
+    and naive datetimes are read as UTC whatever the session time zone.
+    One batch in, one batch out keeps a task's memory bounded (SURVEY §2.4
+    O2; the reference's lazy page iterator, io/pdf.py:86-115)."""
     arrow_schema = to_arrow_schema(schema)
 
     def body(batches):

@@ -39,8 +39,6 @@ MIN_CONFIDENCE = 0.2          # fuse.py:49
 LOW_CONF_THRESHOLD = 0.15     # fuse.py:135
 VALIDATOR_BONUS = 0.2         # fuse.py:33
 
-STRATEGIES = ("highest_confidence", "weighted_vote", "validator_priority", "consensus")
-
 
 def normalize_field_name(name: str) -> str:
     """lower/strip, spaces and dashes -> underscore (fuse.py:173-175)."""

@@ -2,15 +2,15 @@
 stubbed codecs.
 
 Design per the training-data-pipeline brief: media travel as opaque `binary`
-columns with a typed metadata struct; decode / feature-extract / resize /
-frame-sample run as Arrow-batched UDFs over mapInPandas. PNG, baseline
-JPEG, uncompressed TIFF and BMP decode for REAL (kernel.png / kernel.jpeg /
+columns with a typed metadata struct; the functions here are per-row
+kernels: `decode_image` runs inside the extraction stage's Arrow row map
+(engine/schema.map_rows), `parse_image_meta` inside the `multimodal_meta`
+operator's Arrow batches (operators/arrow_ops). PNG, baseline JPEG,
+uncompressed TIFF and BMP decode for REAL (kernel.png / kernel.jpeg /
 kernel.simple_images, stdlib+numpy only); the remaining formats (WebP,
-progressive JPEG, compressed TIFF) stay stubbed: `decode_image`
-raises NotImplementedError unless `fake=True`, in which case it produces a
-deterministic fake decode whose metadata is parsed from real container
-headers (PNG IHDR / JPEG SOF0) — schema, batch shape and partitioning are
-real and tested either way.
+progressive JPEG, compressed TIFF) stay stubbed: `decode_image` raises
+NotImplementedError, which the document kernel contains as a
+metadata-only row.
 
 Reference analogue: io/image.py:49-148 (decode + EXIF orient) and
 io/image.py:150-185 (bytes/base64 ingest).
@@ -18,7 +18,6 @@ io/image.py:150-185 (bytes/base64 ingest).
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from typing import Optional
 
@@ -120,54 +119,46 @@ def inject_exif_orientation(jpeg_data: bytes, orientation: int) -> bytes:
     return jpeg_data[:2] + app1 + jpeg_data[2:]
 
 
-def decode_image(data: bytes, fake: bool = False) -> np.ndarray:
+def decode_image(data: bytes) -> np.ndarray:
     """Decode image bytes to an HxWx3 BGR uint8 array (io/image.py:49-79).
 
     PNG (8-bit gray/RGB) decodes for REAL via the stdlib codec
     (kernel.png — zlib inflate + scanline un-filtering). Baseline JPEG
     decodes for REAL via kernel.jpeg (pure numpy huffman + IDCT) —
     progressive/arithmetic JPEGs raise NotImplementedError, contained
-    upstream as an error/metadata-only row. Other formats (TIFF/WebP/BMP)
-    stay stubbed: raise NotImplementedError unless fake=True, which returns
-    a deterministic pseudo-image with the true header dimensions.
+    upstream as an error/metadata-only row. BMP and uncompressed TIFF
+    decode via kernel.simple_images; other formats (WebP) raise
+    NotImplementedError.
     """
-    if not fake:
-        meta = parse_image_meta(data)
-        if meta["format"] == "png":
-            from .png import decode_png
-
-            rgb = decode_png(data)
-            if rgb.ndim == 2:
-                rgb = np.stack([rgb] * 3, axis=-1)
-            return np.ascontiguousarray(rgb[..., ::-1])  # RGB -> BGR
-        if meta["format"] == "jpeg":
-            from .jpeg import decode_jpeg
-
-            rgb = decode_jpeg(data)
-            # EXIF orientation applied on every load (io/image.py:100-148)
-            rgb = apply_exif_orientation(rgb, exif_orientation(data))
-            return np.ascontiguousarray(rgb[..., ::-1])  # RGB -> BGR
-        if meta["format"] == "bmp":
-            from .simple_images import decode_bmp
-
-            return np.ascontiguousarray(decode_bmp(data)[..., ::-1])
-        if meta["format"] == "tiff":
-            from .simple_images import decode_tiff
-
-            img = apply_exif_orientation(decode_tiff(data),
-                                         exif_orientation(data))
-            return np.ascontiguousarray(img[..., ::-1])
-        raise NotImplementedError(
-            f"{meta['format']} decoding requires a codec library (not in "
-            "this container). Pass fake=True for the deterministic test "
-            "double."
-        )
     meta = parse_image_meta(data)
-    h = max(1, min(meta["height"] or 64, 256))
-    w = max(1, min(meta["width"] or 64, 256))
-    seed = int.from_bytes(hashlib.sha256(data).digest()[:4], "big")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+    if meta["format"] == "png":
+        from .png import decode_png
+
+        rgb = decode_png(data)
+        if rgb.ndim == 2:
+            rgb = np.stack([rgb] * 3, axis=-1)
+        return np.ascontiguousarray(rgb[..., ::-1])  # RGB -> BGR
+    if meta["format"] == "jpeg":
+        from .jpeg import decode_jpeg
+
+        rgb = decode_jpeg(data)
+        # EXIF orientation applied on every load (io/image.py:100-148)
+        rgb = apply_exif_orientation(rgb, exif_orientation(data))
+        return np.ascontiguousarray(rgb[..., ::-1])  # RGB -> BGR
+    if meta["format"] == "bmp":
+        from .simple_images import decode_bmp
+
+        return np.ascontiguousarray(decode_bmp(data)[..., ::-1])
+    if meta["format"] == "tiff":
+        from .simple_images import decode_tiff
+
+        img = apply_exif_orientation(decode_tiff(data),
+                                     exif_orientation(data))
+        return np.ascontiguousarray(img[..., ::-1])
+    raise NotImplementedError(
+        f"{meta['format']} decoding requires a codec library (not in "
+        "this container)."
+    )
 
 
 EXIF_ORIENTATION_OPS = {

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.columns import currency_valid_expr, normalize_currency_expr
 from . import table
 
 
@@ -124,6 +125,7 @@ _CURRENCY_CASES = [
     (0, "USD"), (1, "EUR"), (2, "XXX"), (3, "GBP"),
     (4, "usd"), (5, "$"), (6, "JPY"), (7, "ZZ"),
 ]
+# the oracle's literal copy of kernel.validators.VALID_CURRENCIES
 _VALID = ("USD", "EUR", "GBP", "JPY", "CAD", "AUD", "CHF", "CNY",
           "INR", "MXN", "BRL", "KRW", "SGD", "HKD", "NOK", "SEK",
           "DKK", "NZD", "ZAR", "RUB", "TRY", "PLN", "THB", "MYR",
@@ -132,20 +134,16 @@ _VALID = ("USD", "EUR", "GBP", "JPY", "CAD", "AUD", "CHF", "CNY",
 
 def v4_currency_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symbol map + ISO-4217 membership over deterministic per-customer
-    codes (validators.py:311-344)."""
+    codes (validators.py:311-344), built from the shared column
+    expressions over the kernel's currency tables."""
     cust = table(spark, sf_dir, "customer")
     code = F.col("c_custkey") % 8
     raw = F.lit(None).cast("string")
     for k, v in reversed(_CURRENCY_CASES):
         raw = F.when(code == k, v).otherwise(raw)
-    norm = F.upper(F.trim(raw))
-    norm = (F.when(norm == "$", "USD").when(norm == "€", "EUR")
-            .when(norm == "£", "GBP").when(norm == "¥", "JPY")
-            .when(norm == "₹", "INR").when(norm == "₽", "RUB")
-            .when(norm == "₩", "KRW").otherwise(norm))
     return (cust.select("c_custkey", raw.alias("raw_code"),
-                        norm.alias("norm_code"),
-                        norm.isin(*_VALID).alias("passed"))
+                        normalize_currency_expr(raw).alias("norm_code"),
+                        currency_valid_expr(raw).alias("passed"))
             .orderBy("c_custkey"))
 
 

@@ -56,6 +56,77 @@ class TestExtractStage:
         assert all(r.wall_ms >= 0 for r in m)
 
 
+class TestDocumentRow:
+    """`_doc_to_row` writes only where the kernel Document differs from
+    DOCUMENT_SCHEMA; `RecordBatch.from_pylist` on the schema (what
+    `map_rows` does) converts the rest."""
+
+    @staticmethod
+    def _row(doc):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from horizon_ocr_python_spark.engine.extract import _doc_to_row
+        from horizon_ocr_python_spark.engine.schema import DOCUMENT_SCHEMA
+
+        row = _doc_to_row("https://x/d", None, "en", doc, "k", 3, 1.5)
+        return pa.RecordBatch.from_pylist(
+            [row], schema=to_arrow_schema(DOCUMENT_SCHEMA)).to_pylist()[0]
+
+    def test_reshapes(self):
+        line = {"text": "a b", "bbox": (0, 0, 9, 4), "source": "pdf_text",
+                "content_type": "printed", "words": [
+                    {"text": "a", "bbox": (0, 0, 4, 4), "confidence": 1.0},
+                    {"text": "b", "source": "ocr", "content_type": None}]}
+        doc = {
+            "id": "d1", "status": "ok", "error": "", "raw_text": "a b",
+            "metadata": {"file_type": "pdf"},
+            "pages": [{"number": 1, "layout_regions": [{"type": "text"}],
+                       "text_lines": [line],
+                       "metadata": {"width": 612, "height": 792, "dpi": 72,
+                                    "rotation": 0}}],
+            "fields": [{"name": "qty", "value": 42, "candidates": [
+                {"source": "pdf_text", "value": 42, "metadata": {}},
+                {"source": "html_kv", "value": None}],
+                "validators": [{"name": "amount", "passed": True,
+                                "message": "ok", "parsed_value": 42.0,
+                                "format_used": None}]}],
+        }
+        row = self._row(doc)
+        assert (row["doc_id"], row["file_type"], row["content_key"]) == \
+            ("d1", "pdf", "k")
+        assert (row["n_chars"], row["n_blocks"], row["n_content_blocks"]) == \
+            (3, 1, 1)
+        assert (row["partition_id"], row["extract_ms"]) == (3, 1.5)
+        page = row["pages"][0]
+        assert (page["width"], page["height"], page["dpi"]) == (612, 792, 72)
+        words = page["text_lines"][0]["words"]
+        assert [(w["source"], w["content_type"]) for w in words] == \
+            [("pdf_text", "printed"), ("ocr", None)]
+        assert words[0]["bbox"] == {"x1": 0.0, "y1": 0.0, "x2": 4.0,
+                                    "y2": 4.0}
+        field = row["fields"][0]
+        assert field["value"] == "42"
+        assert [c["value"] for c in field["candidates"]] == ["42", None]
+        assert field["n_candidates"] == 2
+        assert dict(field["validators"][0]["details"]) == \
+            {"parsed_value": "42.0"}
+
+    def test_error_row(self, monkeypatch):
+        from horizon_ocr_python_spark.kernel import document
+
+        def boom(*args, **kwargs):
+            raise ValueError("boom")
+
+        monkeypatch.setattr(document, "_extract", boom)
+        doc = document.extract_document("https://x/d", b"<p>x</p>")
+        row = self._row(doc)
+        assert (row["status"], row["error"]) == ("error", "ValueError: boom")
+        assert row["reconstruction"] is None and row["normalized"] is None
+        assert row["pages"] == [] and row["n_blocks"] == 0
+        assert row["validation"]["total_checks"] == 0
+
+
 class TestPartitioning:
     def test_salted_spreads_hot_host(self, spark, pages):
         parts = (salted_repartition(pages, 8)

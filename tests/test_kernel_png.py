@@ -93,7 +93,7 @@ class TestMultimodalRealDecode:
         img = np.zeros((10, 12, 3), dtype=np.uint8)
         img[..., 0] = 10  # R
         img[..., 2] = 30  # B
-        bgr = M.decode_image(encode_png(img))  # no fake flag!
+        bgr = M.decode_image(encode_png(img))
         assert bgr.shape == (10, 12, 3)
         assert bgr[0, 0, 0] == 30 and bgr[0, 0, 2] == 10  # BGR order
 

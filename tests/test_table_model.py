@@ -85,10 +85,17 @@ class TestPipelineThreading:
         assert t["rows"][0] == ["Invoice", "Invoice", "Q3"]
 
     def test_engine_row_shape(self):
-        from horizon_ocr_python_spark.engine.extract import _table_row
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from horizon_ocr_python_spark.engine.extract import _doc_to_row
+        from horizon_ocr_python_spark.engine.schema import DOCUMENT_SCHEMA
 
         doc = document.extract_document("https://x/t.html", MERGED)
-        row = _table_row(doc["tables"][0])
-        assert row["n_rows"] == 3 and row["n_cols"] == 3
-        assert row["cells"][0]["col_span"] == 2
-        assert row["cells"][0]["bbox"] is None
+        row = pa.RecordBatch.from_pylist(
+            [_doc_to_row("https://x/t.html", None, "", doc, "k", 0, 0.0)],
+            schema=to_arrow_schema(DOCUMENT_SCHEMA)).to_pylist()[0]
+        table = row["tables"][0]
+        assert table["n_rows"] == 3 and table["n_cols"] == 3
+        assert table["cells"][0]["col_span"] == 2
+        assert table["cells"][0]["bbox"] is None
