@@ -80,9 +80,8 @@ _SHIPPED = ("url", "warc_ts", "html", "lang", "content_key")
 def _make_extract_fn(config: Optional[dict] = None):
     """Build the per-row body with the (broadcastable) config dict
     baked into the closure — the C7 contract: executors see a plain dict,
-    never driver-side dataclasses. The FULL resolved config reaches the
-    kernel (fusion.*, thresholds.*, extraction.*), so HSP_* env overrides
-    never silently no-op."""
+    never driver-side dataclasses. The kernel reads the fusion.*,
+    thresholds.* and HTML extraction.* leaves in the stages they govern."""
 
     def _extract_row(row: dict):
         ctx = TaskContext.get()
@@ -100,8 +99,8 @@ def _make_extract_fn(config: Optional[dict] = None):
 def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
     """Run the fused extraction stage over a pages DataFrame.
 
-    `config` is an EngineConfig.to_dict() (kernel.config) — currently the
-    fusion strategy reaches the kernel; omitted -> reference defaults.
+    `config` is an EngineConfig.to_dict() (kernel.config), handed to the
+    kernel as is; omitted -> EngineConfig's defaults.
 
     Column pruning: only (url, warc_ts, html, lang) are shipped to Python —
     the ground-truth `text` column (test-only) is never read here, so the

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernel.config import ExtractionConfig
+
 
 def salted_repartition(df: DataFrame, num_partitions: int,
                        key: str = "url", salt: int = 42) -> DataFrame:
@@ -42,7 +44,8 @@ def partitions_for(spark, rows_hint: int | None = None,
     return max(min(want, cores * 4), min(cores * 2, max(1, rows_hint)))
 
 
-def with_length_cap(df: DataFrame, max_bytes: int = 8 * 1024 * 1024,
+def with_length_cap(df: DataFrame,
+                    max_bytes: int = ExtractionConfig.max_payload_bytes,
                     col: str = "html") -> DataFrame:
     """Guardrail for pathological rows (the reference caps work per doc:
     max_pages config.py:103, 50-line re-OCR cap config.py:223). Oversized

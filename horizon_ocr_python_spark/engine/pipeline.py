@@ -13,6 +13,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernel.config import EngineConfig
 from . import checkpoint as ckpt
 from .extract import extract_stage, extracted_metrics
 from .partitioning import partitions_for, salted_repartition, with_length_cap
@@ -47,9 +48,9 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     # Length-cap BEFORE the resume key is computed: extract_stage keys the
     # payload it receives (the capped bytes), so the resume anti-join must
     # key the same payload or oversized rows re-extract on every resume.
-    max_bytes = (((config or {}).get("extraction") or {})
-                 .get("max_payload_bytes", 8 * 1024 * 1024))
-    capped = with_length_cap(pages, max_bytes=max_bytes)
+    config = config or EngineConfig().to_dict()
+    capped = with_length_cap(
+        pages, max_bytes=config["extraction"]["max_payload_bytes"])
     n_input = Observation()
     if output_root:
         capped = capped.observe(n_input, F.count(F.lit(1)).alias("n"))

@@ -49,6 +49,13 @@ def _int(v, default: int = 0) -> int:
         return default
 
 
+def _int32(v, default: int = 0) -> int:
+    """`_int` clamped into int32: the engine's table schemas store cell
+    positions and spans as IntegerType, and one corrupt recorded value
+    must not fail the Arrow conversion of a whole replay batch."""
+    return max(-2**31, min(_int(v, default), 2**31 - 1))
+
+
 def _float(v, default: float = 0.0) -> float:
     try:
         return float(v)
@@ -178,10 +185,10 @@ def map_azure_tables(azure_tables: Optional[list], page_num: int,
         cells = []
         for ac in _dicts(at.get("cells")):
             cells.append({
-                "row": _int(ac.get("rowIndex")),
-                "col": _int(ac.get("columnIndex")),
-                "row_span": _int(ac.get("rowSpan"), 1) or 1,
-                "col_span": _int(ac.get("columnSpan"), 1) or 1,
+                "row": _int32(ac.get("rowIndex")),
+                "col": _int32(ac.get("columnIndex")),
+                "row_span": _int32(ac.get("rowSpan"), 1) or 1,
+                "col_span": _int32(ac.get("columnSpan"), 1) or 1,
                 "text": _str(ac.get("content")),
                 "bbox": bbox_from_regions(ac.get("boundingRegions"), sx, sy),
                 "confidence": 0.95,
@@ -191,10 +198,12 @@ def map_azure_tables(azure_tables: Optional[list], page_num: int,
             })
         n_rows = max(0, _int(at.get("rowCount")))
         n_cols = max(0, _int(at.get("columnCount")))
-        if n_rows * n_cols > 1_000_000:
-            # corrupt declared dims must not allocate an absurd grid:
-            # degrade to the observed-cell envelope, hard-capped (Azure's
-            # real tables are orders of magnitude below either bound)
+        if max(n_rows, 1) * max(n_cols, 1) > 1_000_000:
+            # corrupt declared dims must not allocate an absurd grid, and
+            # each dimension is bounded on its own (columnCount 0 must not
+            # let rowCount through): degrade to the observed-cell envelope,
+            # hard-capped (Azure's real tables are orders of magnitude
+            # below either bound)
             n_rows = min(n_rows,
                          max((c["row"] for c in cells), default=-1) + 1,
                          10_000)

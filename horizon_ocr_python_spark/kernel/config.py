@@ -8,6 +8,19 @@ precedence over the file, as in the reference's load order.
 
 At scale the resolved dict is what gets broadcast to executors (SURVEY §2.2
 P7 "flags = broadcast config"); dataclasses stay driver-side ergonomics.
+
+Every extraction setting gets its default here, once, and is resolved
+here: the kernel reads `EngineConfig.to_dict()` as given, with no
+per-document fallbacks. The fusion defaults are `kernel.fuse`'s constants
+(they are also `fuse_fields`' own defaults); the other literals below are
+the only copies, read by `html_extract`'s keyword defaults,
+`partitioning.with_length_cap` and the operators that mirror a gate.
+
+The reference's re-OCR selection (targeted_reocr.py:64-67) and Tesseract
+reroute (config.py:157) values are not settings here: nothing on the
+extraction path reads them, so they stay as the constants that drive the
+code that does (`reocr.CONFIDENCE_THRESHOLD` / `IMPROVEMENT_THRESHOLD` /
+`MAX_REOCR_LINES`, `operators.extras.REROUTE_BELOW`).
 """
 
 from __future__ import annotations
@@ -18,52 +31,61 @@ import os
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
+from . import fuse
+
 
 @dataclass
 class Thresholds:
-    """Reference defaults: config.py:151-164 + targeted_reocr.py:64-67."""
+    """Reference default: config.py:163. The raster-path values below are
+    calibrations of this engine's glyph recognizer (kernel.document)."""
     low_confidence: float = 0.5            # config.py:163
-    reroute_to_tesseract_below: float = 0.60   # config.py:157
-    reocr_confidence: float = 0.70         # targeted_reocr.py:64
-    reocr_improvement: float = 0.05        # targeted_reocr.py:66
-    max_reocr_lines: int = 50              # targeted_reocr.py:67
-    # raster-path calibrations (the glyph recognizer's confidence scale
-    # runs high — garbage ~0.7, clean >= 0.95 — so the re-OCR selection
-    # threshold is recalibrated from the reference's 0.70; the image gates
-    # are engine additions, see kernel.document)
+    # re-OCR line selection: the reference's 0.70 (config.py:221)
+    # recalibrated to the glyph recognizer's scale (kernel.document._ocr_page)
     glyph_reocr_confidence: float = 0.90
+    # Standalone-image OCR acceptance: char-weighted mean template
+    # confidence the recognized page must reach before its text is
+    # believed. Random ink (photos, diagrams, ruled forms) scores ~0.7,
+    # genuine glyph print >= 0.95 even after JPEG/preprocess blur, so 0.88
+    # cleanly separates document scans from pictures. Scanned PDFs skip
+    # this gate: a PDF with no text layer but embedded page images already
+    # declares the content a document.
     image_text_gate: float = 0.88
+    # Early junk floor for standalone images: raw recognition scoring this
+    # far below the gate cannot plausibly be lifted past it by the
+    # enhancement chain (measured: pictures ~0.72, genuine scans ~1.0;
+    # borderline 0.80-0.88 pages still get the full enhancement chance).
+    # Skipping preprocess + re-OCR on obvious non-documents saves ~60ms/row.
     picture_floor: float = 0.80
-    # minimum recognized non-space chars (absent a table) for image-text
-    # acceptance — the gate score is a char-weighted mean, so one lucky
-    # noise cell must not clear it alone (kernel.document rationale)
+    # Minimum evidence for image-text acceptance (absent a table): the gate
+    # score is a char-weighted mean, so a single noise cell within Hamming
+    # tolerance of one template (~0.2% of random-noise images, found by
+    # fuzzing: a lone ';' at conf 0.89) could clear it alone. Real scans
+    # carry tens of characters (corpus minimum observed: 69 non-space).
     min_image_text_chars: int = 8
 
 
 @dataclass
 class FusionConfig:
     """Reference defaults: orchestrator.py:241-251 / fuse.py:44-71."""
-    strategy: str = "weighted_vote"
-    min_confidence: float = 0.2
-    validator_bonus: float = 0.2
-    source_weights: dict = field(default_factory=lambda: {
-        "donut": 1.0, "layoutlmv3": 0.9, "trocr": 0.8,
-        "tesseract": 0.7, "ppstructure": 0.85,
-        "html_kv": 1.0, "html_table": 0.9, "pdf_text": 0.95,
-        # raster-path sources, mirroring fuse.DEFAULT_SOURCE_WEIGHTS. A
-        # user-supplied dict is MERGED over the kernel defaults at resolve
-        # time (kernel.document._resolve_settings) — missing sources keep
-        # their calibrated weights; explicit keys override.
-        "ocr_fallback": 0.8, "ocr_table": 0.8,
-    })
+    strategy: str = fuse.DEFAULT_STRATEGY
+    min_confidence: float = fuse.MIN_CONFIDENCE
+    validator_bonus: float = fuse.VALIDATOR_BONUS
+    source_weights: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        # user weights MERGE over the kernel defaults: a config written
+        # before a kernel source existed must not demote that source to
+        # the unknown-source weight; explicit keys still override
+        self.source_weights = {**fuse.DEFAULT_SOURCE_WEIGHTS,
+                               **(self.source_weights or {})}
 
 
 @dataclass
 class ExtractionConfig:
     max_payload_bytes: int = 8 * 1024 * 1024   # engine length cap
-    min_block_chars: int = 3                   # html_extract.MIN_BLOCK_CHARS
-    max_link_density: float = 0.33             # html_extract.MAX_LINK_DENSITY
-    min_text_density: float = 0.0              # chars/(1+tags); 0 = off
+    min_block_chars: int = 3       # shorter HTML blocks are noise
+    max_link_density: float = 0.33  # nav-like: > 1/3 of chars inside <a>
+    min_text_density: float = 0.0  # chars/(1+tags); 0 = off
 
 
 @dataclass
@@ -81,8 +103,6 @@ _SECTIONS = {"thresholds": Thresholds, "fusion": FusionConfig,
 
 
 def _coerce(value: str, target_type: type) -> Any:
-    if target_type is bool:
-        return value.lower() in ("1", "true", "yes", "on")
     if target_type is int:
         return int(value)
     if target_type is float:

@@ -28,10 +28,13 @@ from typing import Any, Optional
 from . import anchor as anchor_mod
 from . import fuse as fuse_mod
 from . import html_extract, kie, pdf_text, reading_order, validators
+from .config import EngineConfig
 
 ENGINE_VERSION = "0.2.0"
 
 AVG_CHAR_W = 0.6  # average Helvetica advance as a fraction of font size
+
+_DEFAULT_CONFIG = EngineConfig().to_dict()  # read-only: config=None
 
 
 def doc_id_for_url(url: str) -> str:
@@ -86,7 +89,7 @@ def _normalized_value(f: dict, results: list[dict]) -> Optional[str]:
 
 
 def _apply_validator_status(fields: list[dict], now: Optional[datetime],
-                            low_confidence: float = 0.5) -> list[dict]:
+                            low_confidence: float) -> list[dict]:
     """Run auto-selected validators per field, update status
     (orchestrator.py:1304-1347): all passed & conf >= thresholds.low_confidence
     -> validated; any failed -> validation_failed. Also writes the per-field
@@ -103,54 +106,19 @@ def _apply_validator_status(fields: list[dict], now: Optional[datetime],
     return fields
 
 
-def _resolve_settings(config: Optional[dict], fusion_strategy: str) -> dict:
-    """Flatten the C7 EngineConfig dict into the knobs this kernel consumes.
-    Every validated section reaches the stage it governs — HSP_* overrides
-    must never silently no-op."""
-    cfg = config or {}
-    fus = cfg.get("fusion") or {}
-    thr = cfg.get("thresholds") or {}
-    extr = cfg.get("extraction") or {}
-    # user-supplied weights MERGE over the kernel defaults (round-4 ADVICE):
-    # a config written before a new kernel source existed must not silently
-    # demote that source to the unknown-source weight — explicit keys still
-    # override, missing keys keep their calibrated defaults
-    user_weights = fus.get("source_weights") or None
-    source_weights = ({**fuse_mod.DEFAULT_SOURCE_WEIGHTS, **user_weights}
-                      if user_weights else None)
-    return {
-        "strategy": fus.get("strategy", fusion_strategy),
-        "min_confidence": fus.get("min_confidence", fuse_mod.MIN_CONFIDENCE),
-        "validator_bonus": fus.get("validator_bonus", fuse_mod.VALIDATOR_BONUS),
-        "source_weights": source_weights,
-        "low_confidence": thr.get("low_confidence", 0.5),
-        "min_block_chars": extr.get("min_block_chars"),
-        "max_link_density": extr.get("max_link_density"),
-        "min_text_density": extr.get("min_text_density") or None,
-        # raster-path knobs (kernel.config.Thresholds docs the calibration)
-        "glyph_reocr_confidence": thr.get("glyph_reocr_confidence", 0.90),
-        "image_text_gate": thr.get("image_text_gate", IMAGE_TEXT_GATE),
-        "picture_floor": thr.get("picture_floor", PICTURE_FLOOR),
-        "min_image_text_chars": thr.get("min_image_text_chars",
-                                        MIN_IMAGE_TEXT_CHARS),
-    }
-
-
 def extract_document(url: str, payload: bytes, warc_ts: Any = None,
                      lang: str = "", now: Optional[datetime] = None,
-                     fusion_strategy: str = "weighted_vote",
                      config: Optional[dict] = None) -> dict:
     """Extract one document. Never raises: failures are contained into
     status/error per the reference's ProcessingResult contract
     (types.py:317-323) — a failed doc must not kill a task (SURVEY §4).
 
-    `config` is an EngineConfig.to_dict() (kernel.config); explicit
-    `fusion_strategy` is the round-1 API and acts as the default when the
-    config carries no fusion.strategy.
+    `config` is an EngineConfig.to_dict() (kernel.config), read as given;
+    None means `EngineConfig().to_dict()` (no env vars are read here).
     """
     try:
         return _extract(url, payload, warc_ts, lang, now,
-                        _resolve_settings(config, fusion_strategy))
+                        config or _DEFAULT_CONFIG)
     except Exception as exc:  # noqa: BLE001 — containment boundary
         return {
             "id": doc_id_for_url(url),
@@ -355,7 +323,7 @@ def build_normalized(fields: list[dict], tables_rows: list[dict]) -> dict:
 
 
 def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
-             now: Optional[datetime], st: dict) -> dict:
+             now: Optional[datetime], cfg: dict) -> dict:
     if payload is None:
         payload = b""
     if isinstance(payload, str):
@@ -376,11 +344,11 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
         if sum(len(ln["text"]) for ln in ex["lines"]) <= SCANNED_CHAR_GATE:
             images = pdf_text.extract_pdf_images(payload)
             if images:
-                ocr_pages = [(_ocr_page(img, p, settings=st)
+                ocr_pages = [(_ocr_page(img, p, cfg)
                               if img is not None else None)
                              for p, img in enumerate(images, 1)]
                 return _assemble_from_ocr(url, payload, warc_ts, lang, now,
-                                          st, file_type, ocr_pages)
+                                          cfg, file_type, ocr_pages)
         page_dims = (pdf_text.PAGE_W, pdf_text.PAGE_H)
         n_pages = max(int(ex.get("n_pages", 1)), 1)
         # per-page fan-out: lines arrive in reading order, grouped by page
@@ -406,9 +374,9 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
         # JPEG/PNG of a document extracts like a scanned PDF. Our
         # deterministic recognizer adds a confidence gate the model-backed
         # reference gets implicitly: a photo/diagram whose "recognized"
-        # ink scores below IMAGE_TEXT_GATE carries no document text and
-        # stays a picture row (the reference's no-weights fallback: no
-        # model, no text).
+        # ink scores below thresholds.image_text_gate carries no document
+        # text and stays a picture row (the reference's no-weights
+        # fallback: no model, no text).
         n_pages = 1
         page_text_lines = {1: []}
         page_regions = {1: []}
@@ -421,16 +389,17 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
             # the junk floor may never exceed the acceptance gate — a user
             # lowering image_text_gate below the default floor must not be
             # silently nullified by the floor's earlier short-circuit
-            floor = min(st["picture_floor"], st["image_text_gate"])
-            ocr = _ocr_page(img, 1, junk_floor=floor, settings=st)
+            thr = cfg["thresholds"]
+            floor = min(thr["picture_floor"], thr["image_text_gate"])
+            ocr = _ocr_page(img, 1, cfg, junk_floor=floor)
             n_rec_chars = sum(len(tl["text"]) - tl["text"].count(" ")
                               for tl in ocr["text_lines"])
             if ((ocr["text_lines"] or ocr["tables"])
-                    and ocr["score"] >= st["image_text_gate"]
+                    and ocr["score"] >= thr["image_text_gate"]
                     and (ocr["tables"]
-                         or n_rec_chars >= st["min_image_text_chars"])):
+                         or n_rec_chars >= thr["min_image_text_chars"])):
                 return _assemble_from_ocr(url, payload, warc_ts, lang, now,
-                                          st, file_type, [ocr])
+                                          cfg, file_type, [ocr])
             # readability was already assessed inside _ocr_page (it is
             # exactly rot90-invariant: std/mean/interior-Laplacian identical,
             # the size rule is an OR over both dims) — reuse, don't recompute
@@ -443,10 +412,11 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
         except NotImplementedError:
             pass  # undecodable format: metadata-only (header parse upstream)
     else:
+        ext = cfg["extraction"]
         hx = html_extract.extract_html(
-            payload, min_block_chars=st["min_block_chars"],
-            max_link_density=st["max_link_density"],
-            min_text_density=st["min_text_density"])
+            payload, min_block_chars=ext["min_block_chars"],
+            max_link_density=ext["max_link_density"],
+            min_text_density=ext["min_text_density"])
         n_pages = 1
         page_text_lines = {1: [{"text": b["text"], "page": 1, "bbox": None,
                                 "font_size": None, "words": [],
@@ -467,7 +437,7 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
                                              page_num=1, source="html_kv")]
         ex_title, ex_raw = hx["title"], hx["raw_text"]
 
-    return _assemble(url, payload, warc_ts, lang, now, st, file_type,
+    return _assemble(url, payload, warc_ts, lang, now, cfg, file_type,
                      page_dims, n_pages, page_text_lines, page_regions,
                      tables_rows, field_lists, ex_title, ex_raw,
                      readability, readability_issues)
@@ -475,37 +445,9 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
 
 SCANNED_CHAR_GATE = 100  # pdf_style_extractor.py:67-98 scanned threshold
 
-# Standalone-image OCR acceptance: char-weighted mean template confidence
-# the recognized page must reach before its text is believed. The glyph
-# recognizer's confidence scale is bimodal — random ink (photos, diagrams,
-# ruled forms) matches its best-of-95 template at ~0.7, while genuine glyph
-# print sits >= 0.95 even after JPEG/preprocess blur — so 0.88 cleanly
-# separates document scans from pictures. Scanned PDFs skip this gate: the
-# container (a PDF with no text layer but embedded page images) already
-# declares the content a document.
-IMAGE_TEXT_GATE = 0.88
 
-# Early junk floor for the standalone-image path: raw recognition scoring
-# this far below the acceptance gate cannot plausibly be lifted past it by
-# the enhancement chain (measured: pictures sit at ~0.72, genuine scans at
-# ~1.0; borderline 0.80-0.88 pages still get the full enhancement chance).
-# Skipping preprocess + re-OCR on obvious non-documents saves ~60ms/row.
-PICTURE_FLOOR = 0.80
-
-# Minimum EVIDENCE for image-text acceptance: the gate score is a
-# char-weighted mean, so a single noise cell that happens to land within
-# Hamming-tolerance of one template (~0.2% of random-noise images, found
-# by fuzzing: a lone ';' at conf 0.89) can clear IMAGE_TEXT_GATE on its
-# own. Real document scans in this engine's operating range carry tens of
-# characters (corpus minimum observed: 69 non-space chars); requiring a
-# handful of recognized characters (or a detected table structure) keeps
-# every genuine scan and makes a meaningless single-cell match
-# insufficient. Pictures/diagrams remain picture rows either way.
-MIN_IMAGE_TEXT_CHARS = 8
-
-
-def _ocr_page(img, p: int, junk_floor: Optional[float] = None,
-              settings: Optional[dict] = None) -> dict:
+def _ocr_page(img, p: int, cfg: dict,
+              junk_floor: Optional[float] = None) -> dict:
     """Shared raster page body — the reference's per-page loop
     (orchestrator.py:631-816) over decoded page pixels, used by scanned
     PDFs AND standalone scanned images (the reference feeds every image
@@ -540,7 +482,7 @@ def _ocr_page(img, p: int, junk_floor: Optional[float] = None,
         # quadrilateral is visible (a photographed document inside a
         # margin: the case P1 dewarp exists for scores like garbage until
         # dewarped, so it gets the full enhancement chain; the final
-        # IMAGE_TEXT_GATE still rejects genuine pictures afterwards).
+        # image-text gate still rejects genuine pictures afterwards).
         # Otherwise skip the enhancement chain; the caller's picture
         # fallback takes over, reusing the readability computed here
         # (P9 runs once per image — raw pixels, a documented deviation:
@@ -610,11 +552,11 @@ def _ocr_page(img, p: int, junk_floor: Optional[float] = None,
         # threshold calibrated to the glyph recognizer's confidence scale
         # (even random ink matches ~0.7 against the best of 95 templates;
         # clean lines sit >= 0.95) — the reference exposes exactly this
-        # knob (reocr confidence_threshold, config.py:221); ours threads
-        # through EngineConfig.thresholds.glyph_reocr_confidence.
+        # knob (reocr confidence_threshold, config.py:221); ours is
+        # EngineConfig.thresholds.glyph_reocr_confidence.
         reocr_mod.process_lines(
             lines, _recompute,
-            threshold=(settings or {}).get("glyph_reocr_confidence", 0.90),
+            threshold=cfg["thresholds"]["glyph_reocr_confidence"],
             source="ocr_enhanced")
         for ln in lines:
             if ln.get("source") == "ocr_enhanced" and id(ln) in enhanced:
@@ -703,7 +645,7 @@ def _ocr_page(img, p: int, junk_floor: Optional[float] = None,
             "rotation": rot_k, "preprocessed": was_preprocessed}
 
 
-def _assemble_from_ocr(url, payload, warc_ts, lang, now, st, file_type,
+def _assemble_from_ocr(url, payload, warc_ts, lang, now, cfg, file_type,
                        ocr_pages: list[Optional[dict]]) -> dict:
     """Document assembly over per-page raster OCR results (None = corrupt
     page, contained and kept empty). Shared by the scanned-PDF and
@@ -752,7 +694,7 @@ def _assemble_from_ocr(url, payload, warc_ts, lang, now, st, file_type,
          and tl["bbox"][1] < page_dims[1] * 0.3), "")
     ex_raw = "\n".join(tl["text"] for tl in all_lines)
     first_meta = next((m for m in page_meta.values()), {})
-    return _assemble(url, payload, warc_ts, lang, now, st, file_type,
+    return _assemble(url, payload, warc_ts, lang, now, cfg, file_type,
                      page_dims, len(ocr_pages), page_text_lines,
                      page_regions, tables_rows, field_lists, ex_title,
                      ex_raw, first_meta.get("readability", "good"),
@@ -760,7 +702,7 @@ def _assemble_from_ocr(url, payload, warc_ts, lang, now, st, file_type,
                      table_source="ocr_table", page_meta=page_meta)
 
 
-def _assemble(url, payload, warc_ts, lang, now, st, file_type, page_dims,
+def _assemble(url, payload, warc_ts, lang, now, cfg, file_type, page_dims,
               n_pages, page_text_lines, page_regions, tables_rows,
               field_lists, ex_title, ex_raw, readability,
               readability_issues, table_source: str = "html_table",
@@ -784,11 +726,8 @@ def _assemble(url, payload, warc_ts, lang, now, st, file_type, page_dims,
                 data, confidence=0.85, page_num=t.get("page", 1),
                 source=table_source))
 
-    fields = fuse_mod.fuse_fields(
-        field_lists + [table_fields], strategy=st["strategy"],
-        source_weights=st["source_weights"],
-        min_confidence=st["min_confidence"],
-        validator_bonus=st["validator_bonus"])
+    fields = fuse_mod.fuse_fields(field_lists + [table_fields],
+                                  **cfg["fusion"])
 
     # K9 spatial anchoring (orchestrator.py:1190-1302): attach bbox/page from
     # word/line/substring/cell matches; HTML lines carry no geometry, so
@@ -799,7 +738,7 @@ def _assemble(url, payload, warc_ts, lang, now, st, file_type, page_dims,
     fields = anchor_mod.anchor_fields(fields, all_text_lines, tables_rows)
 
     fields = _apply_validator_status(fields, now,
-                                     low_confidence=st["low_confidence"])
+                                     cfg["thresholds"]["low_confidence"])
 
     field_checks = [r for f in fields for r in f.get("validators", [])]
     consistency = validators.validate_document_consistency(

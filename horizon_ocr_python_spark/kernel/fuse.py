@@ -35,6 +35,7 @@ DEFAULT_SOURCE_WEIGHTS = {
     "ocr_table": 0.8,     # raster-path table cells — same OCR provenance
 }
 UNKNOWN_SOURCE_WEIGHT = 0.5
+DEFAULT_STRATEGY = "weighted_vote"  # the reference's default selector
 MIN_CONFIDENCE = 0.2          # fuse.py:49
 LOW_CONF_THRESHOLD = 0.15     # fuse.py:135
 VALIDATOR_BONUS = 0.2         # fuse.py:33
@@ -204,7 +205,7 @@ def determine_status(selected: dict, all_candidates: list[dict]) -> str:
     return "confident"
 
 
-def fuse_single_field(fields: list[dict], strategy: str = "weighted_vote",
+def fuse_single_field(fields: list[dict], strategy: str = DEFAULT_STRATEGY,
                       validators: Optional[list[Callable]] = None,
                       source_weights: Optional[dict] = None,
                       min_confidence: float = MIN_CONFIDENCE,
@@ -261,7 +262,7 @@ def fuse_single_field(fields: list[dict], strategy: str = "weighted_vote",
     }
 
 
-def fuse_fields(field_lists: list[list[dict]], strategy: str = "weighted_vote",
+def fuse_fields(field_lists: list[list[dict]], strategy: str = DEFAULT_STRATEGY,
                 validators: Optional[list[Callable]] = None,
                 source_weights: Optional[dict] = None,
                 min_confidence: float = MIN_CONFIDENCE,

@@ -26,6 +26,8 @@ import re
 from html.parser import HTMLParser
 from typing import Any, Optional
 
+from .config import ExtractionConfig
+
 # Tags whose entire subtree is invisible / non-content.
 STRIP_TAGS = frozenset({
     "script", "style", "noscript", "template", "svg", "iframe",
@@ -58,8 +60,6 @@ VOID_TAGS = frozenset({
     "param", "base",
 })
 
-MAX_LINK_DENSITY = 0.33   # nav-like threshold: > 1/3 of chars inside <a>
-MIN_BLOCK_CHARS = 3       # blocks shorter than this are noise
 
 def _collapse_ws(text: str) -> str:
     # " ".join(split()) == regex r"\s+" -> " " + strip (str.split splits on
@@ -253,24 +253,19 @@ class _Extractor(HTMLParser):
         self._flush()
 
 
-def classify_block(block: dict, *,
-                   min_block_chars: int = None,
-                   max_link_density: float = None,
-                   min_text_density: float = None) -> tuple[str, bool, str]:
+def classify_block(block: dict, *, min_block_chars: int,
+                   max_link_density: float,
+                   min_text_density: float) -> tuple[str, bool, str]:
     """Classify a block -> (role, dropped, drop_reason).
 
     Deterministic rules, in order (mirrors the precedence style of
     layout_doclaynet.py:210-251):
     1. inside a boilerplate container -> drop 'boilerplate_container'
     2. heading tags -> keep, role 'heading' (h1 -> 'title')
-    3. link_density > 1/3 -> drop 'link_density' (nav-like block)
-    4. fewer than MIN_BLOCK_CHARS chars -> drop 'too_short'
+    3. link_density > max_link_density -> drop 'link_density' (nav-like)
+    4. fewer than min_block_chars chars -> drop 'too_short'
     5. else keep, role 'list_item' for li/dt/dd, 'paragraph' otherwise
     """
-    if min_block_chars is None:
-        min_block_chars = MIN_BLOCK_CHARS
-    if max_link_density is None:
-        max_link_density = MAX_LINK_DENSITY
     tag = block["tag"]
     if block["boiler"]:
         return ("boilerplate", True, "boilerplate_container")
@@ -283,7 +278,7 @@ def classify_block(block: dict, *,
         return ("noise", True, "too_short")
     # text-density gate (boilerpipe-style chars-per-tag; the second DOM
     # heuristic besides link density). Off by default (min_text_density
-    # None/0) — the byte-identity contract is pinned with it off; crawl
+    # 0) — the byte-identity contract is pinned with it off; crawl
     # configs raise it via extraction.min_text_density to shed markup-heavy
     # widget blocks that pass the link-density test.
     if min_text_density:
@@ -296,14 +291,14 @@ def classify_block(block: dict, *,
 
 
 def extract_html(html: bytes | str, *,
-                 min_block_chars: int = None,
-                 max_link_density: float = None,
-                 min_text_density: float = None) -> dict[str, Any]:
+                 min_block_chars: int = ExtractionConfig.min_block_chars,
+                 max_link_density: float = ExtractionConfig.max_link_density,
+                 min_text_density: float = ExtractionConfig.min_text_density
+                 ) -> dict[str, Any]:
     """Extract main content from one HTML document. Pure and deterministic.
 
-    `min_block_chars` / `max_link_density` / `min_text_density` override the
-    module thresholds (C7 config `extraction.*` reaches this boundary;
-    defaults unchanged — text density defaults OFF).
+    The keyword thresholds are the C7 `extraction.*` settings; their
+    defaults are EngineConfig's (text density defaults OFF).
     """
     if isinstance(html, (bytes, bytearray)):
         html = html.decode("utf-8", errors="replace")

@@ -20,10 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernel.config import Thresholds
 from . import table
 
 LINES_PER_DOC = 5
-CONF_THRESHOLD = 0.90  # thresholds.glyph_reocr_confidence (kernel.config)
+CONF_THRESHOLD = Thresholds.glyph_reocr_confidence
 
 
 def _line_conf(doc_id, line):
@@ -40,9 +41,10 @@ def _line_conf(doc_id, line):
 
 def o9_line_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document line-confidence curation rollup: N synthesized lines per
-    document, keep conf >= 0.90 (the re-OCR acceptance threshold — lines
-    below it were already given their second chance), emit keep counts and
-    the kept-average the curation gate thresholds on."""
+    document, keep conf >= CONF_THRESHOLD (the re-OCR selection threshold,
+    thresholds.glyph_reocr_confidence — lines below it were already given
+    their second chance), emit keep counts and the kept-average the
+    curation gate thresholds on."""
     docs = table(spark, sf_dir, "documents")
     lines = docs.select(
         "doc_id",

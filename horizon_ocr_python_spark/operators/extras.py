@@ -375,13 +375,15 @@ ORDER BY route
 """
 
 
-from ..kernel.document import IMAGE_TEXT_GATE  # noqa: E402
+from ..kernel.config import Thresholds  # noqa: E402
+
+IMAGE_TEXT_GATE = Thresholds.image_text_gate
 
 
 def s3_scanned_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standalone-image OCR acceptance gate as a dataset operator
-    (kernel.document.IMAGE_TEXT_GATE; reference behavior: every image file
-    goes through the page OCR loop, io/image.py:49-79 ->
+    (kernel.config thresholds.image_text_gate; reference behavior: every
+    image file goes through the page OCR loop, io/image.py:49-79 ->
     orchestrator.py:455-513, and only confident recognition yields text).
     Each document carries a deterministic md5-derived recognition
     confidence on the recognizer's scale ([0.5, 1.0); garbage ~0.7, clean

@@ -307,3 +307,38 @@ class TestReviewFindings:
                                    ["url", "response"])
         row = map_recorded_responses(df).collect()[0]
         assert row.status == "ok" and row.number == 2**31 - 1
+
+    def test_declared_dims_bounded_per_dimension(self):
+        # columnCount 0 zeroes the rows*cols product: the row count alone
+        # must not allocate one row list per declared row
+        resp = {"pages": [{"pageNumber": 1, "width": 1, "height": 1,
+                           "lines": [], "words": []}],
+                "tables": [{"rowCount": 3_000_000, "columnCount": 0,
+                            "cells": [],
+                            "boundingRegions": [{"pageNumber": 1,
+                                                 "polygon": [0, 0, 1, 1]}]}]}
+        t = azure_map.map_azure_response(resp)[0]["tables"][0]
+        assert t["n_rows"] == 0 and t["rows"] == []
+
+    def test_out_of_int32_cell_contained(self, spark):
+        import json
+
+        from horizon_ocr_python_spark.engine.azure_stage import (
+            map_recorded_responses)
+
+        region = [{"pageNumber": 1, "polygon": [0, 0, 1, 1]}]
+        resp = {"pages": [{"pageNumber": 1, "width": 1, "height": 1,
+                           "lines": [], "words": []}],
+                "tables": [{"rowCount": 1, "columnCount": 1,
+                            "boundingRegions": region,
+                            "cells": [{"rowIndex": 2**40, "columnIndex": 0,
+                                       "content": "a"},
+                                      {"rowIndex": 0, "columnIndex": 0,
+                                       "rowSpan": 2**40, "content": "b"}]}]}
+        df = spark.createDataFrame([("u", json.dumps(resp))],
+                                   ["url", "response"])
+        row = map_recorded_responses(df).collect()[0]
+        assert row.status == "ok"
+        cells = row.tables[0].cells
+        assert cells[0].row == 2**31 - 1 and cells[1].row_span == 2**31 - 1
+        assert row.tables[0].rows == [["b"]]

@@ -20,6 +20,10 @@ import pytest
 from horizon_ocr_python_spark.kernel import (document, glyphs, png,
                                              preprocess, style_merge,
                                              validators)
+from horizon_ocr_python_spark.kernel.config import (EngineConfig,
+                                                    FusionConfig, load_config)
+
+CFG = EngineConfig().to_dict()
 
 # --- warped-page fixture -----------------------------------------------------
 
@@ -88,7 +92,7 @@ class TestDewarpDefault:
         byte-for-byte through the full raster chain."""
         page = glyphs.render_page(WARP_LINES)
         canvas, _ = warp_into_canvas(page)
-        ocr = document._ocr_page(canvas, 1)
+        ocr = document._ocr_page(canvas, 1, CFG)
         assert [ln["text"] for ln in ocr["text_lines"]] == WARP_TEXT
 
     def test_warped_standalone_image_extracts(self):
@@ -112,13 +116,13 @@ class TestDewarpDefault:
         _, _, raw_score = glyphs.recognize_with_osd(
             preprocess.to_gray(canvas) if canvas.ndim == 3 else canvas)
         floor = round(raw_score + 0.03, 2)  # strictly above the raw score
-        ocr = document._ocr_page(canvas, 1, junk_floor=floor)
+        ocr = document._ocr_page(canvas, 1, CFG, junk_floor=floor)
         assert [ln["text"] for ln in ocr["text_lines"]] == WARP_TEXT
 
     def test_junk_floor_still_skips_quadless_pictures(self):
         rng = np.random.default_rng(7)
         noise = rng.integers(0, 255, (640, 520), dtype=np.uint8)
-        ocr = document._ocr_page(noise, 1, junk_floor=0.99)
+        ocr = document._ocr_page(noise, 1, CFG, junk_floor=0.99)
         assert ocr["text_lines"] == [] and ocr["score"] < 0.99
 
 
@@ -170,7 +174,7 @@ class TestRasterLineObservables:
         ocr_enhanced (O7/O4), observable per line."""
         page = glyphs.render_page([(36, 72, "hazy line of text", 2)]).copy()
         page[page < 128] = 110  # fade the ink toward the threshold
-        ocr = document._ocr_page(page, 1)
+        ocr = document._ocr_page(page, 1, CFG)
         srcs = {tl["source"] for tl in ocr["text_lines"]}
         assert srcs <= {"ocr", "ocr_enhanced"} and srcs
 
@@ -213,7 +217,8 @@ class TestNormalizedValue:
     def _run(self, name, dtype, value):
         f = {"name": name, "data_type": dtype, "value": value,
              "confidence": 0.9, "status": "confident"}
-        document._apply_validator_status([f], now=None)
+        document._apply_validator_status(
+            [f], None, CFG["thresholds"]["low_confidence"])
         return f
 
     def test_date_to_iso(self):
@@ -251,20 +256,23 @@ class TestNormalizedValue:
 class TestAdviceFixes:
     def test_source_weights_merge_over_defaults(self):
         """Round-4 ADVICE: a pre-round-4 config without ocr_fallback must
-        not demote raster sources to the unknown-source weight."""
-        st = document._resolve_settings(
-            {"fusion": {"source_weights": {"donut": 0.3}}}, "weighted_vote")
-        assert st["source_weights"]["donut"] == 0.3
-        assert st["source_weights"]["ocr_fallback"] == 0.8
-        assert st["source_weights"]["ocr_table"] == 0.8
+        not demote raster sources to the unknown-source weight — whether
+        the config is loaded or an EngineConfig is built directly."""
+        user = {"donut": 0.3}
+        for cfg in (load_config(data={"fusion": {"source_weights": user}},
+                                env={}),
+                    EngineConfig(fusion=FusionConfig(source_weights=user))):
+            weights = cfg.to_dict()["fusion"]["source_weights"]
+            assert weights["donut"] == 0.3
+            assert weights["ocr_fallback"] == 0.8
+            assert weights["ocr_table"] == 0.8
 
     def test_first_surviving_page_dims(self):
         """A corrupt page 1 must not pin letter dims onto a real scan."""
         page = glyphs.render_page(WARP_LINES)
-        ocr = document._ocr_page(page, 2)
-        st = document._resolve_settings(None, "weighted_vote")
+        ocr = document._ocr_page(page, 2, CFG)
         doc = document._assemble_from_ocr(
-            "https://x/p.pdf", b"%PDF", None, "", None, st, "pdf",
+            "https://x/p.pdf", b"%PDF", None, "", None, CFG, "pdf",
             [None, ocr])
         assert doc["pages"][1]["metadata"]["width"] == ocr["dims"][0]
         assert doc["reconstruction"]["pages"][0]["width"] == ocr["dims"][0]
@@ -342,7 +350,7 @@ class TestP8P9Ordering:
         faded = (132 + page * (44.0 / 255)).astype(np.uint8)  # ink 132/bg 176
         raw_issues = preprocess.assess_readability(faded)[1]
         assert "blurry" in raw_issues
-        ocr = document._ocr_page(faded, 1)
+        ocr = document._ocr_page(faded, 1, CFG)
         assert "blurry" not in ocr["readability_issues"]
         assert [ln["text"] for ln in ocr["text_lines"]] == WARP_TEXT
 
