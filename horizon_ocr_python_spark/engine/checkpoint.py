@@ -10,10 +10,21 @@ implements the same commit protocol over a parquet directory layout:
       snapshots/snap-<id>/part-*.parquet      (data, written first)
       manifests/manifest-<id>.json            (commit point, written LAST)
 
+A manifest holds the snapshot id, parent, data path and row count, and for
+an extraction run also the per-partition metrics rows
+`{partition_id, n_docs, n_ok, n_err, wall_ms}` (SURVEY §4 custom-work 3),
+as an Iceberg manifest carries per-file record counts. The extraction pass
+fills them as a side output (`partition_metrics`), so they commit in the
+same atomic rename as the data and cost no job of their own;
+`read_metrics` serves them as a table. Compaction and stream-batch
+manifests carry none.
+
 A snapshot exists iff its manifest exists — readers list manifests, never
 raw directories, so a crashed run's half-written snapshot is invisible
-(the same visibility rule as an Iceberg metadata commit). The resume key is
-content-addressed like the reference's response cache
+(the same visibility rule as an Iceberg metadata commit), and so are its
+metrics. Every read passes its known schema (`DOCUMENT_SCHEMA` or the two
+key columns), so no read pays a parquet schema-inference job. The resume
+key is content-addressed like the reference's response cache
 (azure/response_cache.py:66-91: sha256 of content + context).
 """
 
@@ -23,8 +34,15 @@ import json
 import os
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark import Accumulator, AccumulatorParam, SparkContext
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .schema import DOCUMENT_SCHEMA, METRICS_SCHEMA
+
+# What the resume filter reads of a snapshot: its MERGE key.
+KEY_SCHEMA = StructType([DOCUMENT_SCHEMA["url"], DOCUMENT_SCHEMA["content_key"]])
 
 
 def content_key(col) -> Column:
@@ -81,13 +99,14 @@ def active_snapshots(root: str, as_of_snapshot: Optional[int] = None) -> list[di
 
 def committed_keys(spark: SparkSession, root: str) -> Optional[DataFrame]:
     """DataFrame of (url, content_key) across the active snapshots, or
-    None when no snapshot exists. Reads only the two key columns (parquet
-    column pruning keeps this cheap even for wide document rows)."""
+    None when no snapshot exists. Reads only the two key columns, with
+    their known schema: no inference job, and parquet column pruning keeps
+    the scan cheap even for wide document rows."""
     snaps = active_snapshots(root)
     if not snaps:
         return None
     paths = [_snap_dir(root, s["snapshot_id"]) for s in snaps]
-    return spark.read.parquet(*paths).select("url", "content_key")
+    return spark.read.schema(KEY_SCHEMA).parquet(*paths)
 
 
 def filter_uncommitted(pages: DataFrame, committed: Optional[DataFrame]) -> DataFrame:
@@ -102,21 +121,50 @@ def filter_uncommitted(pages: DataFrame, committed: Optional[DataFrame]) -> Data
 
     The `content_key` column stays on the returned rows, also when nothing
     is committed, so the extract stage ships it instead of hashing again.
+    The committed keys are joined as they are: a left-anti join's result
+    does not depend on duplicate build keys, so deduplicating them would
+    only add an aggregate and a shuffle below the broadcast.
     """
     keyed = pages.withColumn("content_key", content_key(F.col("html")))
     if committed is None:
         return keyed
-    return keyed.join(committed.select("url", "content_key").distinct(),
+    return keyed.join(committed.select("url", "content_key"),
                       on=["url", "content_key"], how="left_anti")
 
 
+class _PartitionTotals(AccumulatorParam):
+    """Accumulator value `{partition_id: [n_docs, n_ok, wall_ms]}`, summed
+    element-wise per partition."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, totals, more):
+        for pid, v in more.items():
+            totals[pid] = [a + b for a, b in zip(totals.get(pid, (0, 0, 0.0)), v)]
+        return totals
+
+
+def partition_metrics(sc: SparkContext) -> Accumulator:
+    """A fresh accumulator for one commit's per-partition metrics. The
+    extraction pass adds `{partition_id: (1, status == "ok", extract_ms)}`
+    per document, and `commit_snapshot` writes the totals into the
+    manifest. Spark applies each successful task's update exactly once in
+    a result stage, so the pass must run only in the write job's result
+    stage, as it does in `pipeline.run_extraction`."""
+    return sc.accumulator({}, _PartitionTotals())
+
+
 def commit_snapshot(documents: DataFrame, root: str,
-                    extra: Optional[dict] = None) -> int:
+                    extra: Optional[dict] = None,
+                    metrics: Optional[Accumulator] = None) -> dict:
     """Write a new snapshot: data first, manifest last (the commit point).
 
-    Returns the snapshot id. Task retries inside the write are handled by
-    Spark's output committer; a driver crash before the manifest write
-    leaves an invisible orphan directory, never a torn snapshot.
+    Returns the committed manifest. Task retries inside the write are
+    handled by Spark's output committer; a driver crash before the
+    manifest write leaves an invisible orphan directory, never a torn
+    snapshot. `metrics` is a `partition_metrics` accumulator that the
+    write fills; its rows go into the manifest, so they commit with it.
     """
     snap_id = next_snapshot_id(root)
     data_dir = _snap_dir(root, snap_id)
@@ -131,8 +179,6 @@ def commit_snapshot(documents: DataFrame, root: str,
     # Row count comes from an Observation piggybacked on the write itself —
     # no second scan of the snapshot we just wrote (at 10^12 rows a re-read
     # per commit doubles the output I/O).
-    from pyspark.sql import Observation
-
     obs = Observation(f"commit-snap-{snap_id}")
     observed = documents.observe(obs, F.count(F.lit(1)).alias("n_rows"))
     observed.write.mode("errorifexists").parquet(data_dir)
@@ -144,13 +190,33 @@ def commit_snapshot(documents: DataFrame, root: str,
         "n_rows": n_rows,
         **(extra or {}),
     }
+    if metrics is not None:
+        manifest["metrics"] = [
+            {"partition_id": pid, "n_docs": n, "n_ok": ok, "n_err": n - ok,
+             "wall_ms": ms}
+            for pid, (n, ok, ms) in sorted(metrics.value.items())]
     os.makedirs(_manifest_dir(root), exist_ok=True)
     tmp = os.path.join(_manifest_dir(root), f".manifest-{snap_id}.json.tmp")
     final = os.path.join(_manifest_dir(root), f"manifest-{snap_id}.json")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=2)
     os.replace(tmp, final)  # atomic commit
-    return snap_id
+    return manifest
+
+
+def read_snapshot(spark: SparkSession, root: str, snapshot_id: int) -> DataFrame:
+    """One snapshot's document rows, read with DOCUMENT_SCHEMA."""
+    return spark.read.schema(DOCUMENT_SCHEMA).parquet(_snap_dir(root, snapshot_id))
+
+
+def read_metrics(spark: SparkSession, root: str) -> DataFrame:
+    """The per-partition metrics table (METRICS_SCHEMA) of every committed
+    snapshot, from the manifests: no data file is read and no job runs.
+    Manifests without metrics rows (compaction, stream batches) and
+    uncommitted runs contribute none."""
+    rows = [{**r, "snapshot_id": s["snapshot_id"]}
+            for s in committed_snapshots(root) for r in s.get("metrics", ())]
+    return spark.createDataFrame(rows, METRICS_SCHEMA)
 
 
 def read_table(spark: SparkSession, root: str,
@@ -172,7 +238,7 @@ def read_table(spark: SparkSession, root: str,
 
     dfs = None
     for s in snaps:
-        df = spark.read.parquet(_snap_dir(root, s["snapshot_id"])) \
+        df = read_snapshot(spark, root, s["snapshot_id"]) \
             .withColumn("_snap", F.lit(s["snapshot_id"]))
         dfs = df if dfs is None else dfs.unionByName(df)
     w = Window.partitionBy("url").orderBy(F.col("_snap").desc())
@@ -191,5 +257,5 @@ def compact(spark: SparkSession, root: str) -> Optional[int]:
     if current is None:
         return None
     last = committed_snapshots(root)[-1]["snapshot_id"]
-    return commit_snapshot(current, root,
-                           extra={"base": True, "compacted_through": last})
+    return commit_snapshot(current, root, extra={
+        "base": True, "compacted_through": last})["snapshot_id"]

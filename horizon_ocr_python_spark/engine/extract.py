@@ -12,6 +12,11 @@ Vectorization pattern (SURVEY §2.4 O2): the per-document Python loop lives
 the row dicts; there is no Spark-row-at-a-time Python and no pandas hop.
 Error containment is per row (status/error columns, types.py:317-323) —
 a poisoned document must not kill a 10^12-row task.
+
+The per-partition metrics of a committing run are a side output of the
+same pass: each row adds its outcome and kernel time to a
+`checkpoint.partition_metrics` accumulator, so they cost no job of their
+own. `extracted_metrics` recomputes the same table from document rows.
 """
 
 from __future__ import annotations
@@ -19,7 +24,7 @@ from __future__ import annotations
 import time
 from typing import Optional
 
-from pyspark import TaskContext
+from pyspark import Accumulator, TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -77,7 +82,8 @@ def _doc_to_row(url, warc_ts, lang, doc: dict, content_key: str,
 _SHIPPED = ("url", "warc_ts", "html", "lang", "content_key")
 
 
-def _make_extract_fn(config: Optional[dict] = None):
+def _make_extract_fn(config: Optional[dict] = None,
+                     metrics: Optional[Accumulator] = None):
     """Build the per-row body with the (broadcastable) config dict
     baked into the closure — the C7 contract: executors see a plain dict,
     never driver-side dataclasses. The kernel reads the fusion.*,
@@ -85,22 +91,28 @@ def _make_extract_fn(config: Optional[dict] = None):
 
     def _extract_row(row: dict):
         ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else -1
         t0 = time.perf_counter()
         doc = extract_document(row["url"], row["html"] or b"",
                                row["warc_ts"], row["lang"], config=config)
         ms = (time.perf_counter() - t0) * 1000.0
+        if metrics is not None:
+            metrics.add({pid: (1, int(doc["status"] == "ok"), ms)})
         yield _doc_to_row(row["url"], row["warc_ts"], row["lang"], doc,
-                          row["content_key"],
-                          ctx.partitionId() if ctx is not None else -1, ms)
+                          row["content_key"], pid, ms)
 
     return _extract_row
 
 
-def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
+def extract_stage(pages: DataFrame, config: Optional[dict] = None,
+                  metrics: Optional[Accumulator] = None) -> DataFrame:
     """Run the fused extraction stage over a pages DataFrame.
 
     `config` is an EngineConfig.to_dict() (kernel.config), handed to the
-    kernel as is; omitted -> EngineConfig's defaults.
+    kernel as is; omitted -> EngineConfig's defaults. `metrics` is a
+    `checkpoint.partition_metrics` accumulator the pass adds each row to;
+    every evaluation of the result adds again, so it is only for a result
+    evaluated once, like the commit's write.
 
     Column pruning: only (url, warc_ts, html, lang) are shipped to Python —
     the ground-truth `text` column (test-only) is never read here, so the
@@ -115,7 +127,7 @@ def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
     # caller's shuffle: AQE replaces a Project over an empty shuffle along
     # with the stage below, losing run_extraction's input Observation.
     shipped = [c for c in pages.columns if c in _SHIPPED]
-    return map_rows(pages.select(*shipped), _make_extract_fn(config),
+    return map_rows(pages.select(*shipped), _make_extract_fn(config, metrics),
                     DOCUMENT_SCHEMA)
 
 
@@ -152,8 +164,12 @@ def extracted_metrics(documents: DataFrame,
     """Per-partition lineage/metrics table (SURVEY §4 custom-work 3):
     (partition_id, n_docs, n_ok, n_err, wall_ms, snapshot_id).
 
-    Pure relational aggregation over the stage output — one map-side-combined
-    groupBy, no extra pass over the payloads.
+    The lazy table of a run without `output_root`, or of any documents
+    DataFrame: a relational aggregation over the stage output, one
+    map-side-combined groupBy, no extra pass over the payloads. A
+    committing run does not call it: its rows are a side output of the
+    extraction pass, committed in the manifest (`checkpoint.read_metrics`
+    serves them with these columns and types, schema.METRICS_SCHEMA).
     """
     from pyspark.sql import functions as F
 

@@ -2,7 +2,10 @@
 repartition -> fused extract -> commit snapshot + metrics.
 
 The Spark lifecycle target of SURVEY §3.4. Exactly one shuffle (the
-repartition); the extraction stage and the sinks are narrow.
+repartition); the extraction stage and the sink are narrow. A committing
+run is one write job (plus its shuffle map stage and, when resuming, the
+broadcast of the committed keys): the per-partition metrics ride on the
+extraction pass and commit in the snapshot's manifest.
 """
 
 from __future__ import annotations
@@ -32,13 +35,19 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
                    output_root: Optional[str] = None,
                    resume: bool = True,
                    config: Optional[dict] = None) -> RunResult:
-    """Run the pipeline. With `output_root`, commits a snapshot and appends
-    per-partition metrics alongside (resumable); without, returns the lazy
-    documents DataFrame (caller materializes).
+    """Run the pipeline. Without `output_root`, returns the lazy documents
+    DataFrame and its lazy `extract.extracted_metrics` table (caller
+    materializes).
 
-    With `output_root`, `n_skipped_committed` is the number of input rows
-    the resume filter dropped: an Observation counts the input rows on the
-    commit's own pass, minus the rows the snapshot committed. No extra scan.
+    With `output_root`, commits a snapshot (resumable) in one write job.
+    The per-partition metrics rows are a side output of that job's
+    extraction pass (a `checkpoint.partition_metrics` accumulator) and are
+    committed in the snapshot's manifest, so they exist iff the snapshot
+    does. `documents` reads the new snapshot and `metrics` every committed
+    snapshot's rows (`checkpoint.read_metrics`), both without a job.
+    `n_skipped_committed` is the number of input rows the resume filter
+    dropped: an Observation counts the input rows on the commit's own
+    pass, minus the rows the snapshot committed. No extra scan.
     """
     spark = pages.sparkSession
 
@@ -58,22 +67,21 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
 
     n = num_partitions or partitions_for(spark, rows_hint)
     distributed = salted_repartition(todo, n)
-    documents = extract_stage(distributed, config=config)
 
     if not output_root:
+        documents = extract_stage(distributed, config=config)
         return RunResult(documents=documents,
                          metrics=extracted_metrics(documents), snapshot_id=None)
 
-    snap_id = ckpt.commit_snapshot(documents, output_root)
-    snap = next(s for s in ckpt.committed_snapshots(output_root)
-                if s["snapshot_id"] == snap_id)
-    committed_docs = spark.read.parquet(snap["path"])
-    metrics = extracted_metrics(committed_docs, snapshot_id=snap_id)
-    metrics.write.mode("append").parquet(f"{output_root}/metrics")
-    return RunResult(documents=committed_docs,
-                     metrics=spark.read.parquet(f"{output_root}/metrics"),
-                     snapshot_id=snap_id,
-                     n_skipped_committed=n_input.get["n"] - snap["n_rows"])
+    metrics = ckpt.partition_metrics(spark.sparkContext)
+    snap = ckpt.commit_snapshot(
+        extract_stage(distributed, config=config, metrics=metrics),
+        output_root, metrics=metrics)
+    return RunResult(
+        documents=ckpt.read_snapshot(spark, output_root, snap["snapshot_id"]),
+        metrics=ckpt.read_metrics(spark, output_root),
+        snapshot_id=snap["snapshot_id"],
+        n_skipped_committed=n_input.get["n"] - snap["n_rows"])
 
 
 def pages_dataframe(spark: SparkSession, n_rows: int, seed: int = 42,

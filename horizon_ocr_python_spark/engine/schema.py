@@ -233,9 +233,9 @@ VALIDATION_SCHEMA = StructType([
     StructField("issues", ArrayType(StringType()), True),
 ])
 
-# Output of the fused extraction stage. `partition_id` and `extract_ms` feed
-# the per-partition lineage/metrics table (SURVEY §4 custom-work 3) without a
-# second schema or side channel.
+# Output of the fused extraction stage. `partition_id` and `extract_ms` keep
+# the per-partition lineage/metrics table (SURVEY §4 custom-work 3)
+# recomputable from the documents themselves (`extract.extracted_metrics`).
 DOCUMENT_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("doc_id", StringType(), False),
@@ -259,6 +259,18 @@ DOCUMENT_SCHEMA = StructType([
     StructField("normalized", NORMALIZED_SCHEMA, True),
     StructField("partition_id", IntegerType(), True),
     StructField("extract_ms", DoubleType(), True),
+])
+
+# The per-partition lineage/metrics table: one row per extraction partition
+# of a committed run. The columns and types of `extract.extracted_metrics`
+# read back from parquet, so every column is nullable.
+METRICS_SCHEMA = StructType([
+    StructField("partition_id", IntegerType(), True),
+    StructField("n_docs", LongType(), True),
+    StructField("n_ok", LongType(), True),
+    StructField("n_err", LongType(), True),
+    StructField("wall_ms", DoubleType(), True),
+    StructField("snapshot_id", LongType(), True),
 ])
 
 

@@ -1,13 +1,18 @@
 """Engine integration: fused extraction stage, partitioning, checkpoint/resume,
 metrics — on a live local SparkSession."""
 
+import json
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from horizon_ocr_python_spark import plans
 from horizon_ocr_python_spark.engine import checkpoint as ckpt
 from horizon_ocr_python_spark.engine.extract import extract_stage, extracted_metrics
 from horizon_ocr_python_spark.engine.partitioning import salted_repartition
 from horizon_ocr_python_spark.engine.pipeline import pages_dataframe, run_extraction
+from horizon_ocr_python_spark.engine.schema import METRICS_SCHEMA
 
 N_PAGES = 80
 
@@ -167,7 +172,7 @@ class TestCheckpointResume:
         assert table.select("url").distinct().count() == N_PAGES
 
         # metrics accumulated for both snapshots
-        metrics = spark.read.parquet(f"{root}/metrics")
+        metrics = ckpt.read_metrics(spark, root)
         snaps = {r.snapshot_id for r in metrics.select("snapshot_id").distinct().collect()}
         assert snaps == {1, 2}
 
@@ -186,6 +191,9 @@ class TestCheckpointResume:
         snap2 = spark.read.parquet(f"{root}/snapshots/snap-2")
         assert snap2.count() == 0  # everything committed -> nothing re-extracted
         assert res.snapshot_id == 2
+        # nor any metrics row: the extraction pass never ran
+        assert ckpt.committed_snapshots(root)[-1]["metrics"] == []
+        assert {r.snapshot_id for r in res.metrics.collect()} == {1}
 
     def test_crash_before_manifest_is_invisible(self, spark, pages, tmp_path):
         root = str(tmp_path / "out3")
@@ -213,6 +221,119 @@ class TestCheckpointResume:
         assert not os.path.exists(f"{orphan}/part-half-written.parquet")
 
 
+def _metric_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _snapshot_metrics(spark, root, snap_id):
+    """`extracted_metrics` recomputed over a committed snapshot's rows."""
+    return _metric_rows(extracted_metrics(
+        ckpt.read_snapshot(spark, root, snap_id), snapshot_id=snap_id))
+
+
+class TestPartitionMetrics:
+    """A committing run's per-partition metrics are a side output of the
+    extraction pass, committed in the snapshot's manifest."""
+
+    def test_side_output_equals_recomputed(self, spark, pages, tmp_path):
+        root = str(tmp_path / "m")
+        run_extraction(pages.limit(30), output_root=root, num_partitions=4)
+        res = run_extraction(pages, output_root=root, num_partitions=4)
+        assert res.metrics.schema == METRICS_SCHEMA
+        for snap in ckpt.committed_snapshots(root):
+            sid = snap["snapshot_id"]
+            rows = _metric_rows(res.metrics.filter(F.col("snapshot_id") == sid))
+            assert rows == _snapshot_metrics(spark, root, sid)
+            assert sum(r["n_docs"] for r in snap["metrics"]) == snap["n_rows"]
+        assert sum(r[1] for r in _metric_rows(res.metrics)) == N_PAGES
+
+    def test_contained_error_counts_in_n_err(self, spark, tmp_path):
+        from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA
+
+        df = spark.createDataFrame([
+            ("u://good", None, b"<html><body><p>fine text here</p></body></html>",
+             "fine text here", "en"),
+            # a truncated PNG: the kernel contains the decode error in the row
+            ("u://bad", None, b"\x89PNG\r\n\x1a\n" + bytes(20), "", "en"),
+        ], PAGES_SCHEMA)
+        root = str(tmp_path / "err")
+        run_extraction(df, output_root=root, num_partitions=2)
+        rows = ckpt.read_metrics(spark, root).collect()
+        assert (sum(r.n_docs for r in rows), sum(r.n_ok for r in rows),
+                sum(r.n_err for r in rows)) == (2, 1, 1)
+        assert _metric_rows(ckpt.read_metrics(spark, root)) == \
+            _snapshot_metrics(spark, root, 1)
+
+    def test_crashed_run_contributes_none(self, spark, pages, tmp_path):
+        """A run that wrote its data but died before the manifest rename:
+        its extraction filled an accumulator, yet no metrics row is
+        visible, and the retry commits only its own rows."""
+        root = str(tmp_path / "crash")
+        run_extraction(pages.limit(5), output_root=root, num_partitions=2)
+        before = _metric_rows(ckpt.read_metrics(spark, root))
+        lost = ckpt.partition_metrics(spark.sparkContext)
+        extract_stage(pages.limit(12), metrics=lost).write.parquet(
+            f"{root}/snapshots/snap-2")
+        assert sum(n for n, _, _ in lost.value.values()) == 12
+        assert _metric_rows(ckpt.read_metrics(spark, root)) == before
+        res = run_extraction(pages.limit(12), output_root=root,
+                             num_partitions=2)
+        assert sum(r.n_docs for r in res.metrics.collect()) == 5 + 7
+
+    def test_manifests_without_rows_read_empty(self, spark, pages, tmp_path):
+        # compaction and stream-batch manifests carry no metrics rows
+        root = str(tmp_path / "bare")
+        run_extraction(pages.limit(5), output_root=root, num_partitions=2)
+        ckpt.compact(spark, root)
+        ckpt.commit_snapshot(extract_stage(pages.limit(3)), root,
+                             extra={"stream_batch": 0})
+        assert [s.get("metrics") is None
+                for s in ckpt.committed_snapshots(root)] == [False, True, True]
+        assert {r.snapshot_id for r in ckpt.read_metrics(spark, root).collect()} == {1}
+        # hand-written manifests with an id only
+        hand = tmp_path / "hand" / "manifests"
+        hand.mkdir(parents=True)
+        for i in (1, 2):
+            (hand / f"manifest-{i}.json").write_text(json.dumps({"snapshot_id": i}))
+        metrics = ckpt.read_metrics(spark, str(tmp_path / "hand"))
+        assert metrics.schema == METRICS_SCHEMA and metrics.count() == 0
+        assert ckpt.read_metrics(spark, str(tmp_path / "none")).count() == 0
+
+
+class TestJobCount:
+    """The fixed per-job cost: a committing run is its write job, the
+    write's shuffle map stage and, when resuming, the broadcast of the
+    committed keys. No schema inference, metrics or re-read job."""
+
+    @staticmethod
+    def _jobs(spark, fn) -> int:
+        sc = spark.sparkContext
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_committing_run_jobs(self, spark, pages, tmp_path):
+        path = str(tmp_path / "pages")
+        pages.write.parquet(path)
+        on_disk = spark.read.parquet(path)  # schema inferred here, untracked
+        urls = [r.url for r in pages.select("url").limit(40).collect()]
+        root = str(tmp_path / "resumed")
+        run_extraction(on_disk.filter(F.col("url").isin(urls)),
+                       output_root=root, num_partitions=4)
+
+        resumed = self._jobs(spark, lambda: run_extraction(
+            on_disk, output_root=root, num_partitions=4))
+        fresh = self._jobs(spark, lambda: run_extraction(
+            on_disk, output_root=str(tmp_path / "fresh"), num_partitions=4))
+        assert resumed <= 3, resumed
+        assert fresh <= 2, fresh
+        assert ckpt.read_table(spark, root).count() == N_PAGES
+
+
 class TestPlanShape:
     def test_text_column_pruned(self, spark, tmp_path, pages):
         """The extraction stage must not read the ground-truth text column:
@@ -226,3 +347,23 @@ class TestPlanShape:
         read_schema = re.search(r"ReadSchema: ([^\n]+)", plan).group(1)
         assert "text" not in read_schema, read_schema
         assert "html" in read_schema
+
+    def test_resume_build_side_not_deduplicated(self, spark, pages, tmp_path):
+        """The anti-join's committed side is the key scan under its
+        BroadcastExchange: no aggregate, no shuffle (duplicate build keys
+        do not change a left-anti join's result)."""
+        root = str(tmp_path / "keys")
+        run_extraction(pages.limit(10), output_root=root, num_partitions=2)
+        todo = ckpt.filter_uncommitted(pages, ckpt.committed_keys(spark, root))
+        lines = plans.physical_plan(todo).splitlines()
+        assert any("LeftAnti" in ln for ln in lines), lines
+        at = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+        depth = lines[at].find("+-")
+        below = []
+        for ln in lines[at + 1:]:
+            if ln.find("+-") <= depth:
+                break
+            below.append(ln)
+        assert any("FileScan parquet" in ln for ln in below), below
+        assert not any("HashAggregate" in ln or "Exchange" in ln
+                       for ln in below), below
