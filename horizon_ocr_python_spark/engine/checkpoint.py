@@ -7,17 +7,29 @@ its keys. This container has no Iceberg runtime jar, so this module
 implements the same commit protocol over a parquet directory layout:
 
     <root>/
-      snapshots/snap-<id>/part-*.parquet      (data, written first)
-      manifests/manifest-<id>.json            (commit point, written LAST)
+      snapshots/snap-<id>/part-<pid:05d>.parquet  (data, written first)
+      manifests/manifest-<id>.json                (commit point, written LAST)
 
-A manifest holds the snapshot id, parent, data path and row count, and for
-an extraction run also the per-partition metrics rows
-`{partition_id, n_docs, n_ok, n_err, wall_ms}` (SURVEY §4 custom-work 3),
-as an Iceberg manifest carries per-file record counts. The extraction pass
-fills them as a side output (`partition_metrics`), so they commit in the
-same atomic rename as the data and cost no job of their own;
-`read_metrics` serves them as a table. Compaction and stream-batch
-manifests carry none.
+`commit_snapshot` is the one snapshot writer, and its Spark job is the
+commit's only job. Each task writes its partition's DOCUMENT_SCHEMA rows
+with `pyarrow.parquet`, batch by batch, into one `part-<pid>.parquet` per
+non-empty partition: there is no `_SUCCESS` marker and no `.crc` file. A
+task writes to a hidden file unique to its attempt, then renames it over
+the part file, so a retried or speculative attempt rewrites the same file;
+before the manifest rename the driver deletes the hidden files that failed
+attempts left. A commit without rows writes one schema-only
+`part-00000.parquet`, so every snapshot reads, also by schema inference.
+The output root is a local (or locally mounted) path: the tasks and the
+driver write it with `os` calls.
+
+A manifest holds the snapshot id, parent, data path and row count (the
+tasks' summed `n_docs`). When the commit extracted its documents itself
+(an extraction run or a stream batch) it also holds the per-partition
+metrics rows `{partition_id, n_docs, n_ok, n_err, wall_ms}` (SURVEY §4
+custom-work 3), as an Iceberg manifest carries per-file record counts:
+the writing tasks total them, so they commit in the same atomic rename as
+the data and cost no job of their own; `read_metrics` serves them as a
+table. Compaction manifests carry none.
 
 A snapshot exists iff its manifest exists — readers list manifests, never
 raw directories, so a crashed run's half-written snapshot is invisible
@@ -32,17 +44,29 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Optional
+import shutil
+from typing import Callable, Iterable, Optional
 
-from pyspark import Accumulator, AccumulatorParam, SparkContext
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import TaskContext
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from .schema import DOCUMENT_SCHEMA, METRICS_SCHEMA
+from .schema import DOCUMENT_SCHEMA, METRICS_SCHEMA, row_batches
 
 # What the resume filter reads of a snapshot: its MERGE key.
 KEY_SCHEMA = StructType([DOCUMENT_SCHEMA["url"], DOCUMENT_SCHEMA["content_key"]])
+# What a commit task returns: its partition's totals (`write_part`).
+_TOTALS_SCHEMA = StructType([METRICS_SCHEMA[c] for c in
+                             ("partition_id", "n_docs", "n_ok", "wall_ms")])
+_TOTALS_ARROW = to_arrow_schema(_TOTALS_SCHEMA)
+_DOCUMENT_ARROW = to_arrow_schema(DOCUMENT_SCHEMA)
+# Readers use the Parquet schema; the footer's copy of the Arrow schema
+# would add ~14 KB to every part file.
+_PARQUET_OPTIONS = {"store_schema": False}
 
 
 def content_key(col) -> Column:
@@ -132,39 +156,84 @@ def filter_uncommitted(pages: DataFrame, committed: Optional[DataFrame]) -> Data
                       on=["url", "content_key"], how="left_anti")
 
 
-class _PartitionTotals(AccumulatorParam):
-    """Accumulator value `{partition_id: [n_docs, n_ok, wall_ms]}`, summed
-    element-wise per partition."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, totals, more):
-        for pid, v in more.items():
-            totals[pid] = [a + b for a, b in zip(totals.get(pid, (0, 0, 0.0)), v)]
-        return totals
+def _part_file(data_dir: str, partition_id: int) -> str:
+    return os.path.join(data_dir, f"part-{partition_id:05d}.parquet")
 
 
-def partition_metrics(sc: SparkContext) -> Accumulator:
-    """A fresh accumulator for one commit's per-partition metrics. The
-    extraction pass adds `{partition_id: (1, status == "ok", extract_ms)}`
-    per document, and `commit_snapshot` writes the totals into the
-    manifest. Spark applies each successful task's update exactly once in
-    a result stage, so the pass must run only in the write job's result
-    stage, as it does in `pipeline.run_extraction`."""
-    return sc.accumulator({}, _PartitionTotals())
+def _as_documents(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """A document batch in DOCUMENT_SCHEMA's own Arrow types. Spark hands
+    over file-read rows with every nested field nullable, which
+    `RecordBatch.cast` refuses to narrow; the memory layout is the same,
+    so each column is viewed as its declared type."""
+    if batch.schema.equals(_DOCUMENT_ARROW):
+        return batch
+    return pa.RecordBatch.from_arrays(
+        [batch.column(f.name).view(f.type) for f in _DOCUMENT_ARROW],
+        schema=_DOCUMENT_ARROW)
 
 
-def commit_snapshot(documents: DataFrame, root: str,
+def write_part(data_dir: str, partition_id: int, attempt: int,
+               batches: Iterable[pa.RecordBatch],
+               row_fn: Optional[Callable[[dict], Iterable[dict]]] = None
+               ) -> Optional[dict]:
+    """The commit job's task body: write one partition's document rows as
+    `part-<partition_id>.parquet` and return its totals
+    `{partition_id, n_docs, n_ok, wall_ms}`, or None when it has no row.
+
+    `batches` are the partition's input batches. With `row_fn` they are
+    input rows that `row_fn` turns into document rows (the `map_rows` row
+    contract); without, they already are document rows. Each batch is
+    written as it comes to a hidden file unique to `attempt`, which is
+    renamed over the part file at the end, so a retried or speculative
+    attempt rewrites the same file and a failed one leaves only a hidden
+    file, which the commit deletes."""
+    if row_fn is not None:
+        batches = row_batches(batches, row_fn, _DOCUMENT_ARROW)
+    tmp = os.path.join(data_dir, f".part-{partition_id:05d}.attempt-{attempt}")
+    n_docs = n_ok = 0
+    wall_ms = 0.0
+    writer = None
+    try:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            batch = _as_documents(batch)
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, _DOCUMENT_ARROW,
+                                          **_PARQUET_OPTIONS)
+            writer.write_batch(batch)
+            n_docs += batch.num_rows
+            n_ok += batch.column("status").to_pylist().count("ok")
+            for ms in batch.column("extract_ms").to_pylist():
+                wall_ms += ms or 0.0
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return None
+    os.replace(tmp, _part_file(data_dir, partition_id))
+    return {"partition_id": partition_id, "n_docs": n_docs, "n_ok": n_ok,
+            "wall_ms": wall_ms}
+
+
+def commit_snapshot(rows: DataFrame, root: str,
                     extra: Optional[dict] = None,
-                    metrics: Optional[Accumulator] = None) -> dict:
+                    row_fn: Optional[Callable[[dict], Iterable[dict]]] = None
+                    ) -> dict:
     """Write a new snapshot: data first, manifest last (the commit point).
+    The one snapshot writer: extraction runs, stream batches and
+    compaction all commit through it.
 
-    Returns the committed manifest. Task retries inside the write are
-    handled by Spark's output committer; a driver crash before the
-    manifest write leaves an invisible orphan directory, never a torn
-    snapshot. `metrics` is a `partition_metrics` accumulator that the
-    write fills; its rows go into the manifest, so they commit with it.
+    One Spark job: each task writes its partition's rows with `write_part`
+    and returns its totals, which the driver collects. `rows` are document
+    rows (DOCUMENT_SCHEMA), or, with `row_fn`, the input rows of the
+    per-row function that extracts them (`extract.extraction`), so each
+    document is written by the task that made it. The manifest records
+    `n_rows` = the summed `n_docs`; with `row_fn` it also carries the
+    per-partition metrics rows, which then commit with the data.
+
+    Returns the committed manifest. A driver crash before the manifest
+    write leaves an invisible orphan directory, never a torn snapshot.
     """
     snap_id = next_snapshot_id(root)
     data_dir = _snap_dir(root, snap_id)
@@ -174,27 +243,47 @@ def commit_snapshot(documents: DataFrame, root: str,
     # the rewrite succeeds (this is exactly Iceberg's orphan-file story).
     if os.path.isdir(data_dir) and not os.path.exists(
             os.path.join(_manifest_dir(root), f"manifest-{snap_id}.json")):
-        import shutil
         shutil.rmtree(data_dir)
-    # Row count comes from an Observation piggybacked on the write itself —
-    # no second scan of the snapshot we just wrote (at 10^12 rows a re-read
-    # per commit doubles the output I/O).
-    obs = Observation(f"commit-snap-{snap_id}")
-    observed = documents.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    observed.write.mode("errorifexists").parquet(data_dir)
-    n_rows = int(obs.get["n_rows"])
+    os.makedirs(data_dir)
+
+    def task(batches):
+        ctx = TaskContext.get()
+        totals = write_part(data_dir, ctx.partitionId(), ctx.taskAttemptId(),
+                            batches, row_fn)
+        if totals is not None:
+            yield pa.RecordBatch.from_pylist([totals], schema=_TOTALS_ARROW)
+
+    totals = [r.asDict() for r in rows.mapInArrow(task, _TOTALS_SCHEMA).collect()]
+    return _publish(root, snap_id, totals, extra,
+                    with_metrics=row_fn is not None)
+
+
+def _publish(root: str, snap_id: int, totals: list[dict],
+             extra: Optional[dict], with_metrics: bool) -> dict:
+    """The driver's half of a commit, after every task has written its
+    part file: delete the hidden files of failed attempts, give a snapshot
+    without rows one schema-only part file (so it still reads, also with
+    schema inference), then write the manifest and rename it into place."""
+    data_dir = _snap_dir(root, snap_id)
+    for name in os.listdir(data_dir):
+        if name.startswith("."):
+            os.remove(os.path.join(data_dir, name))
+    if not totals:
+        pq.write_table(_DOCUMENT_ARROW.empty_table(), _part_file(data_dir, 0),
+                       **_PARQUET_OPTIONS)
     manifest = {
         "snapshot_id": snap_id,
         "parent_id": snap_id - 1 if snap_id > 1 else None,
         "path": data_dir,
-        "n_rows": n_rows,
+        "n_rows": sum(t["n_docs"] for t in totals),
         **(extra or {}),
     }
-    if metrics is not None:
+    if with_metrics:
         manifest["metrics"] = [
-            {"partition_id": pid, "n_docs": n, "n_ok": ok, "n_err": n - ok,
-             "wall_ms": ms}
-            for pid, (n, ok, ms) in sorted(metrics.value.items())]
+            {"partition_id": t["partition_id"], "n_docs": t["n_docs"],
+             "n_ok": t["n_ok"], "n_err": t["n_docs"] - t["n_ok"],
+             "wall_ms": t["wall_ms"]}
+            for t in sorted(totals, key=lambda t: t["partition_id"])]
     os.makedirs(_manifest_dir(root), exist_ok=True)
     tmp = os.path.join(_manifest_dir(root), f".manifest-{snap_id}.json.tmp")
     final = os.path.join(_manifest_dir(root), f"manifest-{snap_id}.json")

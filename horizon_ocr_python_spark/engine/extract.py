@@ -13,18 +13,20 @@ the row dicts; there is no Spark-row-at-a-time Python and no pandas hop.
 Error containment is per row (status/error columns, types.py:317-323) —
 a poisoned document must not kill a 10^12-row task.
 
-The per-partition metrics of a committing run are a side output of the
-same pass: each row adds its outcome and kernel time to a
-`checkpoint.partition_metrics` accumulator, so they cost no job of their
-own. `extracted_metrics` recomputes the same table from document rows.
+A committing run does not map rows into a DataFrame at all: it hands
+the stage's two halves (`extraction`: the shipped pages and the per-row
+function) to `checkpoint.commit_snapshot`, whose tasks write the documents
+they extract straight to the snapshot's part files, so no document goes
+back into the JVM. Those tasks also total the per-partition metrics;
+`extracted_metrics` recomputes the same table from document rows.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Optional
+from typing import Callable, Iterable, Optional
 
-from pyspark import Accumulator, TaskContext
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -82,8 +84,7 @@ def _doc_to_row(url, warc_ts, lang, doc: dict, content_key: str,
 _SHIPPED = ("url", "warc_ts", "html", "lang", "content_key")
 
 
-def _make_extract_fn(config: Optional[dict] = None,
-                     metrics: Optional[Accumulator] = None):
+def _make_extract_fn(config: Optional[dict] = None):
     """Build the per-row body with the (broadcastable) config dict
     baked into the closure — the C7 contract: executors see a plain dict,
     never driver-side dataclasses. The kernel reads the fusion.*,
@@ -96,23 +97,22 @@ def _make_extract_fn(config: Optional[dict] = None,
         doc = extract_document(row["url"], row["html"] or b"",
                                row["warc_ts"], row["lang"], config=config)
         ms = (time.perf_counter() - t0) * 1000.0
-        if metrics is not None:
-            metrics.add({pid: (1, int(doc["status"] == "ok"), ms)})
         yield _doc_to_row(row["url"], row["warc_ts"], row["lang"], doc,
                           row["content_key"], pid, ms)
 
     return _extract_row
 
 
-def extract_stage(pages: DataFrame, config: Optional[dict] = None,
-                  metrics: Optional[Accumulator] = None) -> DataFrame:
-    """Run the fused extraction stage over a pages DataFrame.
+def extraction(pages: DataFrame, config: Optional[dict] = None
+               ) -> tuple[DataFrame, Callable[[dict], Iterable[dict]]]:
+    """The extraction stage as its two halves: the pages rows shipped to
+    Python, and the per-row function that turns each into a
+    DOCUMENT_SCHEMA row. `extract_stage` maps one over the other;
+    `checkpoint.commit_snapshot` takes both and writes what the function
+    yields.
 
     `config` is an EngineConfig.to_dict() (kernel.config), handed to the
-    kernel as is; omitted -> EngineConfig's defaults. `metrics` is a
-    `checkpoint.partition_metrics` accumulator the pass adds each row to;
-    every evaluation of the result adds again, so it is only for a result
-    evaluated once, like the commit's write.
+    kernel as is; omitted -> EngineConfig's defaults.
 
     Column pruning: only (url, warc_ts, html, lang) are shipped to Python —
     the ground-truth `text` column (test-only) is never read here, so the
@@ -127,8 +127,15 @@ def extract_stage(pages: DataFrame, config: Optional[dict] = None,
     # caller's shuffle: AQE replaces a Project over an empty shuffle along
     # with the stage below, losing run_extraction's input Observation.
     shipped = [c for c in pages.columns if c in _SHIPPED]
-    return map_rows(pages.select(*shipped), _make_extract_fn(config, metrics),
-                    DOCUMENT_SCHEMA)
+    return pages.select(*shipped), _make_extract_fn(config)
+
+
+def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
+    """Run the fused extraction stage over a pages DataFrame: the lazy
+    documents DataFrame (DOCUMENT_SCHEMA) of `extraction`'s two halves.
+    A run without `output_root` returns it; a committing run writes the
+    same rows through `checkpoint.commit_snapshot` instead."""
+    return map_rows(*extraction(pages, config), DOCUMENT_SCHEMA)
 
 
 def with_json_output(documents: DataFrame) -> DataFrame:
@@ -167,9 +174,10 @@ def extracted_metrics(documents: DataFrame,
     The lazy table of a run without `output_root`, or of any documents
     DataFrame: a relational aggregation over the stage output, one
     map-side-combined groupBy, no extra pass over the payloads. A
-    committing run does not call it: its rows are a side output of the
-    extraction pass, committed in the manifest (`checkpoint.read_metrics`
-    serves them with these columns and types, schema.METRICS_SCHEMA).
+    committing run does not call it: its commit tasks total the same rows
+    as they write them, and the manifest carries them
+    (`checkpoint.read_metrics` serves them with these columns and types,
+    schema.METRICS_SCHEMA).
     """
     from pyspark.sql import functions as F
 

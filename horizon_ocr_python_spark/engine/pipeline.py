@@ -3,9 +3,10 @@ repartition -> fused extract -> commit snapshot + metrics.
 
 The Spark lifecycle target of SURVEY §3.4. Exactly one shuffle (the
 repartition); the extraction stage and the sink are narrow. A committing
-run is one write job (plus its shuffle map stage and, when resuming, the
-broadcast of the committed keys): the per-partition metrics ride on the
-extraction pass and commit in the snapshot's manifest.
+run is one job (plus its shuffle map stage and, when resuming, the
+broadcast of the committed keys): each task extracts its partition and
+writes the documents to the snapshot's part file itself, and the
+per-partition metrics it returns commit in the snapshot's manifest.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..kernel.config import EngineConfig
 from . import checkpoint as ckpt
-from .extract import extract_stage, extracted_metrics
+from .extract import extract_stage, extracted_metrics, extraction
 from .partitioning import partitions_for, salted_repartition, with_length_cap
 
 
@@ -39,11 +40,13 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     DataFrame and its lazy `extract.extracted_metrics` table (caller
     materializes).
 
-    With `output_root`, commits a snapshot (resumable) in one write job.
-    The per-partition metrics rows are a side output of that job's
-    extraction pass (a `checkpoint.partition_metrics` accumulator) and are
-    committed in the snapshot's manifest, so they exist iff the snapshot
-    does. `documents` reads the new snapshot and `metrics` every committed
+    With `output_root`, commits a snapshot (resumable) in one job: the
+    shipped pages and the extraction's per-row function go to
+    `checkpoint.commit_snapshot`, so each document is written to a part
+    file by the task that extracted it and never goes back into the JVM.
+    The per-partition metrics rows are those tasks' totals, committed in
+    the snapshot's manifest, so they exist iff the snapshot does.
+    `documents` reads the new snapshot and `metrics` every committed
     snapshot's rows (`checkpoint.read_metrics`), both without a job.
     `n_skipped_committed` is the number of input rows the resume filter
     dropped: an Observation counts the input rows on the commit's own
@@ -73,10 +76,8 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
         return RunResult(documents=documents,
                          metrics=extracted_metrics(documents), snapshot_id=None)
 
-    metrics = ckpt.partition_metrics(spark.sparkContext)
-    snap = ckpt.commit_snapshot(
-        extract_stage(distributed, config=config, metrics=metrics),
-        output_root, metrics=metrics)
+    shipped, row_fn = extraction(distributed, config=config)
+    snap = ckpt.commit_snapshot(shipped, output_root, row_fn=row_fn)
     return RunResult(
         documents=ckpt.read_snapshot(spark, output_root, snap["snapshot_id"]),
         metrics=ckpt.read_metrics(spark, output_root),

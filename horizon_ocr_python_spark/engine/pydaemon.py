@@ -94,6 +94,7 @@ try:  # pragma: no cover
     import numpy  # noqa: F401
     import pandas  # noqa: F401
     import pyarrow  # noqa: F401
+    import pyarrow.parquet  # noqa: F401  (the commit tasks' writer)
 except Exception:  # noqa: BLE001
     pass
 

@@ -288,11 +288,18 @@ def map_rows(df: DataFrame, fn: Callable[[dict], Iterable[dict]],
     One batch in, one batch out keeps a task's memory bounded (SURVEY §2.4
     O2; the reference's lazy page iterator, io/pdf.py:86-115)."""
     arrow_schema = to_arrow_schema(schema)
+    return df.mapInArrow(lambda batches: row_batches(batches, fn, arrow_schema),
+                         schema)
 
-    def body(batches):
-        for batch in batches:
-            rows = [out for row in batch.to_pylist() for out in fn(row)]
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return df.mapInArrow(body, schema)
+def row_batches(batches: Iterable[pa.RecordBatch],
+                fn: Callable[[dict], Iterable[dict]],
+                arrow_schema: pa.Schema) -> Iterable[pa.RecordBatch]:
+    """The body of `map_rows`: one output batch per input batch that
+    yields rows, converted by `RecordBatch.from_pylist` on `arrow_schema`.
+    The snapshot writer (`checkpoint.commit_snapshot`) applies the same
+    row contract to the batches it writes."""
+    for batch in batches:
+        rows = [out for row in batch.to_pylist() for out in fn(row)]
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)

@@ -69,7 +69,6 @@ class FusionConfig:
     """Reference defaults: orchestrator.py:241-251 / fuse.py:44-71."""
     strategy: str = fuse.DEFAULT_STRATEGY
     min_confidence: float = fuse.MIN_CONFIDENCE
-    validator_bonus: float = fuse.VALIDATOR_BONUS
     source_weights: dict = field(default_factory=dict)
 
     def __post_init__(self):

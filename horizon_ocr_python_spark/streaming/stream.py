@@ -1,11 +1,14 @@
 """Streaming extraction over a pages directory.
 
 Design: file-source readStream with the explicit PAGES_SCHEMA (streaming
-sources never infer schemas at scale), the SAME extract_stage as batch
-(its Arrow row map is streaming-compatible — stateless), and two sinks:
+sources never infer schemas at scale), the SAME extraction as batch (its
+Arrow row map is stateless, so `extract.extract_stage` also applies to a
+stream directly), and two sinks:
 
-- extraction sink: foreachBatch -> snapshot commit (engine.checkpoint), so
-  streaming output is resumable/idempotent by the same protocol as batch
+- extraction sink: foreachBatch over the pages stream -> the batch
+  extraction commit (engine.checkpoint), so streaming output is
+  resumable/idempotent by the same protocol as batch, and each micro-batch
+  is extracted once, by the tasks that write it
 - stats sink: watermark(10 min on warc_ts) + 1h tumbling window per lang —
   the late-data-tolerant aggregation a crawl-ingest pipeline monitors
 """
@@ -16,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.checkpoint import content_key
-from ..engine.extract import extract_stage
+from ..engine.extract import extraction
 from ..engine.schema import PAGES_SCHEMA
 
 
@@ -26,12 +29,6 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
             .schema(PAGES_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(input_dir))
-
-
-def streaming_extraction(pages_stream: DataFrame) -> DataFrame:
-    """The batch extraction stage applied to a stream — identical semantics,
-    identical code path (kernel untouched)."""
-    return extract_stage(pages_stream)
 
 
 def windowed_lang_counts(pages_stream: DataFrame) -> DataFrame:
@@ -63,22 +60,26 @@ def streaming_exact_dedup(pages_stream: DataFrame,
 def run_stream_to_snapshots(spark: SparkSession, input_dir: str,
                             output_root: str, checkpoint_dir: str,
                             available_now: bool = True):
-    """Extraction stream -> snapshot-committed output via foreachBatch.
+    """Pages stream -> snapshot-committed documents via foreachBatch.
 
-    Each micro-batch commits one snapshot; the Spark streaming checkpoint
-    guarantees a batch is either fully committed or replayed, and the
-    snapshot protocol makes the replay idempotent at the storage layer.
+    Each non-empty micro-batch of pages commits one snapshot through the
+    batch commit (`extract.extraction` + `checkpoint.commit_snapshot`), so
+    its documents are extracted once, by the tasks that write them. The
+    emptiness check reads the pages only (a JVM scan, no extraction). The
+    Spark streaming checkpoint guarantees a batch is either fully
+    committed or replayed, and the snapshot protocol makes the replay
+    idempotent at the storage layer.
     """
     from ..engine import checkpoint as ckpt
 
-    stream = streaming_extraction(read_pages_stream(spark, input_dir))
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+    def commit_batch(pages_batch: DataFrame, batch_id: int) -> None:
+        if pages_batch.isEmpty():
             return
-        ckpt.commit_snapshot(batch_df, output_root, extra={"stream_batch": batch_id})
+        shipped, row_fn = extraction(pages_batch)
+        ckpt.commit_snapshot(shipped, output_root,
+                             extra={"stream_batch": batch_id}, row_fn=row_fn)
 
-    writer = (stream.writeStream
+    writer = (read_pages_stream(spark, input_dir).writeStream
               .foreachBatch(commit_batch)
               .option("checkpointLocation", checkpoint_dir))
     if available_now:

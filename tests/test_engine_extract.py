@@ -2,6 +2,7 @@
 metrics — on a live local SparkSession."""
 
 import json
+import os
 import uuid
 
 import pytest
@@ -9,10 +10,13 @@ from pyspark.sql import functions as F
 
 from horizon_ocr_python_spark import plans
 from horizon_ocr_python_spark.engine import checkpoint as ckpt
-from horizon_ocr_python_spark.engine.extract import extract_stage, extracted_metrics
+from horizon_ocr_python_spark.engine.extract import (extract_stage,
+                                                     extracted_metrics,
+                                                     extraction)
 from horizon_ocr_python_spark.engine.partitioning import salted_repartition
 from horizon_ocr_python_spark.engine.pipeline import pages_dataframe, run_extraction
-from horizon_ocr_python_spark.engine.schema import METRICS_SCHEMA
+from horizon_ocr_python_spark.engine.schema import (DOCUMENT_SCHEMA,
+                                                    METRICS_SCHEMA, PAGES_SCHEMA)
 
 N_PAGES = 80
 
@@ -195,6 +199,20 @@ class TestCheckpointResume:
         assert ckpt.committed_snapshots(root)[-1]["metrics"] == []
         assert {r.snapshot_id for r in res.metrics.collect()} == {1}
 
+    def test_empty_commit_reads(self, spark, pages, tmp_path):
+        """A commit without rows leaves one schema-only part file: the
+        snapshot reads with its known schema and by schema inference."""
+        root = str(tmp_path / "empty")
+        run_extraction(pages.limit(4), output_root=root, num_partitions=2)
+        res = run_extraction(pages.limit(4), output_root=root, num_partitions=2)
+        assert os.listdir(f"{root}/snapshots/snap-2") == ["part-00000.parquet"]
+        assert ckpt.read_snapshot(spark, root, 2).count() == 0
+        inferred = spark.read.parquet(f"{root}/snapshots/snap-2")
+        assert inferred.count() == 0
+        # parquet reads every column as nullable; names and types match
+        assert inferred.schema.simpleString() == DOCUMENT_SCHEMA.simpleString()
+        assert res.documents.count() == 0
+
     def test_crash_before_manifest_is_invisible(self, spark, pages, tmp_path):
         root = str(tmp_path / "out3")
         run_extraction(pages.limit(5), output_root=root, num_partitions=2)
@@ -265,20 +283,25 @@ class TestPartitionMetrics:
             _snapshot_metrics(spark, root, 1)
 
     def test_crashed_run_contributes_none(self, spark, pages, tmp_path):
-        """A run that wrote its data but died before the manifest rename:
-        its extraction filled an accumulator, yet no metrics row is
-        visible, and the retry commits only its own rows."""
+        """A run that wrote its part files but died before the manifest
+        rename: neither its rows nor its metrics are visible, and the
+        retry commits only its own rows."""
         root = str(tmp_path / "crash")
         run_extraction(pages.limit(5), output_root=root, num_partitions=2)
         before = _metric_rows(ckpt.read_metrics(spark, root))
-        lost = ckpt.partition_metrics(spark.sparkContext)
-        extract_stage(pages.limit(12), metrics=lost).write.parquet(
-            f"{root}/snapshots/snap-2")
-        assert sum(n for n, _, _ in lost.value.values()) == 12
+        data_dir = f"{root}/snapshots/snap-2"
+        os.makedirs(data_dir)
+        shipped, row_fn = extraction(pages.limit(12))
+        lost = ckpt.write_part(data_dir, 0, 1, shipped.toArrow().to_batches(),
+                               row_fn)
+        assert lost["n_docs"] == 12
+        assert os.listdir(data_dir) == ["part-00000.parquet"]
         assert _metric_rows(ckpt.read_metrics(spark, root)) == before
+        assert ckpt.read_table(spark, root).count() == 5
         res = run_extraction(pages.limit(12), output_root=root,
                              num_partitions=2)
         assert sum(r.n_docs for r in res.metrics.collect()) == 5 + 7
+        assert res.documents.count() == 7
 
     def test_manifests_without_rows_read_empty(self, spark, pages, tmp_path):
         # compaction and stream-batch manifests carry no metrics rows
@@ -300,10 +323,73 @@ class TestPartitionMetrics:
         assert ckpt.read_metrics(spark, str(tmp_path / "none")).count() == 0
 
 
+def _json_rows(df):
+    """Every column but the run-dependent extract_ms/partition_id, as
+    sorted JSON lines."""
+    cols = [c for c in df.columns if c not in ("extract_ms", "partition_id")]
+    return sorted(r[0] for r in df.select(F.to_json(F.struct(*cols))).collect())
+
+
+class TestCommitWriter:
+    """The commit's tasks write the snapshot's part files themselves."""
+
+    def test_retried_attempts_leave_one_part_file(self, spark, pages,
+                                                  tmp_path):
+        """Two finished attempts of one partition and a failed one: one
+        part file, no hidden attempt file after the commit, the table
+        count unchanged by the retries."""
+        root = str(tmp_path / "retry")
+        run_extraction(pages.limit(5), output_root=root, num_partitions=2)
+        data_dir = f"{root}/snapshots/snap-2"
+        os.makedirs(data_dir)
+        shipped, row_fn = extraction(pages.limit(12))
+        batches = shipped.toArrow().to_batches(max_chunksize=4)
+
+        def crashing():
+            yield batches[0]
+            raise RuntimeError("executor lost")
+
+        with pytest.raises(RuntimeError):
+            ckpt.write_part(data_dir, 0, 7, crashing(), row_fn)
+        assert ".part-00000.attempt-7" in os.listdir(data_dir)
+        first = ckpt.write_part(data_dir, 0, 8, iter(batches), row_fn)
+        second = ckpt.write_part(data_dir, 0, 9, iter(batches), row_fn)
+        assert first["n_docs"] == second["n_docs"] == 12
+        manifest = ckpt._publish(root, 2, [second], None, with_metrics=True)
+        assert sorted(os.listdir(data_dir)) == ["part-00000.parquet"]
+        assert manifest["n_rows"] == 12
+        assert ckpt.read_snapshot(spark, root, 2).count() == 12
+        assert ckpt.read_table(spark, root).count() == 12
+
+    def test_snapshot_equals_extract_stage(self, spark, pages, tmp_path):
+        """The committed rows are the extract stage's rows, column for
+        column, over a mix with a contained error, a NULL payload,
+        validator details maps and table cells."""
+        odd = spark.createDataFrame([
+            ("u://bad", None, b"\x89PNG\r\n\x1a\n" + bytes(20), "", "en"),
+            ("u://null", None, None, None, None),
+        ], PAGES_SCHEMA)
+        mix = pages.orderBy("url").limit(40).unionByName(odd)
+        root = str(tmp_path / "same")
+        res = run_extraction(mix, output_root=root, num_partitions=4)
+        committed = _json_rows(res.documents)
+        assert committed == _json_rows(extract_stage(mix))
+        docs = res.documents
+        assert docs.count() == 42
+        assert docs.filter(F.col("status") != "ok").count() >= 1
+        assert docs.filter(F.col("url") == "u://null").count() == 1
+        assert docs.filter(F.exists(
+            "fields", lambda f: F.exists(
+                f["validators"], lambda v: F.size(v["details"]) > 0))).count() > 0
+        assert docs.filter(F.exists(
+            "tables", lambda t: F.size(t["cells"]) > 0)).count() > 0
+
+
 class TestJobCount:
-    """The fixed per-job cost: a committing run is its write job, the
-    write's shuffle map stage and, when resuming, the broadcast of the
-    committed keys. No schema inference, metrics or re-read job."""
+    """The fixed per-job cost: a committing run is its commit job (whose
+    tasks extract and write the part files), that job's shuffle map stage
+    and, when resuming, the broadcast of the committed keys. No schema
+    inference, metrics or re-read job."""
 
     @staticmethod
     def _jobs(spark, fn) -> int:

@@ -56,6 +56,38 @@ class TestStreaming:
         assert table.count() == 40
         assert table.filter(F.col("status") != "ok").count() == 0
 
+    def test_stream_extracts_each_document_once(self, spark, tmp_path,
+                                                pages_dir, monkeypatch):
+        """The micro-batch emptiness check reads the pages batch, not
+        extracted documents (whose check would run the kernel over a
+        batch the commit then extracts again); each committed batch goes
+        through the batch extraction commit once."""
+        from horizon_ocr_python_spark.engine import checkpoint as ckpt
+        from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA
+        from horizon_ocr_python_spark.streaming import stream
+
+        cls = type(spark.range(1))
+        probed, extracted = [], []
+        is_empty, extraction = cls.isEmpty, stream.extraction
+
+        def probe(df):
+            probed.append(df.columns)
+            return is_empty(df)
+
+        def recorded(pages, *args, **kwargs):
+            extracted.append(pages.columns)
+            return extraction(pages, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "isEmpty", probe)
+        monkeypatch.setattr(stream, "extraction", recorded)
+        out = str(tmp_path / "out")
+        q = stream.run_stream_to_snapshots(spark, pages_dir, out,
+                                           str(tmp_path / "cp"))
+        q.awaitTermination(120)
+        assert probed and all(c == PAGES_SCHEMA.names for c in probed), probed
+        assert len(extracted) == len(ckpt.committed_snapshots(out)) >= 1
+        assert ckpt.read_table(spark, out).count() == 40
+
     def test_stream_extracts_raster_rows_byte_identical(self, spark,
                                                         tmp_path):
         """Scanned PDFs and standalone scanned images flow through the

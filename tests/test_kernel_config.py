@@ -16,7 +16,6 @@ class TestDefaults:
         assert cfg.thresholds.low_confidence == 0.5
         assert cfg.fusion.strategy == "weighted_vote"
         assert cfg.fusion.min_confidence == 0.2
-        assert cfg.fusion.validator_bonus == 0.2
         assert cfg.fusion.source_weights["donut"] == 1.0
         assert cfg.fusion.source_weights["tesseract"] == 0.7
         assert cfg.extraction.max_link_density == 0.33
@@ -161,7 +160,7 @@ class TestEveryLeafIsRead:
             assert doc["status"] == "ok", (route, doc.get("error"))
         # max_payload_bytes is run_extraction's (next test)
         assert sorted(_leaves(cfg) - reads) == ["extraction.max_payload_bytes"]
-        assert len(_leaves(cfg)) == 13
+        assert len(_leaves(cfg)) == 12
 
     def test_run_extraction_reads_length_cap(self, spark):
         from horizon_ocr_python_spark.engine.pipeline import run_extraction

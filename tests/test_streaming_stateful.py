@@ -7,10 +7,10 @@ from pyspark.sql import functions as F
 
 class TestHostStatsStream:
     def test_state_accumulates_across_batches(self, spark, tmp_path):
+        from horizon_ocr_python_spark.engine.extract import extract_stage
         from horizon_ocr_python_spark.engine.pipeline import pages_dataframe
         from horizon_ocr_python_spark.streaming.stateful import host_stats_stream
-        from horizon_ocr_python_spark.streaming.stream import (
-            read_pages_stream, streaming_extraction)
+        from horizon_ocr_python_spark.streaming.stream import read_pages_stream
 
         # two input files -> with maxFilesPerTrigger=1, two micro-batches
         d = str(tmp_path / "in")
@@ -20,8 +20,8 @@ class TestHostStatsStream:
         pages.filter(~F.col("url").substr(-1, 1).isin("0", "2", "4", "6", "8")) \
             .coalesce(1).write.mode("append").parquet(d)
 
-        stream = streaming_extraction(read_pages_stream(spark, d,
-                                                        max_files_per_trigger=1))
+        stream = extract_stage(read_pages_stream(spark, d,
+                                                 max_files_per_trigger=1))
         stats = host_stats_stream(stream)
         q = (stats.writeStream.format("memory").queryName("host_stats")
              .outputMode("update").trigger(availableNow=True)
