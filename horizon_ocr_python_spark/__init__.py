@@ -13,12 +13,11 @@ engine/     pyspark.sql assembly: the fused Arrow extraction stage (one
             checkpoint/resume, lineage+metrics.
 operators/  Dataset-level relational operators (dedup, similarity search,
             sessionization, top-k, fusion-as-SQL) — each DuckDB-oracle checkable.
-functions/  Column-level expression builders (amount/date/currency validators,
-            text statistics) built on pyspark.sql.functions only.
+functions/  Column-level expression builders (amount/date/currency validators)
+            built on pyspark.sql.functions only.
 sources/    Deterministic synthetic `pages` generator + readers (parquet, and
             the pages table shape from BASELINE.json input_hint).
 streaming/  Structured Streaming ingestion of the same pages table.
-plans/      Plan inspection helpers (pushdown / codegen assertions for tests).
 
 Reference: /root/reference (read-only). Citations in docstrings are
 `docvision/<file>:<line>` into that snapshot.

@@ -24,12 +24,12 @@ driver write it with `os` calls.
 
 A manifest holds the snapshot id, parent, data path and row count (the
 tasks' summed `n_docs`). When the commit extracted its documents itself
-(an extraction run or a stream batch) it also holds the per-partition
-metrics rows `{partition_id, n_docs, n_ok, n_err, wall_ms}` (SURVEY §4
-custom-work 3), as an Iceberg manifest carries per-file record counts:
-the writing tasks total them, so they commit in the same atomic rename as
-the data and cost no job of their own; `read_metrics` serves them as a
-table. Compaction manifests carry none.
+(every `run_extraction` commit, stream micro-batches included) it also
+holds the per-partition metrics rows `{partition_id, n_docs, n_ok, n_err,
+wall_ms}` (SURVEY §4 custom-work 3), as an Iceberg manifest carries
+per-file record counts: the writing tasks total them, so they commit in
+the same atomic rename as the data and cost no job of their own;
+`read_metrics` serves them as a table. Compaction manifests carry none.
 
 A snapshot exists iff its manifest exists — readers list manifests, never
 raw directories, so a crashed run's half-written snapshot is invisible
@@ -221,8 +221,8 @@ def commit_snapshot(rows: DataFrame, root: str,
                     row_fn: Optional[Callable[[dict], Iterable[dict]]] = None
                     ) -> dict:
     """Write a new snapshot: data first, manifest last (the commit point).
-    The one snapshot writer: extraction runs, stream batches and
-    compaction all commit through it.
+    The one snapshot writer: extraction runs (stream micro-batches
+    included) and compaction both commit through it.
 
     One Spark job: each task writes its partition's rows with `write_part`
     and returns its totals, which the driver collects. `rows` are document

@@ -138,34 +138,6 @@ def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
     return map_rows(*extraction(pages, config), DOCUMENT_SCHEMA)
 
 
-def with_json_output(documents: DataFrame) -> DataFrame:
-    """S5 JSON sink (orchestrator.py:1374-1412): one JSON document per row,
-    rendered JVM-side with F.to_json over the nested struct — the per-doc
-    serialization the reference writes to output/*.json, as a column.
-
-    Top-level keys match JSON_SCHEMA.md:5-18 (id, metadata, page_count,
-    pages, tables, fields, validation) plus the embedded flat
-    reconstruction_prompt block the reference adds at save time
-    (orchestrator.py:1387-1391); status/error carry the per-row containment
-    verdict (types.py:317-323)."""
-    from pyspark.sql import functions as F
-
-    doc_struct = F.struct(
-        F.col("doc_id").alias("id"),
-        F.struct(
-            F.col("url"), F.col("file_type"), F.col("lang"),
-            F.col("warc_ts").cast("string").alias("processed_at"),
-        ).alias("metadata"),
-        F.col("page_count"), F.col("pages"),
-        F.col("title"), F.col("raw_text"),
-        F.col("fields"), F.col("tables"), F.col("validation"),
-        F.col("normalized"),
-        F.col("reconstruction").alias("reconstruction_prompt"),
-        F.col("status"), F.col("error"),
-    )
-    return documents.withColumn("json", F.to_json(doc_struct))
-
-
 def extracted_metrics(documents: DataFrame,
                       snapshot_id: Optional[int] = None) -> DataFrame:
     """Per-partition lineage/metrics table (SURVEY §4 custom-work 3):

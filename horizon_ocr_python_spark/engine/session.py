@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from .schema import map_rows
@@ -91,29 +93,28 @@ def build_session(master: str | None = None, app_name: str = "horizon-spark",
 def _warm_python_runner(spark: SparkSession) -> None:
     """Generic session bring-up, so a fresh session's first real job does
     not absorb it: a no-op `map_rows`, the runner every engine stage uses
-    (worker daemon spawn, Arrow/Netty class loading), and a parquet
-    write/read round trip (vectorized reader, footer parsing, commit
-    protocol). Touches no input data and mirrors no query's expressions:
-    only synthetic longs, nothing any timed query computes is precomputed
-    or cached."""
+    (worker daemon spawn, Arrow/Netty class loading), and a parquet read
+    (vectorized reader, footer parsing). Touches no input data and mirrors
+    no query's expressions: only synthetic longs, nothing any timed query
+    computes is precomputed or cached."""
     cores = spark.sparkContext.defaultParallelism
     try:
         spark.sparkContext.setJobDescription("session: python-runner warmup")
         ids = spark.range(0, cores, 1, cores).toDF("i")
         map_rows(ids, lambda row: (), ids.schema).count()
 
-        # parquet reader/writer first-use JIT (vectorized reader, footer
-        # parsing, commit protocol): a 10k-row synthetic round trip in a
-        # temp dir — measured ~3 s off the session's first real scan query
-        # at local[32]
+        # parquet reader first-use JIT (vectorized reader, footer parsing):
+        # Spark reads 10k synthetic longs that pyarrow wrote to a temp dir,
+        # as the engine's own part files are written by pyarrow — measured
+        # ~3 s off the session's first real scan query at local[32]
         import shutil
         import tempfile
 
         tmp = tempfile.mkdtemp(prefix="hsp-warm-")
         try:
             path = os.path.join(tmp, "w.parquet")
-            (spark.range(0, 10_000, 1, 4).toDF("i")
-             .write.mode("overwrite").parquet(path))
+            pq.write_table(pa.table({"i": pa.array(range(10_000),
+                                                   pa.int64())}), path)
             (spark.read.parquet(path)
              .write.format("noop").mode("overwrite").save())
         finally:

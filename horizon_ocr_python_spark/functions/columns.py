@@ -73,10 +73,3 @@ def normalize_currency_expr(col: Column) -> Column:
 def currency_valid_expr(col: Column) -> Column:
     return normalize_currency_expr(col).isin(*sorted(VALID_CURRENCIES))
 
-
-# --- K7 shape checks (fuse.py:484-507) ------------------------------------------
-
-
-def looks_like_amount_expr(col: Column) -> Column:
-    cleaned = F.regexp_replace(col, r"[$€£¥,\s]", "")
-    return cleaned.rlike(r"\d") & cleaned.rlike(r"^[+-]?\d+\.?\d*$")

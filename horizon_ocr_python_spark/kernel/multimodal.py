@@ -187,28 +187,3 @@ def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     cols = (np.arange(out_w) * w // out_w).clip(0, w - 1)
     return img[rows][:, cols]
 
-
-def frame_sample_indices(n_frames: int, k: int) -> list[int]:
-    """Deterministic uniform frame sampling for video columns."""
-    if n_frames <= 0 or k <= 0:
-        return []
-    if k >= n_frames:
-        return list(range(n_frames))
-    return [int(i * n_frames / k) for i in range(k)]
-
-
-def image_features(img: np.ndarray) -> dict:
-    """Cheap deterministic feature extraction: per-channel means + laplacian
-    variance (the reference's noise estimate, preprocess/enhance.py:193-216,
-    numpy-only)."""
-    gray = img.mean(axis=2) if img.ndim == 3 else img.astype(float)
-    lap = (-4 * gray[1:-1, 1:-1] + gray[:-2, 1:-1] + gray[2:, 1:-1]
-           + gray[1:-1, :-2] + gray[1:-1, 2:])
-    return {
-        "mean_b": float(img[..., 0].mean()) if img.ndim == 3 else float(gray.mean()),
-        "mean_g": float(img[..., 1].mean()) if img.ndim == 3 else float(gray.mean()),
-        "mean_r": float(img[..., 2].mean()) if img.ndim == 3 else float(gray.mean()),
-        "laplacian_var": float(lap.var()) if lap.size else 0.0,
-        "height": int(img.shape[0]),
-        "width": int(img.shape[1]),
-    }

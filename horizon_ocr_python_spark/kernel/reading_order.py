@@ -3,9 +3,7 @@
 Semantics pinned to the reference:
 - reading-order sort key (page, y-band of 50px, x)  -> io/reconstruction.py:121-133
 - dedup key (text, y-band) per page                 -> io/reconstruction.py:173-199
-- font-size bins 80/50/30                           -> io/reconstruction.py:100-118
 - region classification by position/aspect          -> detect/layout_doclaynet.py:210-251
-- row grouping by vertical overlap > 0.5            -> detect/text_craft.py:353-410
 
 Elements are plain dicts {text, page, x, y, width, height, ...}. All sorts use
 Python's stable sort, matching the reference's `sorted` tie-breaking
@@ -49,18 +47,6 @@ def dedup_elements(elements: list[dict]) -> list[dict]:
         bucket.add(key)
         kept.append(el)
     return kept
-
-
-def estimate_font_size(height: float) -> str:
-    """>=80 title / >=50 large / >=30 normal / else small
-    (io/reconstruction.py:100-118)."""
-    if height >= 80:
-        return "title"
-    if height >= 50:
-        return "large"
-    if height >= 30:
-        return "normal"
-    return "small"
 
 
 def classify_region_heuristic(x: float, y: float, w: float, h: float,
@@ -151,33 +137,6 @@ def merge_regions_iou(regions: list[dict],
         merged.append({**ri, "bbox": cur})
     merged.sort(key=lambda r: (r["bbox"][1], r["bbox"][0]))
     return merged
-
-
-def group_lines_into_rows(boxes: list[dict], overlap_threshold: float = 0.5) -> list[list[dict]]:
-    """Group line boxes into visual rows by vertical overlap, then sort rows
-    by y and members by x (detect/text_craft.py:353-410).
-
-    Boxes: {y, height, x, ...}. Overlap ratio = intersection / smaller height.
-    """
-    rows: list[list[dict]] = []
-    for box in sorted(boxes, key=lambda b: b["y"]):
-        placed = False
-        for row in rows:
-            ref = row[0]
-            top = max(box["y"], ref["y"])
-            bottom = min(box["y"] + box["height"], ref["y"] + ref["height"])
-            inter = max(0.0, bottom - top)
-            smaller = min(box["height"], ref["height"])
-            if smaller > 0 and inter / smaller > overlap_threshold:
-                row.append(box)
-                placed = True
-                break
-        if not placed:
-            rows.append([box])
-    rows.sort(key=lambda r: min(b["y"] for b in r))
-    for row in rows:
-        row.sort(key=lambda b: b["x"])
-    return rows
 
 
 def assemble_raw_text(lines: list[dict]) -> str:

@@ -78,16 +78,6 @@ def from_html_rows(html_rows: list[list[dict]]) -> dict:
     return table
 
 
-def from_flat_rows(rows: list[list[str]]) -> dict:
-    """Lift a flat string grid (no spans) into the rich model."""
-    cells = [make_cell(r, c, text)
-             for r, row in enumerate(rows) for c, text in enumerate(row)]
-    n_rows = len(rows)
-    n_cols = max((len(r) for r in rows), default=0)
-    return {"cells": cells, "n_rows": n_rows, "n_cols": n_cols,
-            "rows": [list(r) + [""] * (n_cols - len(r)) for r in rows]}
-
-
 # --- raster (scanned-page) table detection -----------------------------------
 # The borderless-table path for recognized glyph pages: column structure is
 # found from WHITESPACE ALIGNMENT across consecutive lines — the same 1-D

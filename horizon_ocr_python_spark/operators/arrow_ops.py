@@ -9,9 +9,9 @@ running any Python.
 - k1_parse_tagged:  kernel.kie.parse_kie_output in a pandas UDF over
                     synthesized `<s_...>` strings (K1, donut_runner.py:179-236);
                     oracle = regexp extraction of the same tags
-- token_count_arrow: kernel tokenizer in a pandas UDF; oracle = the same
-                    whitespace-token SQL as the expression version (proves
-                    kernel and Catalyst agree)
+- token_count_arrow: Python whitespace tokenizer in a pandas UDF; oracle =
+                    the same whitespace-token SQL as the expression version
+                    (proves Python and Catalyst agree)
 - multimodal_meta:  binary image columns built in-stage (real PNG headers,
                     dimensions derived from doc_id), parsed back by
                     kernel.multimodal.parse_image_meta via mapInPandas;
@@ -23,6 +23,7 @@ running any Python.
 
 from __future__ import annotations
 
+import re
 import struct
 
 import pandas as pd
@@ -33,7 +34,6 @@ from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
 
 from ..kernel.kie import parse_kie_output
 from ..kernel.multimodal import parse_image_meta
-from ..kernel.textstats import tokenize_ws
 from . import table
 
 # --- K1: tag parse via pandas UDF ------------------------------------------------
@@ -80,6 +80,13 @@ ORDER BY doc_id
 
 # --- token count via pandas UDF ----------------------------------------------------
 
+_TOKEN_RE = re.compile(r"\S+")
+
+
+def tokenize_ws(text: str) -> list[str]:
+    """Whitespace tokens."""
+    return _TOKEN_RE.findall(text)
+
 
 @F.pandas_udf(IntegerType())
 def _n_tokens_udf(s: pd.Series) -> pd.Series:
@@ -87,7 +94,7 @@ def _n_tokens_udf(s: pd.Series) -> pd.Series:
 
 
 def token_count_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The kernel tokenizer through Arrow — must agree with the pure-SQL
+    """The Python tokenizer through Arrow — must agree with the pure-SQL
     token_count oracle (same output contract as textops.token_count)."""
     docs = table(spark, sf_dir, "documents")
     return (docs.select("doc_id", _n_tokens_udf("text").alias("n_tokens"))
@@ -157,10 +164,10 @@ ORDER BY doc_id
 
 
 def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-column plumbing: deterministic uniform frame sampling
-    (kernel.multimodal.frame_sample_indices) as pure Catalyst expressions —
-    per synthetic video (n_frames derived from doc_id), the k sampled frame
-    indices, exploded one row per sampled frame. At scale this is the
+    """Video-column plumbing: deterministic uniform frame sampling as pure
+    Catalyst expressions — per synthetic video (n_frames derived from
+    doc_id), the k sampled frame indices, exploded one row per sampled
+    frame. At scale this is the
     pre-decode step: the binary payload is untouched until the sampled
     frame list is known (decode only what survives the sample)."""
     k = 8

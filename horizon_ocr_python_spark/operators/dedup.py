@@ -1,7 +1,9 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
-All hashing is md5-based (kernel.dedup rationale) so Spark and the DuckDB
-oracle produce identical values. The distributed shapes:
+All hashing is md5-based: md5 is a built-in with identical output in Spark
+(`F.md5`) and DuckDB (`md5`), while Spark's hash()/xxhash64() have no DuckDB
+equivalent, so both engines produce identical values. The distributed
+shapes:
 
 - exact:     groupBy(content-hash) — one map-side-combined shuffle
 - minhash:   narrow per-row projection, sig_i = array_min(transform(words,
@@ -216,10 +218,12 @@ ORDER BY doc_a, doc_b
 
 
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash per document (kernel.dedup.simhash32 distributed):
-    token hash = top-32 bits of md5; per bit, sign of the +1/-1 vote sum.
+    """32-bit SimHash per document: token hash = top-32 bits of md5; per
+    bit, sign of the +1/-1 vote sum. 32 bits, not 64, so the per-token value
+    fits a signed BIGINT identically in Spark
+    (`conv(substring(md5(t),1,8),16,10)`) and DuckDB.
 
-    Token multiplicity counts (same as the kernel: votes per occurrence).
+    Token multiplicity counts (one vote per occurrence).
     """
     docs = _rebalanced(table(spark, sf_dir, "documents"))
     toks = (docs

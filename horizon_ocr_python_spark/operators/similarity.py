@@ -14,7 +14,6 @@ on both sides.
 from __future__ import annotations
 
 import hashlib
-import math
 
 import numpy as np
 import pandas as pd
@@ -49,16 +48,6 @@ N_BANDS, N_BITS, DIM = 8, 6, 64
 SIM_SCALE_PROFILE = {"n_bands": 8, "n_bits": 18, "max_bucket": 5000}
 
 
-def bits_for_corpus(n_vectors: int, target_bucket: int = 256) -> int:
-    """Bits per band so that E[bucket size] ~= target_bucket under a
-    uniform sign distribution: ceil(log2(n / target)). Never below the
-    oracle default N_BITS; capped at 24 (past that, bucket size is
-    per-band-population-limited, not keyspace-limited)."""
-    need = math.ceil(math.log2(max(n_vectors, 1) / target_bucket)) \
-        if n_vectors > target_bucket else N_BITS
-    return min(24, max(N_BITS, need))
-
-
 def _hyperplane(band: int, bit: int) -> list[float]:
     """Deterministic +-1 hyperplane per (band, bit): md5-seeded per
     coordinate so Spark and DuckDB materialize the IDENTICAL literal vector
@@ -85,8 +74,9 @@ def banded_keys(emb: DataFrame, n_bands: int = N_BANDS,
     batch inside a pandas UDF — the round-2 expression form unrolled the 48
     dot products into a giant Catalyst HOF tree whose codegen/eval cost
     dominated the whole operator (26s for 2k vectors at sf0.1; the matmul
-    does the same float64 math in milliseconds). `banded_keys_expr` keeps
-    the pure-expression form and tests pin both paths identical.
+    does the same float64 math in milliseconds).
+    tests/test_similarity_scale.py keeps the pure-expression form and pins
+    both paths identical.
 
     The input is rebalanced first: a single-file parquet scan would
     otherwise run every projection in ONE task (the same pre-fan-out trap
@@ -110,25 +100,6 @@ def banded_keys(emb: DataFrame, n_bands: int = N_BANDS,
 
     emb = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
     return emb.select("vec_id", F.explode(keys_of(F.col("v"))).alias("band_key"))
-
-
-def banded_keys_expr(emb: DataFrame) -> DataFrame:
-    """Pure-Catalyst form of banded_keys (round-2 shape) — kept as the
-    cross-check twin for tests/test_similarity_scale.py: both paths must
-    produce the identical (vec_id, band_key) set."""
-
-    def band_key(vcol, band: int):
-        bits = []
-        for bit in range(N_BITS):
-            w = F.array(*[F.lit(x) for x in _hyperplane(band, bit)])
-            dot = F.aggregate(F.zip_with(vcol, w, lambda a, b: a * b),
-                              F.lit(0.0), lambda acc, x: acc + x)
-            bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(F.lit(f"{band}:"), *bits)
-
-    emb = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    keys = F.array(*[band_key(F.col("v"), b) for b in range(N_BANDS)])
-    return emb.select("vec_id", F.explode(keys).alias("band_key"))
 
 
 def _band_key_sql(band: int) -> str:

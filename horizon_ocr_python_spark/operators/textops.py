@@ -1,7 +1,6 @@
 """Text-analysis operators over the `documents` table — all pure Catalyst
-expressions (whole-stage codegen, no Python in the hot path).
-
-Dataset-level twins of kernel.textstats; oracle-checked against DuckDB.
+expressions (whole-stage codegen, no Python in the hot path), each
+oracle-checked against DuckDB.
 """
 
 from __future__ import annotations
@@ -37,7 +36,7 @@ WHERE length(trim(text)) > 0
 ORDER BY doc_id
 """
 
-# --- language ID (kernel.textstats.detect_language, expression form) ---------
+# --- language ID (stopword probes, expression form) -------------------------
 
 _LANG_PROBES = {
     "en": " the ",
@@ -97,7 +96,7 @@ ORDER BY doc_id
 
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + char count per document (built-in array
-    functions; the UDF-free twin of kernel.textstats.tokenize_ws)."""
+    functions; the UDF-free twin of arrow_ops.token_count_arrow)."""
     docs = table(spark, sf_dir, "documents")
     tokens = F.filter(F.split(F.trim(F.col("text")), " "), lambda x: x != "")
     return (docs.select(
@@ -120,8 +119,9 @@ ORDER BY doc_id
 
 
 def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprint md5(lower(text)) — dataset twin of
-    kernel.textstats.fingerprint; md5 is identical in Spark and DuckDB."""
+    """Content fingerprint md5(lower(text)). md5, not the reference cache's
+    sha256 (azure/response_cache.py:66-91), because both Spark and DuckDB
+    expose md5() as a built-in, so the oracle is exact."""
     docs = table(spark, sf_dir, "documents")
     return (docs.select(
         "doc_id",

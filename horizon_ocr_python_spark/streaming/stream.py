@@ -6,9 +6,10 @@ Arrow row map is stateless, so `extract.extract_stage` also applies to a
 stream directly), and two sinks:
 
 - extraction sink: foreachBatch over the pages stream -> the batch
-  extraction commit (engine.checkpoint), so streaming output is
-  resumable/idempotent by the same protocol as batch, and each micro-batch
-  is extracted once, by the tasks that write it
+  pipeline (engine.pipeline.run_extraction), so streaming output is
+  length-capped, resume-filtered and committed by the same protocol as
+  batch, and each micro-batch is extracted once, by the tasks that write
+  it
 - stats sink: watermark(10 min on warc_ts) + 1h tumbling window per lang —
   the late-data-tolerant aggregation a crawl-ingest pipeline monitors
 """
@@ -19,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.checkpoint import content_key
-from ..engine.extract import extraction
+from ..engine.pipeline import run_extraction
 from ..engine.schema import PAGES_SCHEMA
 
 
@@ -62,22 +63,20 @@ def run_stream_to_snapshots(spark: SparkSession, input_dir: str,
                             available_now: bool = True):
     """Pages stream -> snapshot-committed documents via foreachBatch.
 
-    Each non-empty micro-batch of pages commits one snapshot through the
-    batch commit (`extract.extraction` + `checkpoint.commit_snapshot`), so
-    its documents are extracted once, by the tasks that write them. The
+    Each non-empty micro-batch of pages is one committing
+    `pipeline.run_extraction` run: length cap, resume filter against every
+    committed snapshot, salted repartition, then one snapshot whose
+    documents are extracted once, by the tasks that write them. The
     emptiness check reads the pages only (a JVM scan, no extraction). The
     Spark streaming checkpoint guarantees a batch is either fully
-    committed or replayed, and the snapshot protocol makes the replay
-    idempotent at the storage layer.
+    committed or replayed, and the resume filter makes a replayed batch
+    commit no document twice.
     """
-    from ..engine import checkpoint as ckpt
 
     def commit_batch(pages_batch: DataFrame, batch_id: int) -> None:
         if pages_batch.isEmpty():
             return
-        shipped, row_fn = extraction(pages_batch)
-        ckpt.commit_snapshot(shipped, output_root,
-                             extra={"stream_batch": batch_id}, row_fn=row_fn)
+        run_extraction(pages_batch, output_root=output_root)
 
     writer = (read_pages_stream(spark, input_dir).writeStream
               .foreachBatch(commit_batch)

@@ -1,6 +1,6 @@
-"""Plan inspection helpers — assert the physical plan is the one we want
-(pushdown reached the scan, codegen spans the expressions, the join
-broadcast), not just that the first plan passed."""
+"""Plan inspection helpers for the tests — assert the physical plan is the
+one we want (pushdown reached the scan, codegen spans the expressions, the
+join broadcast), not just that the first plan passed."""
 
 from __future__ import annotations
 

@@ -215,12 +215,12 @@ class TestRecordedResponseStage:
         assert "JSONDecodeError" in bad[0].error
 
     def test_no_shuffle_plan(self, spark):
-        from horizon_ocr_python_spark import plans
+        import plan_helpers
         from horizon_ocr_python_spark.engine.azure_stage import (
             map_recorded_responses)
 
         df = spark.createDataFrame([("u", "{}")], ["url", "response"])
-        assert plans.n_exchanges(map_recorded_responses(df)) == 0
+        assert plan_helpers.n_exchanges(map_recorded_responses(df)) == 0
 
 
 class TestReviewFindings:

@@ -8,7 +8,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from horizon_ocr_python_spark import plans
+import plan_helpers
 from horizon_ocr_python_spark.engine import checkpoint as ckpt
 from horizon_ocr_python_spark.engine.extract import (extract_stage,
                                                      extracted_metrics,
@@ -304,12 +304,11 @@ class TestPartitionMetrics:
         assert res.documents.count() == 7
 
     def test_manifests_without_rows_read_empty(self, spark, pages, tmp_path):
-        # compaction and stream-batch manifests carry no metrics rows
+        # commits of document rows (compaction's) carry no metrics rows
         root = str(tmp_path / "bare")
         run_extraction(pages.limit(5), output_root=root, num_partitions=2)
         ckpt.compact(spark, root)
-        ckpt.commit_snapshot(extract_stage(pages.limit(3)), root,
-                             extra={"stream_batch": 0})
+        ckpt.commit_snapshot(extract_stage(pages.limit(3)), root)
         assert [s.get("metrics") is None
                 for s in ckpt.committed_snapshots(root)] == [False, True, True]
         assert {r.snapshot_id for r in ckpt.read_metrics(spark, root).collect()} == {1}
@@ -441,7 +440,7 @@ class TestPlanShape:
         root = str(tmp_path / "keys")
         run_extraction(pages.limit(10), output_root=root, num_partitions=2)
         todo = ckpt.filter_uncommitted(pages, ckpt.committed_keys(spark, root))
-        lines = plans.physical_plan(todo).splitlines()
+        lines = plan_helpers.physical_plan(todo).splitlines()
         assert any("LeftAnti" in ln for ln in lines), lines
         at = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
         depth = lines[at].find("+-")

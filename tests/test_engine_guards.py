@@ -1,7 +1,6 @@
-"""Engine guardrails: oversized-payload cap, the JSON output column, the
-session's local-dir choice and the worker daemon's import path."""
+"""Engine guardrails: oversized-payload cap, the session's local-dir
+choice and the worker daemon's import path."""
 
-import json
 import os
 import zipfile
 
@@ -11,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from horizon_ocr_python_spark.engine import session
-from horizon_ocr_python_spark.engine.extract import extract_stage, with_json_output
+from horizon_ocr_python_spark.engine.extract import extract_stage
 from horizon_ocr_python_spark.engine.partitioning import with_length_cap
 from horizon_ocr_python_spark.engine.pydaemon import redundant_archives
 from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA, map_rows
@@ -32,22 +31,6 @@ class TestLengthCap:
         docs = extract_stage(capped).collect()
         assert {d.url for d in docs} == {"u://big", "u://small"}
         assert all(d.status in ("ok", "error") for d in docs)
-
-
-class TestJsonOutput:
-    def test_json_column_roundtrips(self, spark):
-        from horizon_ocr_python_spark.engine.pipeline import pages_dataframe
-
-        pages = pages_dataframe(spark, 5, seed=42)
-        docs = with_json_output(extract_stage(pages))
-        row = docs.orderBy("url").first()
-        parsed = json.loads(row.json)
-        assert parsed["id"] == row.doc_id
-        assert parsed["raw_text"] == row.raw_text
-        assert parsed["metadata"]["url"] == row.url
-        assert {f["name"] for f in parsed["fields"]} == \
-            {f["name"] for f in row.fields}
-        assert parsed["validation"]["passed"] == row.validation.passed
 
 
 class TestLocalDir:

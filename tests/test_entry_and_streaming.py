@@ -61,14 +61,15 @@ class TestStreaming:
         """The micro-batch emptiness check reads the pages batch, not
         extracted documents (whose check would run the kernel over a
         batch the commit then extracts again); each committed batch goes
-        through the batch extraction commit once."""
+        through the batch pipeline's extraction once."""
         from horizon_ocr_python_spark.engine import checkpoint as ckpt
+        from horizon_ocr_python_spark.engine import pipeline
         from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA
         from horizon_ocr_python_spark.streaming import stream
 
         cls = type(spark.range(1))
         probed, extracted = [], []
-        is_empty, extraction = cls.isEmpty, stream.extraction
+        is_empty, extraction = cls.isEmpty, pipeline.extraction
 
         def probe(df):
             probed.append(df.columns)
@@ -79,13 +80,36 @@ class TestStreaming:
             return extraction(pages, *args, **kwargs)
 
         monkeypatch.setattr(cls, "isEmpty", probe)
-        monkeypatch.setattr(stream, "extraction", recorded)
+        monkeypatch.setattr(pipeline, "extraction", recorded)
         out = str(tmp_path / "out")
         q = stream.run_stream_to_snapshots(spark, pages_dir, out,
                                            str(tmp_path / "cp"))
         q.awaitTermination(120)
         assert probed and all(c == PAGES_SCHEMA.names for c in probed), probed
         assert len(extracted) == len(ckpt.committed_snapshots(out)) >= 1
+        assert ckpt.read_table(spark, out).count() == 40
+
+    def test_replayed_stream_commits_nothing_twice(self, spark, tmp_path,
+                                                    pages_dir):
+        """A stream replayed over committed input (a new streaming
+        checkpoint, the same output root) goes through the batch resume
+        filter: its snapshots commit no rows and the table keeps one row
+        per page."""
+        from horizon_ocr_python_spark.engine import checkpoint as ckpt
+        from horizon_ocr_python_spark.streaming.stream import run_stream_to_snapshots
+
+        out = str(tmp_path / "out")
+        first = run_stream_to_snapshots(spark, pages_dir, out,
+                                        str(tmp_path / "cp1"))
+        first.awaitTermination(120)
+        n_first = len(ckpt.committed_snapshots(out))
+        assert sum(m["n_rows"] for m in ckpt.committed_snapshots(out)) == 40
+
+        second = run_stream_to_snapshots(spark, pages_dir, out,
+                                         str(tmp_path / "cp2"))
+        second.awaitTermination(120)
+        replayed = ckpt.committed_snapshots(out)[n_first:]
+        assert replayed and sum(m["n_rows"] for m in replayed) == 0
         assert ckpt.read_table(spark, out).count() == 40
 
     def test_stream_extracts_raster_rows_byte_identical(self, spark,

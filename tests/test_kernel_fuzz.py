@@ -7,7 +7,6 @@ from datetime import datetime
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from horizon_ocr_python_spark.kernel import dedup as D
 from horizon_ocr_python_spark.kernel import fuse as FU
 from horizon_ocr_python_spark.kernel import html_extract, kie, validators
 from horizon_ocr_python_spark.kernel.document import extract_document
@@ -55,25 +54,6 @@ class TestDeterminismAndInvariants:
         a = extract_document("http://u", payload, None, "en", now=NOW)
         b = extract_document("http://u", payload, None, "en", now=NOW)
         assert a == b
-
-    @given(st.text(alphabet="abcdef ", min_size=0, max_size=200))
-    @settings(max_examples=80, deadline=None)
-    def test_minhash_signature_invariants(self, text):
-        toks = D.shingles(text)
-        sig = D.minhash_signature(toks)
-        assert len(sig) == D.DEFAULT_NUM_HASHES
-        assert sig == D.minhash_signature(toks)
-        # adding a token can only lower (or keep) each row's minimum
-        sig2 = D.minhash_signature(toks | {"zzz extra token"})
-        assert all(b <= a for a, b in zip(sig, sig2)) or not toks
-
-    @given(st.lists(st.text(alphabet="abc", min_size=1, max_size=5),
-                    max_size=50))
-    @settings(max_examples=80, deadline=None)
-    def test_simhash_range_and_determinism(self, words):
-        h = D.simhash32(words)
-        assert 0 <= h < (1 << 32)
-        assert h == D.simhash32(words)
 
     @given(st.floats(min_value=0, max_value=1e9, allow_nan=False),
            st.floats(min_value=0, max_value=1e9, allow_nan=False))

@@ -41,17 +41,6 @@ class TestDedup:
         assert R.dedup_elements([{"text": "  ", "page": 1, "y": 0}]) == []
 
 
-class TestFontBins:
-    def test_bins(self):
-        # io/reconstruction.py:100-118
-        assert R.estimate_font_size(80) == "title"
-        assert R.estimate_font_size(79) == "large"
-        assert R.estimate_font_size(50) == "large"
-        assert R.estimate_font_size(49) == "normal"
-        assert R.estimate_font_size(30) == "normal"
-        assert R.estimate_font_size(29) == "small"
-
-
 class TestRegionClassifier:
     # layout_doclaynet.py:210-251 thresholds on a 1000x1000 page
     def test_header(self):
@@ -74,17 +63,6 @@ class TestRegionClassifier:
 
     def test_default_text(self):
         assert R.classify_region_heuristic(100, 400, 200, 200, 1000, 1000) == "text"
-
-
-class TestRowGrouping:
-    def test_group_rows(self):
-        boxes = [
-            {"x": 0, "y": 0, "height": 10, "id": "a"},
-            {"x": 50, "y": 2, "height": 10, "id": "b"},   # overlaps a
-            {"x": 0, "y": 30, "height": 10, "id": "c"},
-        ]
-        rows = R.group_lines_into_rows(boxes)
-        assert [[b["id"] for b in row] for row in rows] == [["a", "b"], ["c"]]
 
 
 class TestRawText:

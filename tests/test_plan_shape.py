@@ -14,7 +14,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from horizon_ocr_python_spark import plans
+import plan_helpers
 from horizon_ocr_python_spark.operators import relational, textops
 
 SF = "/root/testdata/sf0.001"
@@ -23,18 +23,18 @@ SF = "/root/testdata/sf0.001"
 class TestScans:
     def test_quality_filter_pushdown_and_pruning(self, spark):
         df = textops.quality_filter(spark, SF)
-        plan = plans.physical_plan(df)
+        plan = plan_helpers.physical_plan(df)
         assert "PushedFilters" in plan
         # n_chars >= 150 must reach the scan
         assert re.search(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(n_chars,150\)",
-                         plan), plans.pushed_filters_of(df)
+                         plan), plan_helpers.pushed_filters_of(df)
         # text column needed for the trim-length filter, but doc-irrelevant
         # columns (source) must be pruned
-        assert "source" not in plans.read_schema_of(df)
+        assert "source" not in plan_helpers.read_schema_of(df)
 
     def test_token_count_reads_two_columns(self, spark):
         df = textops.token_count(spark, SF)
-        rs = plans.read_schema_of(df)
+        rs = plan_helpers.read_schema_of(df)
         assert "doc_id" in rs and "text" in rs
         assert "lang" not in rs and "source" not in rs and "n_chars" not in rs
 
@@ -42,11 +42,11 @@ class TestScans:
 class TestJoins:
     def test_q3_broadcasts_customer(self, spark):
         df = relational.top_revenue_orders(spark, SF)
-        assert plans.has_broadcast_join(df)
+        assert plan_helpers.has_broadcast_join(df)
 
     def test_q1_has_partial_aggregation(self, spark):
         df = relational.pricing_summary(spark, SF)
-        plan = plans.physical_plan(df)
+        plan = plan_helpers.physical_plan(df)
         assert re.search(r"partial_(sum|count|avg)", plan), \
             "no map-side partial aggregation in Q1 plan"
 
@@ -54,7 +54,8 @@ class TestJoins:
 class TestCodegen:
     def test_expression_operators_codegen(self, spark):
         for fn in [textops.lang_id, textops.fingerprint, textops.quality_score]:
-            assert plans.has_wholestage_codegen(fn(spark, SF)), fn.__name__
+            assert plan_helpers.has_wholestage_codegen(fn(spark, SF)), \
+                fn.__name__
 
 
 class TestShuffles:
@@ -68,8 +69,8 @@ class TestShuffles:
         path = str(tmp_path / "pages")
         pages_dataframe(spark, 20, seed=42).write.parquet(path)
         docs = extract_stage(salted_repartition(spark.read.parquet(path), 8))
-        plan = plans.physical_plan(docs)
-        assert plans.n_exchanges(docs) == 1, plan
+        plan = plan_helpers.physical_plan(docs)
+        assert plan_helpers.n_exchanges(docs) == 1, plan
         assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
     def test_worst_k_single_shuffle(self, spark):
@@ -78,7 +79,8 @@ class TestShuffles:
         df = sessionize.worst_k(spark, SF)
         # partitionBy(user_id) window + final orderBy -> hash + range = 2;
         # the window itself must not add more
-        assert plans.n_exchanges(df) <= 2, plans.physical_plan(df)
+        assert plan_helpers.n_exchanges(df) <= 2, \
+            plan_helpers.physical_plan(df)
 
 
 class TestFunctions:
@@ -112,19 +114,13 @@ class TestFunctions:
 
     def test_currency_and_shape_exprs(self, spark):
         from horizon_ocr_python_spark.functions.columns import (
-            currency_valid_expr, looks_like_amount_expr)
+            currency_valid_expr)
 
         df = spark.createDataFrame(
             [("USD",), ("$",), ("XXX",), ("usd",)], ["c"])
         got = [r.ok for r in df.select(currency_valid_expr(F.col("c")).alias("ok"))
                .collect()]
         assert got == [True, True, False, True]
-
-        df2 = spark.createDataFrame(
-            [("$1,234.56",), ("BATTERY",), ("495",)], ["v"])
-        got2 = [r.ok for r in df2.select(looks_like_amount_expr(F.col("v")).alias("ok"))
-                .collect()]
-        assert got2 == [True, False, True]
 
 
 class TestRound2Plans:
@@ -135,27 +131,28 @@ class TestRound2Plans:
     def test_s1_page_fanout_prunes_scan(self, spark):
         from horizon_ocr_python_spark.operators import pagemodel
 
-        rs = plans.read_schema_of(pagemodel.s1_page_fanout(spark, SF))
+        rs = plan_helpers.read_schema_of(pagemodel.s1_page_fanout(spark, SF))
         assert "doc_id" in rs and "text" in rs
         assert "lang" not in rs and "source" not in rs
 
     def test_k9_substring_span_prunes_scan(self, spark):
         from horizon_ocr_python_spark.operators import pagemodel
 
-        rs = plans.read_schema_of(pagemodel.k9_substring_span(spark, SF))
+        rs = plan_helpers.read_schema_of(
+            pagemodel.k9_substring_span(spark, SF))
         assert "lang" not in rs and "n_chars" not in rs
 
     def test_r6_style_merge_equi_join_only(self, spark):
         from horizon_ocr_python_spark.operators import pagemodel
 
-        plan = plans.physical_plan(pagemodel.r6_style_merge(spark, SF))
+        plan = plan_helpers.physical_plan(pagemodel.r6_style_merge(spark, SF))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
     def test_jaccard_band_join_is_equi(self, spark):
         from horizon_ocr_python_spark.operators import dedup
 
-        plan = plans.physical_plan(dedup.ngram_jaccard_pairs(spark, SF))
+        plan = plan_helpers.physical_plan(dedup.ngram_jaccard_pairs(spark, SF))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
@@ -165,8 +162,9 @@ class TestRound2Plans:
         hash join appears below the sort-merge/shuffled join of lineitem."""
         from horizon_ocr_python_spark.operators import relational
 
-        plan = plans.physical_plan(relational.top_revenue_orders(spark, SF))
-        assert plans.has_broadcast_join(relational.top_revenue_orders(spark, SF))
+        df = relational.top_revenue_orders(spark, SF)
+        plan = plan_helpers.physical_plan(df)
+        assert plan_helpers.has_broadcast_join(df)
         # the customer join (on o_custkey/c_custkey) must be NESTED UNDER
         # the fact join (on l_orderkey/o_orderkey): in explain text the
         # descendant operator prints later. (At sf0.001 Spark may broadcast
@@ -187,16 +185,17 @@ class TestRound5Plans:
         from horizon_ocr_python_spark.operators import curation
 
         df = curation.o9_line_confidence(spark, SF)
-        plan = plans.physical_plan(df)
+        plan = plan_helpers.physical_plan(df)
         assert re.search(r"partial_(sum|count|min|avg)", plan), \
             "no map-side partial aggregation"
-        rs = plans.read_schema_of(df)
+        rs = plan_helpers.read_schema_of(df)
         assert "doc_id" in rs and "text" not in rs and "lang" not in rs
 
     def test_n1_normalized_split_no_cartesian(self, spark):
         from horizon_ocr_python_spark.operators import curation
 
-        plan = plans.physical_plan(curation.n1_normalized_split(spark, SF))
+        plan = plan_helpers.physical_plan(
+            curation.n1_normalized_split(spark, SF))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert re.search(r"partial_(sum|max)", plan)
@@ -205,8 +204,8 @@ class TestRound5Plans:
         from horizon_ocr_python_spark.operators import validators_sql
 
         df = validators_sql.v9_normalized_value(spark, SF)
-        assert plans.has_wholestage_codegen(df)
-        rs = plans.read_schema_of(df)
+        assert plan_helpers.has_wholestage_codegen(df)
+        rs = plan_helpers.read_schema_of(df)
         assert "text" not in rs and "html" not in rs
 
 
@@ -220,7 +219,7 @@ class TestArtifactsStagePlan:
         from horizon_ocr_python_spark.engine.pipeline import pages_dataframe
 
         df = artifacts_stage(pages_dataframe(spark, 50, seed=42), every_n=10)
-        plan = plans.physical_plan(df)
+        plan = plan_helpers.physical_plan(df)
         py = re.search(r"MapInArrow", plan)
         flt = re.search(r"Filter .*xxhash64", plan)
         assert py and flt, plan[:1500]

@@ -107,13 +107,13 @@ class TestDriverCorpusRecall:
 class TestPlanShape:
     @pytest.mark.parametrize("fn", ["embedding_cosine_pairs", "lsh_ann_topk"])
     def test_no_nested_loop_join(self, spark, fn):
-        from horizon_ocr_python_spark import plans
+        import plan_helpers
         from horizon_ocr_python_spark.operators import compose
 
         df = (compose.embedding_cosine_pairs(spark, SF)
               if fn == "embedding_cosine_pairs"
               else similarity.lsh_ann_topk(spark, SF))
-        plan = plans.physical_plan(df)
+        plan = plan_helpers.physical_plan(df)
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
 

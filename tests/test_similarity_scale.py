@@ -1,6 +1,6 @@
 """Embedding-LSH scale behavior (round-3): numpy-matmul banding parity with
 the Catalyst expression form, the capped-bucket guard bounding per-bucket
-pair volume, and the bits-per-band scale profile."""
+pair volume, and the 18-bit scale profile."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -15,6 +15,25 @@ def _emb_df(spark, rows):
         "vec_id: long, v: array<double>")
 
 
+def banded_keys_expr(emb):
+    """Pure-Catalyst form of similarity.banded_keys (the round-2 shape):
+    one zip_with/aggregate dot product per hyperplane, the cross-check twin
+    of the numpy matmul path."""
+
+    def band_key(vcol, band: int):
+        bits = []
+        for bit in range(similarity.N_BITS):
+            w = F.array(*[F.lit(x) for x in similarity._hyperplane(band, bit)])
+            dot = F.aggregate(F.zip_with(vcol, w, lambda a, b: a * b),
+                              F.lit(0.0), lambda acc, x: acc + x)
+            bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
+        return F.concat(F.lit(f"{band}:"), *bits)
+
+    keys = F.array(*[band_key(F.col("v"), b)
+                     for b in range(similarity.N_BANDS)])
+    return emb.select("vec_id", F.explode(keys).alias("band_key"))
+
+
 class TestBandingParity:
     def test_udf_matches_expression_form(self, spark):
         """The pandas-UDF matmul banding and the round-2 Catalyst HOF
@@ -24,7 +43,7 @@ class TestBandingParity:
         rows = [(i, rng.standard_normal(similarity.DIM)) for i in range(64)]
         df = _emb_df(spark, rows)
         udf_keys = set(map(tuple, similarity.banded_keys(df).collect()))
-        expr_keys = set(map(tuple, similarity.banded_keys_expr(df).collect()))
+        expr_keys = set(map(tuple, banded_keys_expr(df).collect()))
         assert udf_keys == expr_keys
         assert len(udf_keys) == 64 * similarity.N_BANDS
 
@@ -70,12 +89,6 @@ class TestCappedBuckets:
 
 
 class TestScaleProfile:
-    def test_bits_grow_with_corpus(self):
-        assert similarity.bits_for_corpus(500) == similarity.N_BITS
-        assert similarity.bits_for_corpus(10**6) == 12
-        assert similarity.bits_for_corpus(10**9) == 22
-        assert similarity.bits_for_corpus(10**12) == 24  # capped
-
     def test_profile_banding_runs_at_18_bits(self, spark):
         prof = similarity.SIM_SCALE_PROFILE
         rng = np.random.default_rng(9)
@@ -116,19 +129,19 @@ class TestCensusBroadcast:
                                       n_bits=prof["n_bits"])
 
     def test_no_census_broadcast_hint_at_profile(self, spark):
-        from horizon_ocr_python_spark import plans
+        import plan_helpers
 
         # checkpointed keys: the banding pandas UDF stays out of the plan,
         # which then holds the candidate stage alone
         keys = self._profile_keys(spark).localCheckpoint()
         cand = compose.sim_candidate_pairs(keys)
-        assert not plans.has_broadcast_hint(cand)
+        assert not plan_helpers.has_broadcast_hint(cand)
         # the candidate stage has NO join at all and no Python node: one
         # hash repartition on band_key co-locates each bucket, and a
         # collect_list + transform/explode emits the capped pairs. The
         # explicit repartition keeps AQE from coalescing the key shuffle
         # (and the pair stage after it) into one task.
-        plan = plans.optimized_plan(cand)
+        plan = plan_helpers.optimized_plan(cand)
         assert "Join" not in plan
         assert "RepartitionByExpression [band_key" in plan
         assert not _python_nodes(plan), _python_nodes(plan)
@@ -138,7 +151,7 @@ class TestCensusBroadcast:
         no join: over-cap buckets are dropped inside the one band_key pass.
         The whole query plan has no Python node: signatures, band keys and
         pairs are all Spark expressions."""
-        from horizon_ocr_python_spark import plans
+        import plan_helpers
         from horizon_ocr_python_spark.operators import dedup
 
         (spark.createDataFrame(
@@ -146,8 +159,8 @@ class TestCensusBroadcast:
             "doc_id: long, text: string")
          .write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet"))
         cand = dedup.minhash_lsh_pairs(spark, str(tmp_path))
-        assert not plans.has_broadcast_hint(cand)
-        plan = plans.optimized_plan(cand)
+        assert not plan_helpers.has_broadcast_hint(cand)
+        plan = plan_helpers.optimized_plan(cand)
         assert "Join" not in plan
         assert not _python_nodes(plan), _python_nodes(plan)
 
@@ -239,10 +252,10 @@ class TestKmeansTraining:
     def test_assignment_is_min_struct_not_window(self, spark, planted_dir):
         """The argmin must be a partial-aggregable min(struct), not a
         window sort over N*K rows (the plan you'd want at 10^9 vectors)."""
-        from horizon_ocr_python_spark import plans
+        import plan_helpers
 
         df = similarity.ivf_kmeans_train(spark, planted_dir)
-        assert "Window" not in plans.optimized_plan(df)
+        assert "Window" not in plan_helpers.optimized_plan(df)
 
 
 class TestClusteredRecall:

@@ -57,11 +57,6 @@ class TestAccessors:
             if False else table_model.get_col_texts(t, 0) == \
             ["Invoice", "Widget", "Widget"]
 
-    def test_from_flat_rows(self):
-        t = table_model.from_flat_rows([["a", "b"], ["c"]])
-        assert t["n_cols"] == 2 and t["rows"][1] == ["c", ""]
-        assert table_model.get_cell(t, 1, 1) is None
-
 
 class TestMarkdownSpans:
     def test_anchor_only_rendering(self):
