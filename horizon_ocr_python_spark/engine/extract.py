@@ -133,8 +133,8 @@ def extraction(pages: DataFrame, config: Optional[dict] = None
 def extract_stage(pages: DataFrame, config: Optional[dict] = None) -> DataFrame:
     """Run the fused extraction stage over a pages DataFrame: the lazy
     documents DataFrame (DOCUMENT_SCHEMA) of `extraction`'s two halves.
-    A run without `output_root` returns it; a committing run writes the
-    same rows through `checkpoint.commit_snapshot` instead."""
+    `pipeline.run_extraction` writes the same rows through
+    `checkpoint.commit_snapshot` instead."""
     return map_rows(*extraction(pages, config), DOCUMENT_SCHEMA)
 
 
@@ -143,11 +143,11 @@ def extracted_metrics(documents: DataFrame,
     """Per-partition lineage/metrics table (SURVEY §4 custom-work 3):
     (partition_id, n_docs, n_ok, n_err, wall_ms, snapshot_id).
 
-    The lazy table of a run without `output_root`, or of any documents
-    DataFrame: a relational aggregation over the stage output, one
-    map-side-combined groupBy, no extra pass over the payloads. A
-    committing run does not call it: its commit tasks total the same rows
-    as they write them, and the manifest carries them
+    The lazy table of any documents DataFrame (an `extract_stage` output):
+    a relational aggregation over the stage output, one map-side-combined
+    groupBy, no extra pass over the payloads. `pipeline.run_extraction`
+    does not call it: its commit tasks total the same rows as they write
+    them, and the manifest carries them
     (`checkpoint.read_metrics` serves them with these columns and types,
     schema.METRICS_SCHEMA).
     """

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..kernel.config import EngineConfig
 from . import checkpoint as ckpt
-from .extract import extract_stage, extracted_metrics, extraction
+from .extract import extraction
 from .partitioning import partitions_for, salted_repartition, with_length_cap
 
 
@@ -27,20 +27,16 @@ from .partitioning import partitions_for, salted_repartition, with_length_cap
 class RunResult:
     documents: DataFrame
     metrics: DataFrame
-    snapshot_id: Optional[int]
-    n_skipped_committed: Optional[int] = None
+    snapshot_id: int
+    n_skipped_committed: int
 
 
-def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
+def run_extraction(pages: DataFrame, *, output_root: str,
+                   num_partitions: Optional[int] = None,
                    rows_hint: Optional[int] = None,
-                   output_root: Optional[str] = None,
                    resume: bool = True,
                    config: Optional[dict] = None) -> RunResult:
-    """Run the pipeline. Without `output_root`, returns the lazy documents
-    DataFrame and its lazy `extract.extracted_metrics` table (caller
-    materializes).
-
-    With `output_root`, commits a snapshot (resumable) in one job: the
+    """Run the pipeline and commit a snapshot (resumable) in one job: the
     shipped pages and the extraction's per-row function go to
     `checkpoint.commit_snapshot`, so each document is written to a part
     file by the task that extracted it and never goes back into the JVM.
@@ -54,9 +50,7 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     """
     spark = pages.sparkSession
 
-    committed = None
-    if output_root and resume:
-        committed = ckpt.committed_keys(spark, output_root)
+    committed = ckpt.committed_keys(spark, output_root) if resume else None
     # Length-cap BEFORE the resume key is computed: extract_stage keys the
     # payload it receives (the capped bytes), so the resume anti-join must
     # key the same payload or oversized rows re-extract on every resume.
@@ -64,17 +58,11 @@ def run_extraction(pages: DataFrame, *, num_partitions: Optional[int] = None,
     capped = with_length_cap(
         pages, max_bytes=config["extraction"]["max_payload_bytes"])
     n_input = Observation()
-    if output_root:
-        capped = capped.observe(n_input, F.count(F.lit(1)).alias("n"))
+    capped = capped.observe(n_input, F.count(F.lit(1)).alias("n"))
     todo = ckpt.filter_uncommitted(capped, committed)
 
     n = num_partitions or partitions_for(spark, rows_hint)
     distributed = salted_repartition(todo, n)
-
-    if not output_root:
-        documents = extract_stage(distributed, config=config)
-        return RunResult(documents=documents,
-                         metrics=extracted_metrics(documents), snapshot_id=None)
 
     shipped, row_fn = extraction(distributed, config=config)
     snap = ckpt.commit_snapshot(shipped, output_root, row_fn=row_fn)

@@ -16,6 +16,10 @@ per-document fallbacks. The fusion defaults are `kernel.fuse`'s constants
 the only copies, read by `html_extract`'s keyword defaults,
 `partitioning.with_length_cap` and the operators that mirror a gate.
 
+Each of the 11 leaves changes some document's output
+(tests/test_kernel_config.py::TestEveryLeafChangesOutput): a setting that
+cannot change an output is deleted rather than kept as a silent no-op.
+
 The reference's re-OCR selection (targeted_reocr.py:64-67) and Tesseract
 reroute (config.py:157) values are not settings here: nothing on the
 extraction path reads them, so they stay as the constants that drive the
@@ -68,10 +72,12 @@ class Thresholds:
 class FusionConfig:
     """Reference defaults: orchestrator.py:241-251 / fuse.py:44-71."""
     strategy: str = fuse.DEFAULT_STRATEGY
-    min_confidence: float = fuse.MIN_CONFIDENCE
     source_weights: dict = field(default_factory=dict)
 
     def __post_init__(self):
+        if self.strategy not in fuse.SELECTORS:
+            raise ValueError(f"unknown fusion strategy {self.strategy!r}; "
+                             f"expected one of {sorted(fuse.SELECTORS)}")
         # user weights MERGE over the kernel defaults: a config written
         # before a kernel source existed must not demote that source to
         # the unknown-source weight; explicit keys still override

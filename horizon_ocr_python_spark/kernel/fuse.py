@@ -13,13 +13,19 @@ Field dict:     {name, value, data_type, confidence, status, page?, bbox?,
 Default source weights (orchestrator.py:241-251 / fuse.py:65-71):
 donut 1.0, layoutlmv3 0.9, trocr 0.8, tesseract 0.7, ppstructure 0.85;
 unknown source 0.5 (fuse.py:307).
+
+Validators V1-V10 run after fusion (`document._apply_validator_status`), as
+in the reference (orchestrator.py:516-522), so `validator_priority`
+(fuse.py:325-340) sees no pass ratios and is the highest-confidence rule.
+The reference's min-confidence prefilter (fuse.py:277-291) is dropped: it
+never changes which candidate has the maximum confidence.
 """
 
 from __future__ import annotations
 
 import re
 from collections import defaultdict
-from typing import Any, Callable, Optional
+from typing import Any, Optional
 
 DEFAULT_SOURCE_WEIGHTS = {
     "donut": 1.0,
@@ -36,9 +42,7 @@ DEFAULT_SOURCE_WEIGHTS = {
 }
 UNKNOWN_SOURCE_WEIGHT = 0.5
 DEFAULT_STRATEGY = "weighted_vote"  # the reference's default selector
-MIN_CONFIDENCE = 0.2          # fuse.py:49
 LOW_CONF_THRESHOLD = 0.15     # fuse.py:135
-VALIDATOR_BONUS = 0.2         # fuse.py:33
 
 
 def normalize_field_name(name: str) -> str:
@@ -94,18 +98,15 @@ def filter_low_quality_fields(fields: list[dict]) -> list[dict]:
     return kept
 
 
-def select_highest_confidence(candidates: list[dict],
-                              min_confidence: float = MIN_CONFIDENCE) -> Optional[dict]:
-    """max-confidence with min-conf prefilter (fuse.py:277-291).
+def select_highest_confidence(candidates: list[dict]) -> Optional[dict]:
+    """max-confidence (fuse.py:277-291); also the `validator_priority` rule.
 
     Ties break to the earliest candidate (Python max keeps the first maximum),
     matching the reference's list ordering exactly.
     """
     if not candidates:
         return None
-    valid = [c for c in candidates if c["confidence"] >= min_confidence]
-    pool = valid if valid else candidates
-    return max(pool, key=lambda c: c["confidence"])
+    return max(candidates, key=lambda c: c["confidence"])
 
 
 def select_weighted_vote(candidates: list[dict],
@@ -131,19 +132,6 @@ def select_weighted_vote(candidates: list[dict],
     return value_candidates.get(best_value)
 
 
-def select_validator_priority(candidates: list[dict]) -> Optional[dict]:
-    """Sort by (validation pass ratio, confidence) (fuse.py:325-340)."""
-    if not candidates:
-        return None
-
-    def sort_key(c: dict) -> tuple:
-        meta = c.get("metadata") or {}
-        passed, total = meta.get("validation_passed", 0), meta.get("validation_total", 0)
-        return (passed / total if total > 0 else 0, c["confidence"])
-
-    return max(candidates, key=sort_key)
-
-
 def select_consensus(candidates: list[dict],
                      source_weights: Optional[dict] = None) -> Optional[dict]:
     """Most-agreed value; falls back to weighted vote when no value repeats
@@ -164,38 +152,22 @@ def select_consensus(candidates: list[dict],
     return select_weighted_vote(candidates, source_weights)
 
 
-def apply_validators(candidates: list[dict], validators: list[Callable],
-                     validator_bonus: float = VALIDATOR_BONUS) -> list[dict]:
-    """Boost confidence by pass ratio * bonus, capped at 1.0 (fuse.py:246-275)."""
-    for c in candidates:
-        passed = total = 0
-        for validator in validators:
-            try:
-                result = validator(c["value"])
-                total += 1
-                if result:
-                    passed += 1
-            except Exception:
-                pass
-        if total > 0:
-            c["confidence"] = min(1.0, c["confidence"] + validator_bonus * (passed / total))
-            meta = c.setdefault("metadata", {})
-            meta["validation_passed"] = passed
-            meta["validation_total"] = total
-    return candidates
+# The reference's four strategy names -> selector(candidates, source_weights).
+# FusionConfig rejects any other name.
+SELECTORS = {
+    "highest_confidence": lambda c, _: select_highest_confidence(c),
+    "weighted_vote": select_weighted_vote,
+    "validator_priority": lambda c, _: select_highest_confidence(c),
+    "consensus": select_consensus,
+}
 
 
 def determine_status(selected: dict, all_candidates: list[dict]) -> str:
-    """Field status rules (fuse.py:375-408)."""
+    """Field status rules (fuse.py:375-408); `validated`/`validation_failed`
+    are set after fusion (`document._apply_validator_status`)."""
     selected_value = _value_key(selected["value"])
     matching_sources = {c["source"] for c in all_candidates
                         if _value_key(c["value"]) == selected_value}
-    meta = selected.get("metadata") or {}
-    passed, total = meta.get("validation_passed", 0), meta.get("validation_total", 0)
-    if total > 0 and passed == total:
-        return "validated"
-    if total > 0 and passed < total:
-        return "validation_failed"
     if len(matching_sources) >= 2 and selected["confidence"] >= 0.7:
         return "confident"
     if len(matching_sources) == 1:
@@ -206,10 +178,7 @@ def determine_status(selected: dict, all_candidates: list[dict]) -> str:
 
 
 def fuse_single_field(fields: list[dict], strategy: str = DEFAULT_STRATEGY,
-                      validators: Optional[list[Callable]] = None,
-                      source_weights: Optional[dict] = None,
-                      min_confidence: float = MIN_CONFIDENCE,
-                      validator_bonus: float = VALIDATOR_BONUS) -> Optional[dict]:
+                      source_weights: Optional[dict] = None) -> Optional[dict]:
     """Fuse one field group (fuse.py:177-244)."""
     if not fields:
         return None
@@ -233,20 +202,7 @@ def fuse_single_field(fields: list[dict], strategy: str = DEFAULT_STRATEGY,
 
     if not all_candidates:
         return fields[0]
-    if validators:
-        all_candidates = apply_validators(all_candidates, validators,
-                                          validator_bonus=validator_bonus)
-
-    selectors = {
-        "highest_confidence": lambda: select_highest_confidence(
-            all_candidates, min_confidence=min_confidence),
-        "weighted_vote": lambda: select_weighted_vote(all_candidates, source_weights),
-        "validator_priority": lambda: select_validator_priority(all_candidates),
-        "consensus": lambda: select_consensus(all_candidates, source_weights),
-    }
-    best = selectors.get(strategy, selectors["highest_confidence"])()
-    if not best:
-        return fields[0]
+    best = SELECTORS[strategy](all_candidates, source_weights)
 
     return {
         "name": fields[0]["name"],
@@ -263,10 +219,7 @@ def fuse_single_field(fields: list[dict], strategy: str = DEFAULT_STRATEGY,
 
 
 def fuse_fields(field_lists: list[list[dict]], strategy: str = DEFAULT_STRATEGY,
-                validators: Optional[list[Callable]] = None,
-                source_weights: Optional[dict] = None,
-                min_confidence: float = MIN_CONFIDENCE,
-                validator_bonus: float = VALIDATOR_BONUS) -> list[dict]:
+                source_weights: Optional[dict] = None) -> list[dict]:
     """Group by normalized name, fuse each group, quality-filter
     (fuse.py:73-108)."""
     field_groups: dict[str, list[dict]] = defaultdict(list)
@@ -274,14 +227,9 @@ def fuse_fields(field_lists: list[list[dict]], strategy: str = DEFAULT_STRATEGY,
         for field in fields:
             field_groups[normalize_field_name(field["name"])].append(field)
 
-    fused = []
-    for _, group in field_groups.items():
-        f = fuse_single_field(group, strategy, validators, source_weights,
-                              min_confidence=min_confidence,
-                              validator_bonus=validator_bonus)
-        if f:
-            fused.append(f)
-    return filter_low_quality_fields(fused)
+    return filter_low_quality_fields(
+        [fuse_single_field(group, strategy, source_weights)
+         for group in field_groups.values()])
 
 
 def boxes_overlap(box1: tuple, box2: tuple, threshold: float = 0.3) -> bool:

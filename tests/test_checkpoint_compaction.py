@@ -97,14 +97,11 @@ class TestCompaction:
 
 class TestSkippedAccounting:
     def test_n_skipped_reported_without_option(self, spark, pages, tmp_path):
-        """Counted on every committing run, a first run included; a run
-        without output_root commits nothing and reports no count."""
+        """Counted on every run, a first run included."""
         root = str(tmp_path / "skip")
         res = run_extraction(pages.limit(30), output_root=root,
                              num_partitions=2)
         assert res.n_skipped_committed == 0
-        res = run_extraction(pages.limit(30), num_partitions=2)
-        assert res.n_skipped_committed is None
 
     def test_n_skipped_counted_on_request(self, spark, pages, tmp_path):
         root = str(tmp_path / "skip2")

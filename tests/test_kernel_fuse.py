@@ -98,21 +98,6 @@ class TestFusion:
         # single source -> single_source
         one = [{"source": "donut", "value": "100", "confidence": 0.9, "metadata": {}}]
         assert F.determine_status(one[0], one) == "single_source"
-        # validated when all validator checks passed
-        v = {"source": "donut", "value": "100", "confidence": 0.9,
-             "metadata": {"validation_passed": 2, "validation_total": 2}}
-        assert F.determine_status(v, [v]) == "validated"
-        v_fail = {"source": "donut", "value": "100", "confidence": 0.9,
-                  "metadata": {"validation_passed": 1, "validation_total": 2}}
-        assert F.determine_status(v_fail, [v_fail]) == "validation_failed"
-
-    def test_apply_validators_bonus(self):
-        cands = [{"source": "donut", "value": "100", "confidence": 0.5, "metadata": {}}]
-        F.apply_validators(cands, [lambda v: True, lambda v: True])
-        assert abs(cands[0]["confidence"] - 0.7) < 1e-9  # +0.2 * 1.0 ratio
-        cands2 = [{"source": "donut", "value": "100", "confidence": 0.95, "metadata": {}}]
-        F.apply_validators(cands2, [lambda v: True])
-        assert cands2[0]["confidence"] == 1.0  # capped
 
 
 class TestQualityFilter:

@@ -48,6 +48,7 @@ KEPT = {
     "streaming/stateful": "§2.9 streaming",
     "kernel/config:load_config": "C7",
     "engine/checkpoint:compact": "C1",
+    "engine/extract:extracted_metrics": "C2",
     "kernel/validators:validate_currency": "V4",
     "kernel/reading_order:cluster_positions_1d": "D12/D13",
     "kernel/table_model:get_col_texts": "D12/D13",

@@ -53,9 +53,7 @@ class TestAccessors:
     def test_row_col_texts(self):
         t = self._t()
         assert table_model.get_row_texts(t, 0) == ["Invoice", "Invoice", "Q3"]
-        assert table_model.get_col_texts(t, 0) == ["Widget"] * 2 + ["Widget"] \
-            if False else table_model.get_col_texts(t, 0) == \
-            ["Invoice", "Widget", "Widget"]
+        assert table_model.get_col_texts(t, 0) == ["Invoice", "Widget", "Widget"]
 
 
 class TestMarkdownSpans:
