@@ -65,8 +65,12 @@ _TOTALS_SCHEMA = StructType([METRICS_SCHEMA[c] for c in
 _TOTALS_ARROW = to_arrow_schema(_TOTALS_SCHEMA)
 _DOCUMENT_ARROW = to_arrow_schema(DOCUMENT_SCHEMA)
 # Readers use the Parquet schema; the footer's copy of the Arrow schema
-# would add ~14 KB to every part file.
-_PARQUET_OPTIONS = {"store_schema": False}
+# would add ~14 KB to every part file. Min/max statistics only for the
+# short key columns a filter can prune on: for raw_text, reconstruction
+# and the other long strings they are two copies of a prefix per page
+# that no reader uses.
+_PARQUET_OPTIONS = {"store_schema": False,
+                    "write_statistics": ["url", "content_key", "status"]}
 
 
 def content_key(col) -> Column:
@@ -298,14 +302,20 @@ def read_snapshot(spark: SparkSession, root: str, snapshot_id: int) -> DataFrame
     return spark.read.schema(DOCUMENT_SCHEMA).parquet(_snap_dir(root, snapshot_id))
 
 
-def read_metrics(spark: SparkSession, root: str) -> DataFrame:
-    """The per-partition metrics table (METRICS_SCHEMA) of every committed
-    snapshot, from the manifests: no data file is read and no job runs.
-    Manifests without metrics rows (compaction, stream batches) and
-    uncommitted runs contribute none."""
-    rows = [{**r, "snapshot_id": s["snapshot_id"]}
+def metric_rows(root: str) -> list[dict]:
+    """The per-partition metrics rows of every committed snapshot, from
+    the manifests: no data file is read and no job runs. Manifests without
+    metrics rows (compaction) and uncommitted runs contribute none."""
+    return [{**r, "snapshot_id": s["snapshot_id"]}
             for s in committed_snapshots(root) for r in s.get("metrics", ())]
-    return spark.createDataFrame(rows, METRICS_SCHEMA)
+
+
+def read_metrics(spark: SparkSession, root: str,
+                 rows: Optional[list[dict]] = None) -> DataFrame:
+    """The per-partition metrics table (METRICS_SCHEMA): `rows`, or
+    `metric_rows(root)` as it stands now."""
+    return spark.createDataFrame(
+        metric_rows(root) if rows is None else rows, METRICS_SCHEMA)
 
 
 def read_table(spark: SparkSession, root: str,

@@ -11,7 +11,8 @@ per-partition metrics it returns commit in the snapshot's manifest.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import functools
+from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -25,10 +26,23 @@ from .partitioning import partitions_for, salted_repartition, with_length_cap
 
 @dataclass
 class RunResult:
-    documents: DataFrame
-    metrics: DataFrame
+    """A committed run. `documents` (the new snapshot's rows) and `metrics`
+    (the per-partition metrics of every snapshot committed up to this
+    run's, read from the manifests at commit time) are DataFrames built on
+    first access: a caller that reads neither pays for neither."""
     snapshot_id: int
     n_skipped_committed: int
+    _spark: SparkSession = field(repr=False)
+    _root: str = field(repr=False)
+    _metric_rows: list = field(repr=False)
+
+    @functools.cached_property
+    def documents(self) -> DataFrame:
+        return ckpt.read_snapshot(self._spark, self._root, self.snapshot_id)
+
+    @functools.cached_property
+    def metrics(self) -> DataFrame:
+        return ckpt.read_metrics(self._spark, self._root, self._metric_rows)
 
 
 def run_extraction(pages: DataFrame, *, output_root: str,
@@ -43,7 +57,8 @@ def run_extraction(pages: DataFrame, *, output_root: str,
     The per-partition metrics rows are those tasks' totals, committed in
     the snapshot's manifest, so they exist iff the snapshot does.
     `documents` reads the new snapshot and `metrics` every committed
-    snapshot's rows (`checkpoint.read_metrics`), both without a job.
+    snapshot's rows (`checkpoint.metric_rows`), both without a job and
+    only when first accessed.
     `n_skipped_committed` is the number of input rows the resume filter
     dropped: an Observation counts the input rows on the commit's own
     pass, minus the rows the snapshot committed. No extra scan.
@@ -67,10 +82,10 @@ def run_extraction(pages: DataFrame, *, output_root: str,
     shipped, row_fn = extraction(distributed, config=config)
     snap = ckpt.commit_snapshot(shipped, output_root, row_fn=row_fn)
     return RunResult(
-        documents=ckpt.read_snapshot(spark, output_root, snap["snapshot_id"]),
-        metrics=ckpt.read_metrics(spark, output_root),
         snapshot_id=snap["snapshot_id"],
-        n_skipped_committed=n_input.get["n"] - snap["n_rows"])
+        n_skipped_committed=n_input.get["n"] - snap["n_rows"],
+        _spark=spark, _root=output_root,
+        _metric_rows=ckpt.metric_rows(output_root))
 
 
 def pages_dataframe(spark: SparkSession, n_rows: int, seed: int = 42,

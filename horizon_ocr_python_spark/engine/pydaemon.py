@@ -110,8 +110,9 @@ except Exception:  # noqa: BLE001
 
 try:  # pragma: no cover
     # exercise the kernel once on a tiny synthetic page: numpy ufunc
-    # dispatch caches, compiled regexes, html-parser tables and the glyph
-    # templates are all resident before the fork
+    # dispatch caches, compiled regexes (the HTML scanner's token
+    # patterns among them) and the glyph templates are all resident
+    # before the fork
     from horizon_ocr_python_spark.kernel.document import extract_document
 
     extract_document("warm://d.html",

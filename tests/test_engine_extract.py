@@ -322,6 +322,59 @@ class TestPartitionMetrics:
         assert ckpt.read_metrics(spark, str(tmp_path / "none")).count() == 0
 
 
+class TestRunResultFrames:
+    """run_extraction builds neither DataFrame of its result; each is
+    built on first access, with the values it had at commit time."""
+
+    def test_built_on_first_access(self, spark, pages, tmp_path, monkeypatch):
+        def eager(*args):
+            raise AssertionError("RunResult frame built at commit time")
+
+        monkeypatch.setattr(ckpt, "read_snapshot", eager)
+        monkeypatch.setattr(ckpt, "read_metrics", eager)
+        root = str(tmp_path / "lazy")
+        first = run_extraction(pages.limit(12), output_root=root,
+                               num_partitions=2)
+        # a later commit changes neither frame of the earlier result
+        later = run_extraction(pages, output_root=root, num_partitions=2)
+        monkeypatch.undo()
+        assert first.metrics.schema == METRICS_SCHEMA
+        assert {r.snapshot_id for r in first.metrics.collect()} == {1}
+        assert _metric_rows(first.metrics) == _snapshot_metrics(spark, root, 1)
+        assert _metric_rows(later.metrics) == _metric_rows(
+            ckpt.read_metrics(spark, root))
+        assert first.documents.count() == 12
+        assert later.documents.count() == N_PAGES - 12
+        assert first.documents is first.documents  # built once
+        assert first.metrics is first.metrics
+
+
+class TestPartFileStatistics:
+    def test_statistics_only_on_key_columns(self, spark, pages, tmp_path):
+        import pyarrow.parquet as pq
+
+        root = str(tmp_path / "stats")
+        run_extraction(pages.limit(20), output_root=root, num_partitions=2)
+        run_extraction(pages, output_root=root, num_partitions=2)
+        for snap in ckpt.committed_snapshots(root):
+            for name in os.listdir(snap["path"]):
+                meta = pq.ParquetFile(os.path.join(snap["path"], name)).metadata
+                for rg in range(meta.num_row_groups):
+                    with_stats = {
+                        meta.row_group(rg).column(c).path_in_schema
+                        for c in range(meta.num_columns)
+                        if meta.row_group(rg).column(c).statistics is not None}
+                    assert with_stats == {"url", "content_key", "status"}
+        # every reader round-trips: the snapshot, the table, the resume
+        # keys and a compaction of them
+        table = _json_rows(ckpt.read_table(spark, root))
+        assert len(table) == N_PAGES
+        assert ckpt.committed_keys(spark, root).count() == N_PAGES
+        base = ckpt.compact(spark, root)
+        assert _json_rows(ckpt.read_snapshot(spark, root, base)) == table
+        assert _json_rows(ckpt.read_table(spark, root)) == table
+
+
 def _json_rows(df):
     """Every column but the run-dependent extract_ms/partition_id, as
     sorted JSON lines."""
