@@ -3,18 +3,23 @@
 This is the kernel's top-level function — the analogue of the reference's
 DocumentProcessor.process (pipeline/orchestrator.py:411-571) with the same
 output contract (JSON_SCHEMA.md:5-18 top-level keys: id, metadata,
-page_count, pages, tables, fields, validation) minus the image-only stages.
+page_count, pages, tables, fields, validation).
 
-Stage order (orchestrator.py:497-522): per-page loop (parse/segment ->
-layout classify -> reading order -> raw_text -> KIE per page) -> doc-level
-fuse across the per-page field lists -> spatial anchoring -> validate ->
-assemble. Multi-page PDFs fan out exactly like the reference's
-`for page_num, page_image in enumerate(page_images, 1)` loop.
+Shape: one producer per payload kind (native PDF text layer, raster pages
+via `_assemble_from_ocr`, a picture or undecodable image, HTML) builds the
+document's finished Page records (types.py:243-264) with `_page`, the one
+page constructor, plus the per-page KIE field lists, the title and the
+raw text. `_assemble` then runs the doc-level stages over those pages:
+table fields -> fuse across the field lists -> spatial anchoring ->
+validate -> output dict, with the doc-level tables the pages' tables in
+page order (orchestrator.py:497-522). Multi-page PDFs fan out exactly like
+the reference's `for page_num, page_image in enumerate(page_images, 1)`
+loop.
 
 Determinism deviations from the reference, per SURVEY §7.5:
 - id = sha256(url) instead of uuid (types.py:140)
 - processed_at = the row's warc_ts instead of wall clock (types.py:282)
-- DateValidator 'now' is injectable
+- DateValidator 'now' is injectable and defaults to the row's warc_ts
 - PDF word boxes are deterministic width estimates (no font metrics in this
   container): advance = 0.6 * font_size per char, Helvetica-average
 """
@@ -22,7 +27,7 @@ Determinism deviations from the reference, per SURVEY §7.5:
 from __future__ import annotations
 
 import hashlib
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import Any, Optional
 
 from . import anchor as anchor_mod
@@ -33,6 +38,7 @@ from .config import EngineConfig
 ENGINE_VERSION = "0.2.0"
 
 AVG_CHAR_W = 0.6  # average Helvetica advance as a fraction of font size
+PDF_DPI = 72  # PDF user space: 72 points per inch
 
 _DEFAULT_CONFIG = EngineConfig().to_dict()  # read-only: config=None
 
@@ -115,7 +121,15 @@ def extract_document(url: str, payload: bytes, warc_ts: Any = None,
 
     `config` is an EngineConfig.to_dict() (kernel.config), read as given;
     None means `EngineConfig().to_dict()` (no env vars are read here).
+
+    `now` is the date validator's clock. None means the row's crawl time
+    (`warc_ts`, as naive UTC like the parsed dates), so a row extracts the
+    same on any day; only a row without a timestamp uses the wall clock.
     """
+    if now is None and isinstance(warc_ts, datetime):
+        now = warc_ts
+        if now.tzinfo is not None:
+            now = now.astimezone(timezone.utc).replace(tzinfo=None)
     try:
         return _extract(url, payload, warc_ts, lang, now,
                         config or _DEFAULT_CONFIG)
@@ -322,6 +336,47 @@ def build_normalized(fields: list[dict], tables_rows: list[dict]) -> dict:
     }
 
 
+def _page(number: int, text_lines: list[dict], regions: list[dict],
+          width: float, height: float, content_type: str,
+          dpi: Optional[int] = None, tables: list[dict] = (),
+          readability: str = "good", readability_issues: list[str] = (),
+          rotation: int = 0, preprocessed: bool = False) -> dict:
+    """One Page record (the reference's Page + PageMetadata, types.py:
+    243-264); every producer builds its pages here.
+
+    `dpi` is PageMetadata.dpi (types.py:247): raster pages pass 350, the
+    native-PDF text layer is point space (PDF_DPI), HTML and pictures have
+    no defined rendering DPI. `rotation` is the O10 upright rotation
+    (90-degree CCW steps) the raster path applied before recognition;
+    `preprocessed` marks pages whose geometry lives in the P-stage frame.
+    The S7 artifacts renderer uses both to re-derive the geometry frame
+    from stored pixels without re-running OSD. `tables` are the page's own
+    (the doc-level array is all pages' tables in page order)."""
+    return {
+        "number": number,
+        "metadata": {"width": width, "height": height, "dpi": dpi,
+                     "content_type": content_type, "rotation": rotation,
+                     "preprocessed": preprocessed,
+                     "readability": readability,
+                     "readability_issues": list(readability_issues)},
+        "layout_regions": regions,
+        "text_lines": text_lines,
+        "tables": list(tables),
+        "raw_text": reading_order.assemble_raw_text(text_lines),
+    }
+
+
+def _page_fields(pages: list[dict], confidence: float,
+                 source: str) -> list[list[dict]]:
+    """KIE per page over each page's text lines (the reference's per-page
+    loop collects one field list per page, orchestrator.py:497-513), so
+    candidates carry true pages."""
+    return [kie.extract_kv_fields([tl["text"] for tl in p["text_lines"]],
+                                  confidence=confidence,
+                                  page_num=p["number"], source=source)
+            for p in pages]
+
+
 def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
              now: Optional[datetime], cfg: dict) -> dict:
     if payload is None:
@@ -329,10 +384,7 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
     if isinstance(payload, str):
         payload = payload.encode("utf-8")
     file_type = pdf_text.sniff_type(payload)
-
-    tables_rows: list[dict] = []
-    page_dims = (0, 0)
-    readability, readability_issues = "good", []
+    ctx = (url, payload, warc_ts, lang, now, cfg, file_type)
 
     if file_type == "pdf":
         ex = pdf_text.extract_pdf(payload)
@@ -344,30 +396,24 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
         if sum(len(ln["text"]) for ln in ex["lines"]) <= SCANNED_CHAR_GATE:
             images = pdf_text.extract_pdf_images(payload)
             if images:
-                ocr_pages = [(_ocr_page(img, p, cfg)
-                              if img is not None else None)
-                             for p, img in enumerate(images, 1)]
-                return _assemble_from_ocr(url, payload, warc_ts, lang, now,
-                                          cfg, file_type, ocr_pages)
-        page_dims = (pdf_text.PAGE_W, pdf_text.PAGE_H)
-        n_pages = max(int(ex.get("n_pages", 1)), 1)
+                return _assemble_from_ocr(*ctx, [
+                    _ocr_page(img, p, cfg) if img is not None else None
+                    for p, img in enumerate(images, 1)])
         # per-page fan-out: lines arrive in reading order, grouped by page
-        lines_by_page: dict[int, list[dict]] = {p: [] for p in range(1, n_pages + 1)}
+        # (extract_pdf's n_pages is the largest line page)
+        page_lines: dict[int, list[dict]] = {
+            p: [] for p in range(1, ex["n_pages"] + 1)}
         for ln in ex["lines"]:
-            lines_by_page.setdefault(int(ln["page"]), []).append(ln)
-        page_text_lines = {p: [_pdf_line_struct(ln) for ln in lns]
-                           for p, lns in lines_by_page.items()}
-        page_regions = {p: [{"type": "text", "bbox": tl["bbox"], "page": p,
-                             "confidence": 1.0}
-                            for tl in tls]
-                        for p, tls in page_text_lines.items()}
-        # KIE runs per page (the reference's per-page loop collects one field
-        # list per page, orchestrator.py:497-513) so candidates carry true pages
-        field_lists = [kie.extract_kv_fields(
-            [tl["text"] for tl in page_text_lines[p]], confidence=0.9,
-            page_num=p, source="pdf_text") for p in sorted(page_text_lines)]
-        ex_title, ex_raw = ex["title"], ex["raw_text"]
-    elif file_type == "image":
+            page_lines[ln["page"]].append(_pdf_line_struct(ln))
+        pages = [_page(p, tls, [{"type": "text", "bbox": tl["bbox"],
+                                 "page": p, "confidence": 1.0}
+                                for tl in tls],
+                       pdf_text.PAGE_W, pdf_text.PAGE_H, file_type,
+                       dpi=PDF_DPI)
+                 for p, tls in page_lines.items()]
+        return _assemble(*ctx, pages, _page_fields(pages, 0.9, "pdf_text"),
+                         ex["title"], ex["raw_text"])
+    if file_type == "image":
         # The reference routes EVERY image file through the same page
         # pipeline as rasterized PDFs (io/image.py:49-79 load ->
         # orchestrator.py:455-513 per-page loop -> OCR) — a scanned
@@ -377,70 +423,60 @@ def _extract(url: str, payload: bytes, warc_ts: Any, lang: str,
         # ink scores below thresholds.image_text_gate carries no document
         # text and stays a picture row (the reference's no-weights
         # fallback: no model, no text).
-        n_pages = 1
-        page_text_lines = {1: []}
-        page_regions = {1: []}
-        field_lists = []
-        ex_title, ex_raw = "", ""
+        from . import multimodal
+
         try:
-            from . import multimodal, preprocess
-
             img = multimodal.decode_image(payload)
-            # the junk floor may never exceed the acceptance gate — a user
-            # lowering image_text_gate below the default floor must not be
-            # silently nullified by the floor's earlier short-circuit
-            thr = cfg["thresholds"]
-            floor = min(thr["picture_floor"], thr["image_text_gate"])
-            ocr = _ocr_page(img, 1, cfg, junk_floor=floor)
-            n_rec_chars = sum(len(tl["text"]) - tl["text"].count(" ")
-                              for tl in ocr["text_lines"])
-            if ((ocr["text_lines"] or ocr["tables"])
-                    and ocr["score"] >= thr["image_text_gate"]
-                    and (ocr["tables"]
-                         or n_rec_chars >= thr["min_image_text_chars"])):
-                return _assemble_from_ocr(url, payload, warc_ts, lang, now,
-                                          cfg, file_type, [ocr])
-            # readability was already assessed inside _ocr_page (it is
-            # exactly rot90-invariant: std/mean/interior-Laplacian identical,
-            # the size rule is an OR over both dims) — reuse, don't recompute
-            readability = ocr["readability"]
-            readability_issues = ocr["readability_issues"]
-            page_dims = (int(img.shape[1]), int(img.shape[0]))
-            page_regions = {1: [{"type": "image", "page": 1, "confidence": 1.0,
-                                 "bbox": (0.0, 0.0, float(img.shape[1]),
-                                          float(img.shape[0]))}]}
         except NotImplementedError:
-            pass  # undecodable format: metadata-only (header parse upstream)
-    else:
-        ext = cfg["extraction"]
-        hx = html_extract.extract_html(
-            payload, min_block_chars=ext["min_block_chars"],
-            max_link_density=ext["max_link_density"],
-            min_text_density=ext["min_text_density"])
-        n_pages = 1
-        page_text_lines = {1: [{"text": b["text"], "page": 1, "bbox": None,
-                                "font_size": None, "words": [],
-                                # markup parse is certain; no pixels -> no
-                                # OCR content type
-                                "confidence": 1.0, "source": "html",
-                                "content_type": None, "style": None}
-                               for b in hx["content_blocks"]]}
-        page_regions = {1: [{"type": b["role"], "index": b["index"],
-                             "bbox": None, "page": 1, "confidence": 1.0}
-                            for b in hx["blocks"]]}
-        tables_rows = hx["tables"]
-        # KV fields come from body blocks only: headings routinely contain
-        # colons ("Document 12: ...") and would produce junk fields
-        kv_lines = [b["text"] for b in hx["content_blocks"]
-                    if b["role"] in ("paragraph", "list_item")]
-        field_lists = [kie.extract_kv_fields(kv_lines, confidence=0.9,
-                                             page_num=1, source="html_kv")]
-        ex_title, ex_raw = hx["title"], hx["raw_text"]
-
-    return _assemble(url, payload, warc_ts, lang, now, cfg, file_type,
-                     page_dims, n_pages, page_text_lines, page_regions,
-                     tables_rows, field_lists, ex_title, ex_raw,
-                     readability, readability_issues)
+            # undecodable format: metadata-only (header parse upstream)
+            return _assemble(*ctx, [_page(1, [], [], 0, 0, file_type)], [],
+                             "", "")
+        # the junk floor may never exceed the acceptance gate — a user
+        # lowering image_text_gate below the default floor must not be
+        # silently nullified by the floor's earlier short-circuit
+        thr = cfg["thresholds"]
+        floor = min(thr["picture_floor"], thr["image_text_gate"])
+        ocr = _ocr_page(img, 1, cfg, junk_floor=floor)
+        n_rec_chars = sum(len(tl["text"]) - tl["text"].count(" ")
+                          for tl in ocr["text_lines"])
+        if ((ocr["text_lines"] or ocr["tables"])
+                and ocr["score"] >= thr["image_text_gate"]
+                and (ocr["tables"]
+                     or n_rec_chars >= thr["min_image_text_chars"])):
+            return _assemble_from_ocr(*ctx, [ocr])
+        # a picture: one image region over the decoded pixels. Readability
+        # was already assessed inside _ocr_page (it is exactly
+        # rot90-invariant: std/mean/interior-Laplacian identical, the size
+        # rule is an OR over both dims) — reuse, don't recompute
+        w, h = int(img.shape[1]), int(img.shape[0])
+        region = {"type": "image", "page": 1, "confidence": 1.0,
+                  "bbox": (0.0, 0.0, float(w), float(h))}
+        return _assemble(*ctx, [_page(
+            1, [], [region], w, h, file_type,
+            readability=ocr["readability"],
+            readability_issues=ocr["readability_issues"])], [], "", "")
+    ext = cfg["extraction"]
+    hx = html_extract.extract_html(
+        payload, min_block_chars=ext["min_block_chars"],
+        max_link_density=ext["max_link_density"],
+        min_text_density=ext["min_text_density"])
+    lines = [{"text": b["text"], "page": 1, "bbox": None, "font_size": None,
+              "words": [],
+              # markup parse is certain; no pixels -> no OCR content type
+              "confidence": 1.0, "source": "html", "content_type": None,
+              "style": None}
+             for b in hx["content_blocks"]]
+    regions = [{"type": b["role"], "index": b["index"], "bbox": None,
+                "page": 1, "confidence": 1.0} for b in hx["blocks"]]
+    # KV fields come from body blocks only: headings routinely contain
+    # colons ("Document 12: ...") and would produce junk fields
+    kv_lines = [b["text"] for b in hx["content_blocks"]
+                if b["role"] in ("paragraph", "list_item")]
+    return _assemble(
+        *ctx, [_page(1, lines, regions, 0, 0, file_type, tables=hx["tables"])],
+        [kie.extract_kv_fields(kv_lines, confidence=0.9, page_num=1,
+                               source="html_kv")],
+        hx["title"], hx["raw_text"])
 
 
 SCANNED_CHAR_GATE = 100  # pdf_style_extractor.py:67-98 scanned threshold
@@ -650,63 +686,45 @@ def _assemble_from_ocr(url, payload, warc_ts, lang, now, cfg, file_type,
     """Document assembly over per-page raster OCR results (None = corrupt
     page, contained and kept empty). Shared by the scanned-PDF and
     standalone-image paths."""
-    page_text_lines: dict[int, list[dict]] = {}
-    page_regions: dict[int, list[dict]] = {}
-    tables_rows: list[dict] = []
-    page_meta: dict[int, dict] = {}
-    # doc-level dims from the FIRST SURVIVING page (round-4 ADVICE: a
-    # corrupt page 1 must not pin the default letter dims onto a real
-    # scan's title cutoff), mirroring how first_meta picks the first
-    # non-None page below; default letter when every page failed
-    page_dims = next((ocr["dims"] for ocr in ocr_pages if ocr),
-                     (pdf_text.PAGE_W, pdf_text.PAGE_H))
-    for p, ocr in enumerate(ocr_pages, 1):
-        if ocr is None:
-            page_text_lines[p] = []
-            page_regions[p] = []
-            continue
-        page_text_lines[p] = ocr["text_lines"]
-        page_regions[p] = ocr["regions"]
-        tables_rows.extend(ocr["tables"])
-        page_meta[p] = {"content_type": ocr["content_type"],
-                        "readability": ocr["readability"],
-                        "readability_issues": ocr["readability_issues"],
-                        # per-page dims: a scan's pages can differ in size
-                        # (reference PageMetadata carries width/height per
-                        # page, types.py:243-250)
-                        "width": ocr["dims"][0],
-                        "height": ocr["dims"][1],
-                        # raster pages carry the reference's PageMetadata
-                        # dpi default (types.py:247) — embedded images keep
-                        # their stored resolution, nothing re-rasterizes
-                        "dpi": 350,
-                        "rotation": ocr.get("rotation", 0),
-                        "preprocessed": ocr.get("preprocessed", False)}
-    field_lists = [kie.extract_kv_fields(
-        [tl["text"] for tl in page_text_lines[p]],
-        confidence=0.85, page_num=p, source="ocr_fallback")
-        for p in sorted(page_text_lines)]
-    all_lines = [tl for p in sorted(page_text_lines)
-                 for tl in page_text_lines[p]]
-    ex_title = next(
-        (tl["text"] for tl in all_lines
-         if tl["font_size"] and tl["font_size"] > 14
-         and tl["bbox"][1] < page_dims[1] * 0.3), "")
-    ex_raw = "\n".join(tl["text"] for tl in all_lines)
-    first_meta = next((m for m in page_meta.values()), {})
-    return _assemble(url, payload, warc_ts, lang, now, cfg, file_type,
-                     page_dims, len(ocr_pages), page_text_lines,
-                     page_regions, tables_rows, field_lists, ex_title,
-                     ex_raw, first_meta.get("readability", "good"),
-                     first_meta.get("readability_issues", []),
-                     table_source="ocr_table", page_meta=page_meta)
+    # a corrupt page takes the FIRST SURVIVING page's dims and readability
+    # (round-4 ADVICE: a corrupt page 1 must not pin the default letter
+    # dims onto a real scan's title cutoff); letter dims when every page
+    # failed. Surviving pages carry their own P8 content type and P9
+    # readability (the reference assesses every page, orchestrator.py:
+    # 651-675) and their own dims (a scan's pages can differ in size).
+    first = next((ocr for ocr in ocr_pages if ocr is not None), None)
+    width, height = first["dims"] if first else (pdf_text.PAGE_W,
+                                                 pdf_text.PAGE_H)
+    blank = ({"readability": first["readability"],
+              "readability_issues": first["readability_issues"]}
+             if first else {})
+    pages = [
+        _page(p, [], [], width, height, file_type,
+              dpi=PDF_DPI if file_type == "pdf" else None, **blank)
+        if ocr is None else
+        # raster pages carry the reference's PageMetadata dpi default
+        # (types.py:247) — embedded images keep their stored resolution,
+        # nothing re-rasterizes
+        _page(p, ocr["text_lines"], ocr["regions"], *ocr["dims"],
+              ocr["content_type"], dpi=350, tables=ocr["tables"],
+              readability=ocr["readability"],
+              readability_issues=ocr["readability_issues"],
+              rotation=ocr["rotation"], preprocessed=ocr["preprocessed"])
+        for p, ocr in enumerate(ocr_pages, 1)]
+    all_lines = [tl for pg in pages for tl in pg["text_lines"]]
+    title = next((tl["text"] for tl in all_lines
+                  if tl["font_size"] and tl["font_size"] > 14
+                  and tl["bbox"][1] < height * 0.3), "")
+    return _assemble(url, payload, warc_ts, lang, now, cfg, file_type, pages,
+                     _page_fields(pages, 0.85, "ocr_fallback"), title,
+                     "\n".join(tl["text"] for tl in all_lines),
+                     table_source="ocr_table")
 
 
-def _assemble(url, payload, warc_ts, lang, now, cfg, file_type, page_dims,
-              n_pages, page_text_lines, page_regions, tables_rows,
-              field_lists, ex_title, ex_raw, readability,
-              readability_issues, table_source: str = "html_table",
-              page_meta: Optional[dict] = None) -> dict:
+def _assemble(url, payload, warc_ts, lang, now, cfg, file_type,
+              pages: list[dict], field_lists: list[list[dict]], title: str,
+              raw_text: str, table_source: str = "html_table") -> dict:
+    tables = [t for pg in pages for t in pg["tables"]]
     # table-derived fields from 2-column tables (label/value shape).
     # `table_source` carries provenance: tables parsed from HTML markup are
     # "html_table" (weight 0.9); tables detected on the raster/OCR path are
@@ -714,7 +732,7 @@ def _assemble(url, payload, warc_ts, lang, now, cfg, file_type, page_dims,
     # glyph recognition as ocr_fallback lines and must not outweigh it
     # (round-3 ADVICE).
     table_fields: list[dict] = []
-    for t in tables_rows:
+    for t in tables:
         rows = t.get("rows", [])
         if rows and all(len(r) == 2 for r in rows):
             data = {}
@@ -733,9 +751,8 @@ def _assemble(url, payload, warc_ts, lang, now, cfg, file_type, page_dims,
     # word/line/substring/cell matches; HTML lines carry no geometry, so
     # anchoring is effective on the PDF path and a no-op (no false anchors)
     # on HTML — the reference's rule 5.
-    all_text_lines = [tl for p in sorted(page_text_lines)
-                      for tl in page_text_lines[p]]
-    fields = anchor_mod.anchor_fields(fields, all_text_lines, tables_rows)
+    fields = anchor_mod.anchor_fields(
+        fields, [tl for pg in pages for tl in pg["text_lines"]], tables)
 
     fields = _apply_validator_status(fields, now,
                                      cfg["thresholds"]["low_confidence"])
@@ -745,57 +762,18 @@ def _assemble(url, payload, warc_ts, lang, now, cfg, file_type, page_dims,
         [{"name": f["name"], "value": f["value"]} for f in fields])
     validation = _validation_summary(field_checks + consistency)
 
-    pages = []
-    for p in range(1, n_pages + 1):
-        tls = page_text_lines.get(p, [])
-        # per-page metadata overrides (raster path: P8 content type +
-        # per-page P9 readability — the reference assesses every page,
-        # orchestrator.py:651-675); native/HTML pages keep the doc-wide
-        # values with content_type = file_type.
-        pm = (page_meta or {}).get(p, {})
-        pages.append({
-            "number": p,
-            "metadata": {"width": pm.get("width", page_dims[0]),
-                         "height": pm.get("height", page_dims[1]),
-                         # PageMetadata.dpi (types.py:247): raster pages get
-                         # 350 via page_meta; the native-PDF text layer is
-                         # point-space (72/inch); HTML/pictures have no
-                         # defined rendering DPI
-                         "dpi": pm.get("dpi",
-                                       72 if file_type == "pdf" else None),
-                         "content_type": pm.get("content_type", file_type),
-                         # O10 upright rotation (90-degree CCW steps) the
-                         # raster path applied before recognition; 0 on
-                         # native/HTML pages. `preprocessed` marks pages
-                         # whose geometry lives in the P-stage frame. The
-                         # S7 artifacts renderer uses both to re-derive the
-                         # geometry frame from stored pixels without
-                         # re-running OSD.
-                         "rotation": pm.get("rotation", 0),
-                         "preprocessed": pm.get("preprocessed", False),
-                         "readability": pm.get("readability", readability),
-                         "readability_issues": pm.get("readability_issues",
-                                                      readability_issues)},
-            "layout_regions": page_regions.get(p, []),
-            "text_lines": tls,
-            # each page carries ITS tables (the reference's Page.tables,
-            # types.py:253-264); the doc-level array keeps them all
-            "tables": [t for t in tables_rows if t.get("page", 1) == p],
-            "raw_text": reading_order.assemble_raw_text(tls),
-        })
-
     return {
         "id": doc_id_for_url(url),
         "status": "ok",
         "error": "",
         "metadata": _metadata(url, payload, file_type, warc_ts, lang),
-        "title": ex_title,
-        "page_count": n_pages,
+        "title": title,
+        "page_count": len(pages),
         "pages": pages,
-        "tables": tables_rows,
+        "tables": tables,
         "fields": fields,
         "validation": validation,
-        "raw_text": ex_raw,
+        "raw_text": raw_text,
         "reconstruction": build_reconstruction(pages, fields),
-        "normalized": build_normalized(fields, tables_rows),
+        "normalized": build_normalized(fields, tables),
     }

@@ -106,19 +106,6 @@ def exif_orientation(data: bytes) -> int:
     return 1
 
 
-def inject_exif_orientation(jpeg_data: bytes, orientation: int) -> bytes:
-    """Insert an APP1 Exif segment carrying just the orientation tag right
-    after SOI — the test/writer twin of exif_orientation."""
-    tiff = (b"II*\x00" + struct.pack("<I", 8)           # header, IFD at 8
-            + struct.pack("<H", 1)                      # one entry
-            + struct.pack("<HHIHH", _EXIF_ORIENTATION_TAG, 3, 1,
-                          orientation, 0)
-            + struct.pack("<I", 0))                     # no next IFD
-    payload = b"Exif\x00\x00" + tiff
-    app1 = b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
-    return jpeg_data[:2] + app1 + jpeg_data[2:]
-
-
 def decode_image(data: bytes) -> np.ndarray:
     """Decode image bytes to an HxWx3 BGR uint8 array (io/image.py:49-79).
 

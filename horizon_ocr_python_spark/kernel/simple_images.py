@@ -9,7 +9,8 @@ TIFF compression=1) so only WebP remains a declared stub:
 - TIFF: both byte orders (II/MM), baseline tags, compression=1 (none),
   photometric 1 (gray) / 2 (RGB), 8 bits/sample, any strip layout.
 
-Both have matching encoders so decode is tested against known pixels.
+The matching encoders live with the tests (tests/image_encoders.py), which
+check decode against known pixels.
 """
 
 from __future__ import annotations
@@ -20,25 +21,6 @@ import numpy as np
 
 
 # --- BMP -----------------------------------------------------------------------
-
-
-def encode_bmp(img: np.ndarray) -> bytes:
-    """24-bit uncompressed bottom-up BMP from HxW or HxWx3 (RGB) uint8."""
-    if img.ndim == 2:
-        img = np.stack([img] * 3, axis=-1)
-    h, w = img.shape[:2]
-    row_len = (w * 3 + 3) & ~3
-    bgr = img[..., ::-1]  # BMP stores BGR
-    body = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = bgr[y].tobytes()
-        body += row + b"\x00" * (row_len - len(row))
-    pixel_offset = 14 + 40
-    size = pixel_offset + len(body)
-    header = (b"BM" + struct.pack("<IHHI", size, 0, 0, pixel_offset)
-              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body),
-                            2835, 2835, 0, 0))
-    return bytes(header + body)
 
 
 def decode_bmp(data: bytes) -> np.ndarray:
@@ -82,48 +64,8 @@ def decode_bmp(data: bytes) -> np.ndarray:
 
 _TAG_WIDTH, _TAG_HEIGHT, _TAG_BITS = 256, 257, 258
 _TAG_COMPRESSION, _TAG_PHOTOMETRIC = 259, 262
-_TAG_STRIP_OFFSETS, _TAG_SAMPLES, _TAG_ROWS_PER_STRIP = 273, 277, 278
+_TAG_STRIP_OFFSETS, _TAG_SAMPLES = 273, 277
 _TAG_STRIP_COUNTS = 279
-
-
-def encode_tiff(img: np.ndarray, big_endian: bool = False) -> bytes:
-    """Baseline uncompressed TIFF (single strip) from HxW gray or HxWx3 RGB."""
-    e = ">" if big_endian else "<"
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    spp = 1 if gray else 3
-    pixels = img.tobytes()
-    # layout: header(8) + pixel data + IFD
-    data_off = 8
-    ifd_off = data_off + len(pixels)
-    entries = [
-        (_TAG_WIDTH, 3, 1, w),
-        (_TAG_HEIGHT, 3, 1, h),
-        (_TAG_BITS, 3, 1, 8) if gray else (_TAG_BITS, 3, 3, None),
-        (_TAG_COMPRESSION, 3, 1, 1),
-        (_TAG_PHOTOMETRIC, 3, 1, 1 if gray else 2),
-        (_TAG_STRIP_OFFSETS, 4, 1, data_off),
-        (_TAG_SAMPLES, 3, 1, spp),
-        (_TAG_ROWS_PER_STRIP, 3, 1, h),
-        (_TAG_STRIP_COUNTS, 4, 1, len(pixels)),
-    ]
-    # BITS for RGB needs an external array of three SHORTs
-    extra = b""
-    extra_off = ifd_off + 2 + 12 * len(entries) + 4
-    ifd = struct.pack(e + "H", len(entries))
-    for tag, typ, count, val in entries:
-        if val is None:  # bits-per-sample triplet lives out-of-line
-            ifd += struct.pack(e + "HHII", tag, typ, 3, extra_off + len(extra))
-            extra += struct.pack(e + "HHH", 8, 8, 8)
-        elif typ == 3:
-            # SHORT value inline in the 4-byte slot (left-justified)
-            ifd += struct.pack(e + "HHIHH", tag, typ, count, val, 0)
-        else:
-            ifd += struct.pack(e + "HHII", tag, typ, count, val)
-    ifd += struct.pack(e + "I", 0)  # next IFD
-    magic = b"MM" if big_endian else b"II"
-    header = magic + struct.pack(e + "HI", 42, ifd_off)
-    return header + pixels + ifd + extra
 
 
 def read_ifd(data: bytes, base: int = 0):

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 
 from horizon_ocr_python_spark.kernel import jpeg, multimodal
+from image_encoders import inject_exif_orientation
 
 
 def _gradient(h, w):
@@ -135,7 +136,7 @@ class TestExifOrientation:
         enc = jpeg.encode_jpeg(img, 95)
         base = multimodal.decode_image(enc)
         for o in range(1, 9):
-            tagged = multimodal.inject_exif_orientation(enc, o)
+            tagged = inject_exif_orientation(enc, o)
             assert multimodal.exif_orientation(tagged) == o
             got = multimodal.decode_image(tagged)
             want = multimodal.apply_exif_orientation(base, o)
@@ -149,7 +150,7 @@ class TestExifOrientation:
         assert (multimodal.apply_exif_orientation(a, 8) == img).all()
 
     def test_header_dims_unchanged_but_decode_rotated(self):
-        enc = multimodal.inject_exif_orientation(
+        enc = inject_exif_orientation(
             jpeg.encode_jpeg(_gradient(32, 16), 92), 6)
         meta = multimodal.parse_image_meta(enc)
         assert (meta["width"], meta["height"]) == (16, 32)  # stored dims
@@ -158,7 +159,7 @@ class TestExifOrientation:
     def test_pipeline_rotated_jpeg_row(self):
         from horizon_ocr_python_spark.kernel.document import extract_document
 
-        enc = multimodal.inject_exif_orientation(
+        enc = inject_exif_orientation(
             jpeg.encode_jpeg(_gradient(64, 32), 92), 6)
         doc = extract_document("https://x/rot.jpg", enc)
         assert doc["status"] == "ok"

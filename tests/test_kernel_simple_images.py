@@ -8,6 +8,7 @@ import pytest
 
 from horizon_ocr_python_spark.kernel import multimodal, pdf_text
 from horizon_ocr_python_spark.kernel import simple_images as si
+from image_encoders import encode_bmp, encode_tiff
 
 
 def _rgb(h=37, w=53):
@@ -19,11 +20,11 @@ def _rgb(h=37, w=53):
 class TestBmp:
     def test_roundtrip_24bit(self):
         img = _rgb()
-        assert (si.decode_bmp(si.encode_bmp(img)) == img).all()
+        assert (si.decode_bmp(encode_bmp(img)) == img).all()
 
     def test_gray_input_promoted(self):
         gray = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        out = si.decode_bmp(si.encode_bmp(gray))
+        out = si.decode_bmp(encode_bmp(gray))
         assert (out[..., 0] == gray).all() and (out[..., 2] == gray).all()
 
     def test_8bit_palette(self):
@@ -41,7 +42,7 @@ class TestBmp:
         assert img[0, 0].tolist() == [255, 255, 255]
 
     def test_compressed_rejected(self):
-        data = bytearray(si.encode_bmp(_rgb(4, 4)))
+        data = bytearray(encode_bmp(_rgb(4, 4)))
         struct.pack_into("<I", data, 30, 1)  # biCompression = RLE8
         with pytest.raises(NotImplementedError):
             si.decode_bmp(bytes(data))
@@ -51,16 +52,16 @@ class TestTiff:
     @pytest.mark.parametrize("be", [False, True])
     def test_roundtrip_rgb(self, be):
         img = _rgb()
-        assert (si.decode_tiff(si.encode_tiff(img, big_endian=be)) == img).all()
+        assert (si.decode_tiff(encode_tiff(img, big_endian=be)) == img).all()
 
     @pytest.mark.parametrize("be", [False, True])
     def test_roundtrip_gray(self, be):
         gray = ((np.arange(60).reshape(6, 10) * 4) % 256).astype(np.uint8)
-        out = si.decode_tiff(si.encode_tiff(gray, big_endian=be))
+        out = si.decode_tiff(encode_tiff(gray, big_endian=be))
         assert (out[..., 1] == gray).all()
 
     def test_compressed_rejected(self):
-        data = bytearray(si.encode_tiff(_rgb(4, 4)))
+        data = bytearray(encode_tiff(_rgb(4, 4)))
         # flip the compression tag value (tag 259, inline SHORT)
         i = data.find(struct.pack("<HH", 259, 3))
         data[i + 8] = 5  # LZW
@@ -71,7 +72,7 @@ class TestTiff:
 class TestWiring:
     def test_meta_and_decode_routing(self):
         img = _rgb(17, 23)
-        for enc, fmt in [(si.encode_bmp, "bmp"), (si.encode_tiff, "tiff")]:
+        for enc, fmt in [(encode_bmp, "bmp"), (encode_tiff, "tiff")]:
             data = enc(img)
             meta = multimodal.parse_image_meta(data)
             assert (meta["format"], meta["width"], meta["height"]) == (fmt, 23, 17)
@@ -79,16 +80,16 @@ class TestWiring:
             assert (bgr[..., ::-1] == img).all()
 
     def test_sniff_type(self):
-        assert pdf_text.sniff_type(si.encode_bmp(_rgb(8, 8))) == "image"
-        assert pdf_text.sniff_type(si.encode_tiff(_rgb(8, 8))) == "image"
-        assert pdf_text.sniff_type(si.encode_tiff(_rgb(8, 8), True)) == "image"
+        assert pdf_text.sniff_type(encode_bmp(_rgb(8, 8))) == "image"
+        assert pdf_text.sniff_type(encode_tiff(_rgb(8, 8))) == "image"
+        assert pdf_text.sniff_type(encode_tiff(_rgb(8, 8), True)) == "image"
         # plain text starting with "BM" stays html
         assert pdf_text.sniff_type(b"BMW cars are " + b"x" * 100) == "html"
 
     def test_document_pipeline_tiff_row(self):
         from horizon_ocr_python_spark.kernel.document import extract_document
 
-        doc = extract_document("https://x/scan.tiff", si.encode_tiff(_rgb(30, 40)))
+        doc = extract_document("https://x/scan.tiff", encode_tiff(_rgb(30, 40)))
         assert doc["status"] == "ok"
         assert doc["metadata"]["file_type"] == "image"
         page = doc["pages"][0]
@@ -106,7 +107,7 @@ class TestAdviceR3:
 
     def test_photometric_whiteiszero_inverts(self):
         gray = (np.arange(64, dtype=np.uint8) * 4).reshape(8, 8)
-        data = bytearray(si.encode_tiff(gray))
+        data = bytearray(encode_tiff(gray))
         # flip the PHOTOMETRIC tag value from 1 (BlackIsZero) to 0
         ifd_off = struct.unpack("<I", data[4:8])[0]
         n = struct.unpack("<H", data[ifd_off:ifd_off + 2])[0]
@@ -119,7 +120,7 @@ class TestAdviceR3:
         assert (out[:, :, 0] == 255 - gray).all()
 
     def test_photometric_palette_rejected(self):
-        data = bytearray(si.encode_tiff(_rgb(4, 4)))
+        data = bytearray(encode_tiff(_rgb(4, 4)))
         ifd_off = struct.unpack("<I", data[4:8])[0]
         n = struct.unpack("<H", data[ifd_off:ifd_off + 2])[0]
         for i in range(n):
@@ -132,7 +133,7 @@ class TestAdviceR3:
 
     @pytest.mark.parametrize("be", [False, True])
     def test_tiff_dims_header_only(self, be):
-        data = si.encode_tiff(_rgb(37, 53), big_endian=be)
+        data = encode_tiff(_rgb(37, 53), big_endian=be)
         assert si.tiff_dims(data) == (53, 37)
         # metadata path must not decode pixels: truncating the strip data
         # (but keeping the IFD, which sits AFTER pixels here -> rebuild)

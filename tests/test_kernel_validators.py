@@ -78,6 +78,36 @@ class TestDate:
         assert fmt == "%Y-%m-%d %H:%M:%S"
 
 
+class TestDocumentDateClock:
+    """extract_document runs the 50-year rule against the row's warc_ts
+    when no `now` is given, so a row's output does not depend on the day
+    it is extracted."""
+
+    HTML = b"<html><body><p>Date: 1976-06-01</p></body></html>"
+    WARC_TS = datetime(2026, 3, 1)  # 49.8 years after the date
+
+    def _status(self, warc_ts, **kw):
+        from horizon_ocr_python_spark.kernel.document import extract_document
+
+        doc = extract_document("https://x/d.html", self.HTML, warc_ts,
+                               "en", **kw)
+        assert doc["status"] == "ok", doc.get("error")
+        return {f["name"]: f["status"] for f in doc["fields"]}["date"]
+
+    def test_default_clock_is_warc_ts(self):
+        assert self._status(self.WARC_TS) == "validated"
+        assert self._status(self.WARC_TS, now=self.WARC_TS) == "validated"
+        # a later clock puts the date past 50 years
+        assert (self._status(self.WARC_TS, now=datetime(2026, 10, 20))
+                == "validation_failed")
+
+    def test_tz_aware_warc_ts_is_utc(self):
+        from datetime import timedelta, timezone
+
+        aware = datetime(2026, 3, 1, 5, tzinfo=timezone(timedelta(hours=5)))
+        assert self._status(aware) == "validated"
+
+
 class TestCurrency:
     @pytest.mark.parametrize("code", ["USD", "EUR", "GBP", "JPY", "CAD", "AUD", "CHF"])
     def test_valid(self, code):

@@ -55,11 +55,6 @@ KEPT = {
     "kernel/fuse:boxes_overlap": "K8",
     "kernel/style_merge:match_span": "R6",
     "kernel/style_merge:merge_pdf_styles_with_ocr": "R6",
-    "kernel/simple_images:encode_tiff": "S3",
-    "kernel/simple_images:encode_bmp": "S3",
-    "kernel/multimodal:inject_exif_orientation": "S3",
-    "functions/columns:parse_amount_expr": "V1",
-    "functions/columns:normalize_date_expr": "V3",
     "sources/pages:pages_spark_rows": "perfbench generator source",
     "kernel/pdf_text:build_pdf": "perfbench generator source",
 }

@@ -11,7 +11,6 @@ passed. These pin the properties that matter at 100 TB:
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 import plan_helpers
@@ -84,34 +83,6 @@ class TestShuffles:
 
 
 class TestFunctions:
-    def test_parse_amount_expr_matches_kernel(self, spark):
-        from horizon_ocr_python_spark.functions.columns import parse_amount_expr
-        from horizon_ocr_python_spark.kernel.validators import parse_amount
-
-        cases = ["$1,234.56", "1.234,56", "123,45", "1,234", "495", "abc",
-                 "€1.000,50", "-12.5", "  $10  "]
-        df = spark.createDataFrame([(c,) for c in cases], ["s"])
-        got = {r.s: r.parsed for r in
-               df.select("s", parse_amount_expr(F.col("s")).alias("parsed")).collect()}
-        for c in cases:
-            expected = parse_amount(c)
-            if expected is None:
-                assert got[c] is None, c
-            else:
-                assert got[c] == pytest.approx(expected), c
-
-    def test_normalize_date_expr_matches_kernel(self, spark):
-        from horizon_ocr_python_spark.functions.columns import normalize_date_expr
-        from horizon_ocr_python_spark.kernel.validators import normalize_date
-
-        cases = ["2024-01-15", "15/01/2024", "January 15, 2024", "Jan 15, 2024",
-                 "2024/01/15", "2024-01-15 10:30:00", "garbage"]
-        df = spark.createDataFrame([(c,) for c in cases], ["s"])
-        got = {r.s: r.iso for r in
-               df.select("s", normalize_date_expr(F.col("s")).alias("iso")).collect()}
-        for c in cases:
-            assert got[c] == normalize_date(c), c
-
     def test_currency_and_shape_exprs(self, spark):
         from horizon_ocr_python_spark.functions.columns import (
             currency_valid_expr)

@@ -315,6 +315,52 @@ class TestContentTypeRouting:
         doc = document.extract_document("https://x/n.pdf", pdf)
         assert doc["pages"][0]["metadata"]["content_type"] == "pdf"
 
+    @staticmethod
+    def _lzw_tiff():
+        import struct
+
+        from image_encoders import encode_tiff
+
+        data = bytearray(encode_tiff(np.zeros((30, 40, 3), np.uint8)))
+        i = data.find(struct.pack("<HH", 259, 3))  # compression tag
+        data[i + 8] = 5  # LZW: decode_image raises NotImplementedError
+        return bytes(data)
+
+    @pytest.mark.parametrize("kind", ["native_pdf", "html", "picture",
+                                      "undecodable_image"])
+    def test_unrasterized_page_metadata(self, kind):
+        """Full PageMetadata of the pages the raster path does not build:
+        file type as content type, no rotation or preprocess, the doc's
+        readability."""
+        from horizon_ocr_python_spark.sources import _png_doc_image
+
+        plain = {"dpi": None, "rotation": 0, "preprocessed": False,
+                 "readability": "good", "readability_issues": []}
+        url, payload, meta = {
+            "native_pdf": ("https://x/n.pdf", pdf_text.build_pdf_pages(
+                [[(72.0, 72.0, "native " * 20, 12.0)]]),
+                {**plain, "width": pdf_text.PAGE_W,
+                 "height": pdf_text.PAGE_H, "dpi": 72,
+                 "content_type": "pdf"}),
+            "html": ("https://x/p.html",
+                     b"<html><body><p>Some paragraph of body text.</p>"
+                     b"</body></html>",
+                     {**plain, "width": 0, "height": 0,
+                      "content_type": "html"}),
+            # kept as a picture: readability comes from the P9 assessment
+            "picture": ("https://x/pic.png", _png_doc_image.encode(
+                _png_doc_image.render(seed=7)),
+                {**plain, "width": 160, "height": 120,
+                 "content_type": "image", "readability": "fair",
+                 "readability_issues": ["high_noise", "low_resolution"]}),
+            "undecodable_image": ("https://x/lzw.tiff", self._lzw_tiff(),
+                                  {**plain, "width": 0, "height": 0,
+                                   "content_type": "image"}),
+        }[kind]
+        doc = document.extract_document(url, payload)
+        assert doc["status"] == "ok" and doc["page_count"] == 1
+        assert doc["pages"][0]["metadata"] == meta
+
     def test_dual_decoder_soft_primary_holds_ties(self):
         # both decoders read a clean line with confidence 1.0; the strict->
         # rule keeps whichever model is PRIMARY, so routing decides ties
