@@ -12,9 +12,8 @@ engine/     pyspark.sql assembly: the fused Arrow extraction stage (one
             mapInArrow row map, `schema.map_rows`), salted repartitioning,
             checkpoint/resume, lineage+metrics.
 operators/  Dataset-level relational operators (dedup, similarity search,
-            sessionization, top-k, fusion-as-SQL) — each DuckDB-oracle checkable.
-functions/  Column-level expression builders (amount/date/currency validators)
-            built on pyspark.sql.functions only.
+            sessionization, top-k, fusion-as-SQL, validators as Column
+            expressions) — each DuckDB-oracle checkable.
 sources/    Deterministic synthetic `pages` generator + readers (parquet, and
             the pages table shape from BASELINE.json input_hint).
 streaming/  Structured Streaming ingestion of the same pages table.

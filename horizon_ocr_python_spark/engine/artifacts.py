@@ -47,8 +47,8 @@ def _make_artifacts_fn(config: Optional[dict], show_text: bool):
 
         try:
             return kernel_artifacts.document_artifacts(
-                row["url"], row["html"], lang=row["lang"], config=config,
-                show_text=show_text)
+                row["url"], row["html"], warc_ts=row["warc_ts"],
+                lang=row["lang"], config=config, show_text=show_text)
         except Exception as exc:  # noqa: BLE001 — per-row containment
             return [{"doc_id": "", "url": row["url"], "page": 0,
                      "kind": "error", "mime": "text/plain",
@@ -65,10 +65,11 @@ def artifacts_stage(pages: DataFrame, every_n: int = 100,
     PushedFilters is irrelevant here — it is an expression filter, but it
     runs JVM-side before the Arrow exchange, so (every_n - 1)/every_n of
     payload bytes never reach Python). Column pruning matches the extract
-    stage: only (url, html, lang) ship."""
+    stage: only (url, warc_ts, html, lang) ship; `warc_ts` is the
+    document's date-rule clock and its processed_at, as in extraction."""
     sampled = pages.where(
         F.pmod(F.abs(F.xxhash64(F.col("url"))), F.lit(every_n)) == 0)
-    return map_rows(sampled.select("url", "html", "lang"),
+    return map_rows(sampled.select("url", "warc_ts", "html", "lang"),
                     _make_artifacts_fn(config, show_text), ARTIFACT_SCHEMA)
 
 

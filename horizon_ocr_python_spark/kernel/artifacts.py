@@ -27,7 +27,7 @@ table (engine.artifacts) — never one file per page on the driver.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Any, Optional
 
 import numpy as np
 
@@ -413,8 +413,8 @@ def _page_pixels(doc: dict, payload: bytes) -> dict[int, np.ndarray]:
     return out
 
 
-def document_artifacts(url: str, payload: bytes, lang: str = "",
-                       config: Optional[dict] = None,
+def document_artifacts(url: str, payload: bytes, warc_ts: Any = None,
+                       lang: str = "", config: Optional[dict] = None,
                        kinds: tuple = OVERLAY_KINDS,
                        show_text: bool = True) -> list[dict]:
     """All artifacts for one document as rows
@@ -423,14 +423,15 @@ def document_artifacts(url: str, payload: bytes, lang: str = "",
     (io/artifacts.py:126-143 layout; engine.artifacts.export_artifacts_local
     reproduces the tree on a filesystem for debugging).
 
-    Extraction runs ONCE (document.extract_document); overlays are drawn
-    from the assembled page model on pixels re-decoded from the stored
-    payload, aligned via the recorded O10 rotation."""
+    Extraction runs ONCE (document.extract_document, with the row's
+    `warc_ts` as in the extract stage); overlays are drawn from the
+    assembled page model on pixels re-decoded from the stored payload,
+    aligned via the recorded O10 rotation."""
     from . import document as document_mod
 
     if isinstance(payload, str):
         payload = payload.encode("utf-8")
-    doc = document_mod.extract_document(url, payload, lang=lang,
+    doc = document_mod.extract_document(url, payload, warc_ts, lang=lang,
                                         config=config)
     rows: list[dict] = []
     kinds_by_page: dict[int, list[str]] = {}

@@ -6,7 +6,8 @@ markdown.py:69-75, pipe-escaping markdown.py:368+), but the generation
 timestamp is injectable (the reference stamps datetime.now at
 markdown.py:394 — a non-determinism source we neutralize per SURVEY §7.5).
 
-Runs as a pure string pandas UDF over the Document struct in the engine.
+Runs per row inside the engine's Arrow row map (operators/arrow_ops.
+s6_markdown_render) over a Document-shaped dict.
 """
 
 from __future__ import annotations

@@ -3,8 +3,8 @@ validator classes (docvision/kie/validators.py).
 
 Unlike the reference (class-per-validator, ValidatorResult Pydantic objects,
 docvision/kie/validators.py:21-41), these are plain functions returning plain
-dicts so they can run inside Arrow-batched pandas UDFs and be mirrored by SQL
-expressions (see horizon_ocr_python_spark.functions) that Catalyst can codegen.
+dicts so they can run inside Arrow row maps and be mirrored by SQL
+expressions (see operators/validators_sql) that Catalyst can codegen.
 
 Semantics pinned to the reference:
 - amount parsing / separator disambiguation  -> validators.py:96-130

@@ -1,24 +1,29 @@
-"""Arrow-batched (pandas UDF / mapInPandas) operators with exact oracles.
+"""Arrow-batched operators with exact oracles.
 
 These prove the Python-side path end-to-end: the kernel functions running
 inside Arrow batches produce values an independent SQL engine reproduces.
+Every Python stage here is a per-row function handed to the engine's one
+Arrow row map, `engine.schema.map_rows` (mapInArrow; no pandas).
 The trick for oracle-checkability: inputs are CONSTRUCTED deterministically
 from table columns, so DuckDB can recompute the expected output without
 running any Python.
 
-- k1_parse_tagged:  kernel.kie.parse_kie_output in a pandas UDF over
+- k1_parse_tagged:  kernel.kie.parse_kie_output, once per row, over
                     synthesized `<s_...>` strings (K1, donut_runner.py:179-236);
                     oracle = regexp extraction of the same tags
-- token_count_arrow: Python whitespace tokenizer in a pandas UDF; oracle =
+- token_count_arrow: Python whitespace tokenizer per row; oracle =
                     the same whitespace-token SQL as the expression version
                     (proves Python and Catalyst agree)
 - multimodal_meta:  binary image columns built in-stage (real PNG headers,
                     dimensions derived from doc_id), parsed back by
-                    kernel.multimodal.parse_image_meta via mapInPandas;
+                    kernel.multimodal.parse_image_meta per row;
                     oracle = recompute the dimension formula in SQL
 - k9_anchor_join:   spatial-anchoring relational form (orchestrator.py:
                     1180-1302 strategy 1: exact word match) — field values
                     joined to exploded document words
+- s6_markdown_render: kernel.markdown.generate_markdown per row (rows-only)
+- o7_reocr_pass:    kernel.reocr.process_lines over each user's collected
+                    lines (one row per group in, one row per line out)
 """
 
 from __future__ import annotations
@@ -26,27 +31,30 @@ from __future__ import annotations
 import re
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
+from ..engine.schema import map_rows
 from ..kernel.kie import parse_kie_output
 from ..kernel.multimodal import parse_image_meta
 from . import table
 
-# --- K1: tag parse via pandas UDF ------------------------------------------------
+# --- K1: tag parse, one kernel parse per row ----------------------------------------
+
+_K1_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("parsed_total", StringType()),
+    StructField("parsed_lang", StringType()),
+])
 
 
-@F.pandas_udf(StringType())
-def _parse_total_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: str(parse_kie_output(x).get("total", "")))
-
-
-@F.pandas_udf(StringType())
-def _parse_lang_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: str(parse_kie_output(x).get("lang_tag", "")))
+def _parse_tagged(row: dict) -> list[dict]:
+    kie = parse_kie_output(row["tagged"])
+    return [{"doc_id": row["doc_id"],
+             "parsed_total": str(kie.get("total", "")),
+             "parsed_lang": str(kie.get("lang_tag", ""))}]
 
 
 def k1_parse_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,11 +64,8 @@ def k1_parse_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = F.concat(
         F.lit("<s_total>"), F.col("n_chars").cast("string"), F.lit("</s_total>"),
         F.lit("<s_lang_tag>"), F.col("lang"), F.lit("</s_lang_tag>"))
-    return (docs.select("doc_id", tagged.alias("tagged"))
-            .select("doc_id",
-                    _parse_total_udf("tagged").alias("parsed_total"),
-                    _parse_lang_udf("tagged").alias("parsed_lang"))
-            .orderBy("doc_id"))
+    return map_rows(docs.select("doc_id", tagged.alias("tagged")),
+                    _parse_tagged, _K1_SCHEMA).orderBy("doc_id")
 
 
 K1_PARSE_TAGGED_SQL = """
@@ -78,7 +83,7 @@ ORDER BY doc_id
 """
 
 
-# --- token count via pandas UDF ----------------------------------------------------
+# --- token count, the Python tokenizer per row --------------------------------------
 
 _TOKEN_RE = re.compile(r"\S+")
 
@@ -88,17 +93,20 @@ def tokenize_ws(text: str) -> list[str]:
     return _TOKEN_RE.findall(text)
 
 
-@F.pandas_udf(IntegerType())
-def _n_tokens_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: len(tokenize_ws(x or "")))
+_TOKENS_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("n_tokens", IntegerType()),
+])
 
 
 def token_count_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Python tokenizer through Arrow — must agree with the pure-SQL
     token_count oracle (same output contract as textops.token_count)."""
-    docs = table(spark, sf_dir, "documents")
-    return (docs.select("doc_id", _n_tokens_udf("text").alias("n_tokens"))
-            .orderBy("doc_id"))
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return map_rows(docs, lambda row: [{
+        "doc_id": row["doc_id"],
+        "n_tokens": len(tokenize_ws(row["text"] or ""))}],
+        _TOKENS_SCHEMA).orderBy("doc_id")
 
 
 TOKEN_COUNT_ARROW_SQL = """
@@ -132,25 +140,17 @@ def _png_bytes(width: int, height: int) -> bytes:
 
 def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque binary image columns through the engine: build deterministic
-    PNG bytes per doc (width/height derived from doc_id), ship them through
-    Arrow as a binary column, parse the real container headers back with
-    kernel.multimodal.parse_image_meta inside mapInPandas."""
+    PNG bytes per doc (width/height derived from doc_id) inside the Arrow
+    row map and parse the real container headers back with
+    kernel.multimodal.parse_image_meta."""
     docs = table(spark, sf_dir, "documents").select("doc_id")
 
-    def stage(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                png = _png_bytes(64 + d % 192, 48 + d % 144)
-                meta = parse_image_meta(png)
-                rows.append((d, meta["format"], meta["width"], meta["height"],
-                             meta["n_bytes"]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["doc_id", "format", "width",
-                                                  "height", "n_bytes"])
+    def image_meta(row: dict) -> list[dict]:
+        d = row["doc_id"]
+        meta = parse_image_meta(_png_bytes(64 + d % 192, 48 + d % 144))
+        return [{"doc_id": d, **meta}]
 
-    return docs.mapInPandas(stage, _META_SCHEMA).orderBy("doc_id")
+    return map_rows(docs, image_meta, _META_SCHEMA).orderBy("doc_id")
 
 
 MULTIMODAL_META_SQL = """
@@ -233,32 +233,31 @@ def k9_anchor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def s6_markdown_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Render a markdown report per document through a pandas UDF over a
+    """Render a markdown report per document, in the Arrow row map, from a
     Document-shaped dict (io/markdown.py:379-457 semantics). Output is
     structural (lengths/section flags) so the driver's rows-only check
     still pins cardinality and schema."""
     from ..kernel.markdown import generate_markdown
 
-    docs = table(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
 
-    @F.pandas_udf(StringType())
-    def render(doc_id: pd.Series, text: pd.Series, lang: pd.Series) -> pd.Series:
-        out = []
-        for d, t, lg in zip(doc_id, text, lang):
-            doc = {
-                "metadata": {"url": f"doc-{d}", "file_type": "text",
-                             "file_size_bytes": len(t or ""), "lang": lg},
-                "title": f"Document {d}",
-                "page_count": 1,
-                "pages": [{"number": 1, "raw_text": (t or "")[:200]}],
-                "tables": [], "fields": [],
-                "validation": {"passed": True, "total_checks": 0,
-                               "passed_checks": 0, "issues": []},
-            }
-            out.append(generate_markdown(doc, generated_at="2026-01-01 00:00:00"))
-        return pd.Series(out)
+    def render(row: dict) -> list[dict]:
+        d, t = row["doc_id"], row["text"] or ""
+        doc = {
+            "metadata": {"url": f"doc-{d}", "file_type": "text",
+                         "file_size_bytes": len(t), "lang": row["lang"]},
+            "title": f"Document {d}",
+            "page_count": 1,
+            "pages": [{"number": 1, "raw_text": t[:200]}],
+            "tables": [], "fields": [],
+            "validation": {"passed": True, "total_checks": 0,
+                           "passed_checks": 0, "issues": []},
+        }
+        return [{"doc_id": d, "md": generate_markdown(
+            doc, generated_at="2026-01-01 00:00:00")}]
 
-    md = docs.select("doc_id", render("doc_id", "text", "lang").alias("md"))
+    md = map_rows(docs, render, StructType([
+        StructField("doc_id", LongType()), StructField("md", StringType())]))
     return (md.select(
         "doc_id",
         F.length("md").alias("md_chars"),
@@ -284,7 +283,7 @@ ORDER BY value
 """
 
 
-# --- O7 full pass as a grouped-map (applyInPandas) operator -----------------------
+# --- O7 full pass: one row map over each user's collected lines -------------------
 
 
 def o7_reocr_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,21 +291,20 @@ def o7_reocr_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     ("page"), run kernel.reocr.process_lines over the group's events —
     selection (conf < 0.70, worst 5), deterministic recompute
     (conf + 0.20, text unchanged -> improvement 0.20 >= 0.05 accepted),
-    in-place apply. Grouped-map applyInPandas: each page's lines must be
-    processed together because the worst-K cap is per page.
+    in-place apply. Each page's lines must be processed together because
+    the worst-K cap is per page, so they are collected into one row per
+    user (groupBy + collect_list) and the row map yields one row per line.
 
     Oracle: the same selection + acceptance algebra in SQL (row_number
     over conf within user, cap 5, CASE acceptance).
     """
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
     from ..kernel.reocr import process_lines
 
     ev = table(spark, sf_dir, "events")
-    lines = ev.select("user_id", "event_id",
-                      F.col("event_type").alias("text"),
-                      F.round(F.col("value") / 500.0, 6).alias("confidence"))
+    groups = ev.groupBy("user_id").agg(F.collect_list(F.struct(
+        "event_id", F.col("event_type").alias("text"),
+        F.round(F.col("value") / 500.0, 6).alias("confidence")))
+        .alias("lines"))
 
     out_schema = StructType([
         StructField("user_id", LongType()),
@@ -316,11 +314,8 @@ def o7_reocr_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("source", StringType()),
     ])
 
-    def reocr_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = [{"event_id": int(e), "text": t,
-                 "confidence": float(c), "source": "ocr"}
-                for e, t, c in zip(pdf["event_id"], pdf["text"],
-                                   pdf["confidence"])]
+    def reocr_group(group: dict) -> list[dict]:
+        rows = [{**ln, "source": "ocr"} for ln in group["lines"]]
         # deterministic selection order: the kernel cap sorts by confidence
         # (stable), so pre-sort rows by (confidence, event_id) as the
         # reference's list order would be after its page-order scan
@@ -329,13 +324,10 @@ def o7_reocr_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
                       recompute=lambda ln: (ln["text"],
                                             round(ln["confidence"] + 0.20, 6)),
                       max_lines=5)
-        uid = int(pdf["user_id"].iloc[0])
-        return pd.DataFrame([{
-            "user_id": uid, "event_id": r["event_id"], "text": r["text"],
-            "confidence": round(r["confidence"], 6), "source": r["source"],
-        } for r in rows])
+        return [{**r, "user_id": group["user_id"],
+                 "confidence": round(r["confidence"], 6)} for r in rows]
 
-    return (lines.groupBy("user_id").applyInPandas(reocr_group, out_schema)
+    return (map_rows(groups, reocr_group, out_schema)
             .orderBy("user_id", "event_id"))
 
 

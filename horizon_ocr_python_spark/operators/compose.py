@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from . import table
 from .dedup import MAX_BAND_BUCKET, SIG_BANDS_CTE
-from .similarity import BANDED_CTE, _dot, _dvec, _sqnorm, banded_keys
+from .similarity import BANDED_CTE, _dot, _dvec, _normed, banded_keys
 
 COSINE_PAIR_THRESHOLD = 0.45
 # Bucket cap + sorted-neighborhood width for the embedding-LSH band pairs —
@@ -88,7 +88,7 @@ def sim_candidate_pairs(keys: DataFrame, max_bucket: int = MAX_SIM_BUCKET,
 
 def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup vector pairs with cosine >= 0.45 among banded-LSH candidate
-    pairs. Plan shape: numpy-matmul banding (one pandas-UDF pass) -> one
+    pairs. Plan shape: numpy-matmul banding (one Arrow-UDF pass) -> one
     sorted id array per band_key bucket (bucket_pairs_single_pass;
     sorted-neighborhood inside giant buckets) -> distinct (ia, ib) -> two
     equi joins to fetch vectors -> exact cosine. No non-equi join, no
@@ -98,12 +98,9 @@ def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("v"))
     # keys feed exactly one consumer now (the single-pass pair generator),
-    # so the r5 localCheckpoint materialization is dead weight; norms stay
-    # precomputed per VECTOR, not per pair (sqrt(|a|)*sqrt(|b|) is the
-    # same float op either way; caching removes 2 of 3 array traversals
-    # per candidate pair)
+    # so the r5 localCheckpoint materialization is dead weight
     cand = sim_candidate_pairs(banded_keys(emb))
-    normed = emb.select("vec_id", "v", F.sqrt(_sqnorm(F.col("v"))).alias("nrm"))
+    normed = _normed(emb)
     va = normed.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"),
                        F.col("nrm").alias("na"))
     vb = normed.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"),

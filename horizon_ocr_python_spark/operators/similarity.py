@@ -14,9 +14,10 @@ on both sides.
 from __future__ import annotations
 
 import hashlib
+from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
@@ -71,10 +72,12 @@ def banded_keys(emb: DataFrame, n_bands: int = N_BANDS,
     keeping the banding shuffle to key-sized rows).
 
     The n_bands*n_bits sign projections run as ONE numpy matmul per Arrow
-    batch inside a pandas UDF — the round-2 expression form unrolled the 48
-    dot products into a giant Catalyst HOF tree whose codegen/eval cost
-    dominated the whole operator (26s for 2k vectors at sf0.1; the matmul
-    does the same float64 math in milliseconds).
+    batch inside an Arrow UDF: the batch's flattened list values reshape
+    to a (rows, DIM) matrix, with no pandas conversion. The round-2
+    expression form unrolled the 48 dot products into a giant Catalyst
+    HOF tree whose codegen/eval cost dominated the whole operator (26s
+    for 2k vectors at sf0.1; the matmul does the same float64 math in
+    milliseconds).
     tests/test_similarity_scale.py keeps the pure-expression form and pins
     both paths identical.
 
@@ -84,11 +87,9 @@ def banded_keys(emb: DataFrame, n_bands: int = N_BANDS,
     W = _hyperplane_matrix(n_bands, n_bits)
     prefixes = [f"{b}:" for b in range(n_bands)]
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def keys_of(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        m = np.vstack(v.to_numpy())          # (batch, DIM) float64
+    @F.arrow_udf(ArrayType(StringType()))
+    def keys_of(v: pa.Array) -> pa.Array:
+        m = v.flatten().to_numpy(zero_copy_only=False).reshape(len(v), DIM)
         chars = np.where(m @ W >= 0, np.uint8(ord("1")),
                          np.uint8(ord("0")))  # (batch, n_bands*n_bits)
         out = []
@@ -96,7 +97,7 @@ def banded_keys(emb: DataFrame, n_bands: int = N_BANDS,
             s = row.tobytes().decode("ascii")
             out.append([prefixes[b] + s[b * n_bits:(b + 1) * n_bits]
                         for b in range(n_bands)])
-        return pd.Series(out)
+        return pa.array(out, type=pa.list_(pa.string()))
 
     emb = emb.repartition(emb.sparkSession.sparkContext.defaultParallelism)
     return emb.select("vec_id", F.explode(keys_of(F.col("v"))).alias("band_key"))
@@ -136,26 +137,44 @@ def _sqnorm(a):
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _normed(emb: DataFrame) -> DataFrame:
+    """(vec_id, v, nrm): each vector with its L2 norm sqrt(Σx²), computed
+    once per vector — the same double as the per-pair form, with two
+    fewer array traversals per pair."""
+    return emb.select("vec_id", "v", F.sqrt(_sqnorm(F.col("v"))).alias("nrm"))
+
+
+def _cosine_topk(normed: DataFrame,
+                 cand: Optional[DataFrame] = None) -> DataFrame:
+    """(q_id, rank, vec_id, sim): the TOP_K corpus vectors per query
+    vector (vec_id < N_QUERIES) by cosine rounded to 4 places, ties to the
+    lower vec_id. `cand` holds the (q_id, vec_id) pairs to score; None
+    scores every corpus vector against the broadcast query side."""
+    qv = normed.filter(F.col("vec_id") < N_QUERIES) \
+        .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
+                F.col("nrm").alias("qn"))
+    if cand is None:
+        pairs = normed.filter(F.col("vec_id") >= N_QUERIES) \
+            .crossJoin(F.broadcast(qv))
+    else:
+        pairs = cand.join(F.broadcast(qv), "q_id").join(normed, "vec_id")
+    sim = F.round(_dot(F.col("qv"), F.col("v"))
+                  / (F.col("qn") * F.col("nrm")), 4)
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
+    return (pairs.select("q_id", "vec_id", sim.alias("sim"))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TOP_K)
+            .select("q_id", "rank", "vec_id", "sim")
+            .orderBy("q_id", "rank"))
+
+
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For each query vector (vec_id < 5): top-3 nearest corpus vectors
     (vec_id >= 5) by cosine similarity. Broadcast the query side — the
     corpus is never shuffled."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("v"))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES) \
-        .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
-
-    sim = F.round(
-        _dot(F.col("qv"), F.col("v"))
-        / (F.sqrt(_sqnorm(F.col("qv"))) * F.sqrt(_sqnorm(F.col("v")))), 4)
-    scored = (corpus.crossJoin(F.broadcast(queries))
-              .select("q_id", "vec_id", sim.alias("sim")))
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("q_id", "rank", "vec_id", "sim")
-            .orderBy("q_id", "rank"))
+    return _cosine_topk(_normed(emb))
 
 
 COSINE_TOPK_SQL = f"""
@@ -278,8 +297,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k of true near neighbors (tests/test_similarity_recall.py::TestIvf)."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("v"))
-    normed = emb.select("vec_id", "v",
-                        F.sqrt(_sqnorm(F.col("v"))).alias("nrm"))
+    normed = _normed(emb)
     cents = (normed.filter((F.col("vec_id") >= N_QUERIES)
                            & (F.col("vec_id") < N_QUERIES + N_CENTROIDS))
              .select(F.col("vec_id").alias("cent_id"),
@@ -298,19 +316,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                             & (F.col("vec_id") < N_QUERIES))
               .select("cent_id", F.col("vec_id").alias("q_id")))
     cand = probes.join(lists, "cent_id").select("q_id", "vec_id").distinct()
-
-    qv = normed.filter(F.col("vec_id") < N_QUERIES) \
-        .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-                F.col("nrm").alias("qn"))
-    sim = F.round(_dot(F.col("qv"), F.col("v"))
-                  / (F.col("qn") * F.col("nrm")), 4)
-    scored = (cand.join(F.broadcast(qv), "q_id").join(normed, "vec_id")
-              .select("q_id", "vec_id", sim.alias("sim")))
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("q_id", "rank", "vec_id", "sim")
-            .orderBy("q_id", "rank"))
+    return _cosine_topk(normed, cand)
 
 
 IVF_ANN_TOPK_SQL = f"""
@@ -370,27 +376,13 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer than k candidates return fewer rows (no padding)."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("v"))
-    # band keys materialized once (both join sides), norms per vector not
-    # per candidate (identical float ops, 2 fewer array traversals/pair)
+    # band keys materialized once (both join sides)
     keys = banded_keys(emb).localCheckpoint()
     qk = keys.filter(F.col("vec_id") < N_QUERIES) \
         .select(F.col("vec_id").alias("q_id"), "band_key")
     ck = keys.filter(F.col("vec_id") >= N_QUERIES)
     cand = qk.join(ck, "band_key").select("q_id", "vec_id").distinct()
-
-    normed = emb.select("vec_id", "v", F.sqrt(_sqnorm(F.col("v"))).alias("nrm"))
-    qv = normed.filter(F.col("vec_id") < N_QUERIES) \
-        .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"),
-                F.col("nrm").alias("qn"))
-    sim = F.round(_dot(F.col("qv"), F.col("v"))
-                  / (F.col("qn") * F.col("nrm")), 4)
-    scored = (cand.join(F.broadcast(qv), "q_id").join(normed, "vec_id")
-              .select("q_id", "vec_id", sim.alias("sim")))
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("q_id", "rank", "vec_id", "sim")
-            .orderBy("q_id", "rank"))
+    return _cosine_topk(_normed(emb), cand)
 
 
 LSH_ANN_TOPK_SQL = f"""

@@ -14,10 +14,10 @@ r3 font bins:          threshold bucketing (io/reconstruction.py:100-118)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.columns import currency_valid_expr, normalize_currency_expr
+from ..kernel.validators import CURRENCY_SYMBOL_MAP, VALID_CURRENCIES
 from . import table
 
 
@@ -132,10 +132,25 @@ _VALID = ("USD", "EUR", "GBP", "JPY", "CAD", "AUD", "CHF", "CNY",
           "IDR", "PHP", "CZK", "ILS", "CLP", "PKR", "AED", "SAR")
 
 
+def normalize_currency_expr(col: Column) -> Column:
+    """Currency symbol -> ISO code as a CASE WHEN tree over the kernel's
+    CURRENCY_SYMBOL_MAP (validators.py:294-344)."""
+    code = F.upper(F.trim(col))
+    out = code
+    for sym, iso in CURRENCY_SYMBOL_MAP.items():
+        out = F.when(code == sym, iso).otherwise(out)
+    return out
+
+
+def currency_valid_expr(col: Column) -> Column:
+    """ISO-4217 membership of the normalized code (VALID_CURRENCIES)."""
+    return normalize_currency_expr(col).isin(*sorted(VALID_CURRENCIES))
+
+
 def v4_currency_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symbol map + ISO-4217 membership over deterministic per-customer
-    codes (validators.py:311-344), built from the shared column
-    expressions over the kernel's currency tables."""
+    codes (validators.py:311-344), built from the two column expressions
+    above over the kernel's currency tables."""
     cust = table(spark, sf_dir, "customer")
     code = F.col("c_custkey") % 8
     raw = F.lit(None).cast("string")

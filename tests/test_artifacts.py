@@ -9,6 +9,7 @@ path at scale — pinned here via the deterministic url-hash gate.
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 
 import numpy as np
@@ -248,6 +249,42 @@ class TestReviewFindings:
         files = list((tmp_path / "Local" / "_errors").iterdir())
         assert n == 2 and len(files) == 2
         assert {f.read_bytes() for f in files} == {b"boom-a", b"boom-b"}
+
+
+class TestArtifactsClock:
+    """Artifacts extract with the row's warc_ts, like the extract stage:
+    a date 49.75 years before the crawl passes the 50-year rule against
+    warc_ts, while the wall clock (2026-10 onwards) fails it."""
+
+    PAYLOAD = b"<p>Date: 1976-06-01</p><p>Total: $10.00</p>"
+    WARC_TS = datetime.datetime(2026, 3, 1)
+
+    def _validation_line(self, rows) -> str:
+        (summary,) = [bytes(r["payload"]).decode() for r in rows
+                      if r["kind"] == "summary"]
+        return next(ln.strip() for ln in summary.splitlines()
+                    if "Validation:" in ln)
+
+    def test_document_artifacts_use_warc_ts(self):
+        from horizon_ocr_python_spark.kernel import document
+
+        doc = document.extract_document("https://x/d.html", self.PAYLOAD,
+                                        self.WARC_TS)
+        assert doc["validation"]["passed"] is True  # the engine's verdict
+        rows = artifacts.document_artifacts("https://x/d.html", self.PAYLOAD,
+                                            self.WARC_TS)
+        assert self._validation_line(rows).endswith("Passed")
+
+    def test_stage_ships_warc_ts(self, spark):
+        from horizon_ocr_python_spark.engine.artifacts import artifacts_stage
+        from horizon_ocr_python_spark.engine.schema import PAGES_SCHEMA
+
+        pages = spark.createDataFrame(
+            [("https://x/d.html", self.WARC_TS, self.PAYLOAD, "", "en")],
+            PAGES_SCHEMA)
+        rows = [r.asDict() for r in
+                artifacts_stage(pages, every_n=1).collect()]
+        assert self._validation_line(rows).endswith("Passed")
 
 
 class TestModelCacheRoots:

@@ -1,8 +1,10 @@
 """Engine guardrails: oversized-payload cap, the session's local-dir
 choice and the worker daemon's import path."""
 
+import ast
 import os
 import zipfile
+from pathlib import Path
 
 import pyspark
 import pytest
@@ -128,3 +130,43 @@ class TestWorkerImportPath:
             assert not [z for z in r.zips
                         if "pyspark.zip" in z or "py4j" in z or ".jar" in z]
             assert "pyspark.zip" not in r.pyspark
+
+
+PANDAS_APIS = {"pandas_udf", "PandasUDFType", "mapInPandas", "applyInPandas",
+               "applyInPandasWithState", "toPandas"}
+
+
+def _pandas_uses(path: Path) -> set[str]:
+    """`import pandas` statements and pandas-backed Spark APIs in a file."""
+    uses = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            uses |= {f"import {a.name}" for a in node.names
+                     if a.name.split(".")[0] == "pandas"}
+        elif isinstance(node, ast.ImportFrom):
+            if (node.module or "").split(".")[0] == "pandas":
+                uses.add(f"from {node.module}")
+        elif isinstance(node, ast.Attribute) and node.attr in PANDAS_APIS:
+            uses.add(node.attr)
+        elif isinstance(node, ast.Name) and node.id in PANDAS_APIS:
+            uses.add(node.id)
+    return uses
+
+
+class TestNoPandas:
+    def test_python_stages_cross_through_arrow_only(self):
+        """Operators, engine and sources reach Python through Arrow only
+        (`schema.map_rows`, `F.arrow_udf`). The worker daemon's preimport
+        loads pandas for PySpark's own worker, and the stateful stream
+        keeps applyInPandasWithState, the arbitrary-state API that does
+        not need the RocksDB-only transformWithState."""
+        package = Path(__file__).resolve().parents[1] / \
+            "horizon_ocr_python_spark"
+        users = {str(p.relative_to(package)): u
+                 for p in sorted(package.rglob("*.py"))
+                 if (u := _pandas_uses(p))}
+        assert users == {
+            "engine/pydaemon.py": {"import pandas"},
+            "streaming/stateful.py": {"import pandas",
+                                      "applyInPandasWithState"},
+        }

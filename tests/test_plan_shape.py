@@ -84,7 +84,7 @@ class TestShuffles:
 
 class TestFunctions:
     def test_currency_and_shape_exprs(self, spark):
-        from horizon_ocr_python_spark.functions.columns import (
+        from horizon_ocr_python_spark.operators.validators_sql import (
             currency_valid_expr)
 
         df = spark.createDataFrame(
@@ -183,7 +183,7 @@ class TestRound5Plans:
 class TestArtifactsStagePlan:
     """S7 sampled artifacts: the url-hash gate must run JVM-side BELOW the
     Arrow exchange (payloads of unsampled rows never reach Python), and the
-    stage ships only (url, html, lang)."""
+    stage ships only (url, warc_ts, html, lang)."""
 
     def test_sample_filter_below_python_eval(self, spark):
         from horizon_ocr_python_spark.engine.artifacts import artifacts_stage
@@ -198,5 +198,6 @@ class TestArtifactsStagePlan:
         # (printed before) the filter feeding it
         assert py.start() < flt.start(), "hash gate runs after the Arrow eval"
         proj = re.search(r"Project \[[^\]]*\]", plan)
-        assert proj and "warc_ts" not in proj.group(0), \
+        assert proj and "warc_ts" in proj.group(0), proj
+        assert "text" not in proj.group(0), \
             "unneeded columns shipped to the artifacts stage"

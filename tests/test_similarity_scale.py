@@ -36,7 +36,7 @@ def banded_keys_expr(emb):
 
 class TestBandingParity:
     def test_udf_matches_expression_form(self, spark):
-        """The pandas-UDF matmul banding and the round-2 Catalyst HOF
+        """The Arrow-UDF matmul banding and the round-2 Catalyst HOF
         banding must produce the identical (vec_id, band_key) set — same
         hyperplanes, same sign rule, different execution strategy."""
         rng = np.random.default_rng(7)
@@ -131,7 +131,7 @@ class TestCensusBroadcast:
     def test_no_census_broadcast_hint_at_profile(self, spark):
         import plan_helpers
 
-        # checkpointed keys: the banding pandas UDF stays out of the plan,
+        # checkpointed keys: the banding Arrow UDF stays out of the plan,
         # which then holds the candidate stage alone
         keys = self._profile_keys(spark).localCheckpoint()
         cand = compose.sim_candidate_pairs(keys)

@@ -109,7 +109,8 @@ def main() -> int:
         else:
             failures.append(name)
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs) if not only else len(only)} passed")
+    n = len(only) if only else len(qs)
+    print(f"\n{n - len(failures)}/{n} passed")
     spark.stop()
     return 1 if failures else 0
 
