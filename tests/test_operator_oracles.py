@@ -8,9 +8,8 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from test_plan_shape import SF  # the sf0.001 test tables
 from tools.check_oracles import TABLES, table_hash
-
-SF = "/root/testdata/sf0.001"
 
 ORACLE_CHECKED = ["k1_parse_tagged", "token_count_arrow", "multimodal_meta",
                   "o7_reocr_pass", "lsh_ann_topk", "embedding_cosine_pairs",
